@@ -37,10 +37,38 @@ def _collapse_dots(s: Column) -> Column:
     return F.when(n > 2, joined).otherwise(s)
 
 
-def clean_price(val: Column, currency_raw: Column) -> tuple[Column, Column]:
-    """Returns (price, currency) columns. Reference loader_v2.py:16-39."""
-    s_clean = _collapse_dots(_scrub(val))
-    num = s_clean.try_cast("double")
+def price_number(val: Column) -> Column:
+    """The scrubbed price with extra dots collapsed, as a double (NULL
+    when unparseable): the number ``clean_price`` classifies."""
+    return _collapse_dots(_scrub(val)).try_cast("double")
+
+
+def scrubbed_number(val: Column) -> Column:
+    """The scrubbed value as a double (NULL when unparseable): the number
+    ``clean_area`` and ``clean_numeric_small`` classify."""
+    return _scrub(val).try_cast("double")
+
+
+def first_int(val: Column) -> Column:
+    """The first digit run as an int: the number ``clean_smallint``
+    classifies."""
+    return F.regexp_extract(val.cast("string"), r"(\d+)", 1).try_cast("int")
+
+
+# Each cleaner below references its parsed number several times across
+# CASE branches, and Catalyst does not share a subexpression that is
+# only conditionally evaluated, so the regexp scrub can run several times
+# per row. A caller that projects the number once, in its own select,
+# passes that column as ``num`` (plans.ingest.clean_and_hash does).
+
+
+def clean_price(
+    val: Column, currency_raw: Column, num: Column | None = None
+) -> tuple[Column, Column]:
+    """Returns (price, currency) columns. Reference loader_v2.py:16-39.
+    ``num``: ``price_number(val)``, already projected."""
+    if num is None:
+        num = price_number(val)
     # Python falsiness on the string inputs this operates on: None or ""
     falsy = val.isNull() | (val.cast("string") == "")
     parse_fail = num.isNull()
@@ -65,26 +93,31 @@ def clean_price(val: Column, currency_raw: Column) -> tuple[Column, Column]:
     return price, currency
 
 
-def clean_area(val: Column) -> Column:
-    """Scrubbed float, null outside (0, 9 999 999.99]. loader_v2.py:41-50."""
-    num = _scrub(val).try_cast("double")
+def clean_area(val: Column, num: Column | None = None) -> Column:
+    """Scrubbed float, null outside (0, 9 999 999.99]. loader_v2.py:41-50.
+    ``num``: ``scrubbed_number(val)``, already projected."""
+    if num is None:
+        num = scrubbed_number(val)
     falsy = val.isNull() | (val.cast("string") == "")
     return F.when(falsy | num.isNull() | (num <= 0) | (num > 9999999.99), F.lit(None).cast("double")).otherwise(num)
 
 
-def clean_smallint(val: Column, max_limit: int = 30000) -> Column:
-    """First digit-run as int, null if absent or > cap. loader_v2.py:52-60."""
-    digits = F.regexp_extract(val.cast("string"), r"(\d+)", 1)
-    num = digits.try_cast("int")
+def clean_smallint(val: Column, max_limit: int = 30000, num: Column | None = None) -> Column:
+    """First digit-run as int, null if absent or > cap. loader_v2.py:52-60.
+    ``num``: ``first_int(val)``, already projected."""
+    if num is None:
+        num = first_int(val)
     falsy = val.isNull() | (val.cast("string") == "")
     return F.when(falsy | num.isNull() | (num > max_limit), F.lit(None).cast("int")).otherwise(num)
 
 
-def clean_numeric_small(val: Column, max_limit: float = 99.9) -> Column:
-    """Scrubbed float, null above cap. loader_v2.py:62-70."""
+def clean_numeric_small(val: Column, max_limit: float = 99.9, num: Column | None = None) -> Column:
+    """Scrubbed float, null above cap. loader_v2.py:62-70.
+    ``num``: ``scrubbed_number(val)``, already projected."""
     # NB: unlike clean_price, the reference does NOT collapse extra dots here
     # (float('1.2.3') just raises → None)
-    num = _scrub(val).try_cast("double")
+    if num is None:
+        num = scrubbed_number(val)
     falsy = val.isNull() | (F.trim(val.cast("string")) == "")
     return F.when(falsy | num.isNull() | (num > max_limit), F.lit(None).cast("double")).otherwise(num)
 

@@ -42,8 +42,10 @@ import json
 import os
 import time
 from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 # process-wide monotone sequence for snapshot/partition/compaction dir
@@ -92,22 +94,67 @@ def _align_source(
     return target, src.select(*target.columns)
 
 
-def _reject_duplicate_source_keys(source: DataFrame, keys: Sequence[str]) -> None:
-    """Two source rows for one merge key would each claim the same target
-    row — the full-outer classification would silently DUPLICATE it in
-    the output. Delta's MERGE INTO raises in this situation
-    (DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW); so do we."""
-    dup = (
-        source.groupBy(*[F.col(k) for k in keys])
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > 1)
-    )
-    if dup.limit(1).count() > 0:
+@contextlib.contextmanager
+def _persisted(df: DataFrame):
+    """Persist ``df`` for the block, so the validation aggregate and the
+    write read one evaluation of it. A frame the caller already cached
+    is left as it is."""
+    if df.storageLevel != StorageLevel.NONE:
+        yield
+        return
+    df.persist()
+    try:
+        yield
+    finally:
+        df.unpersist()
+
+
+def _validate_source(
+    source: DataFrame, keys: Sequence[str], partition_col: str | None = None
+) -> list[Row]:
+    """Every pre-write check on a merge source in ONE aggregate and one
+    ``collect``: ``groupBy(keys)`` → per-key row count, then ``max`` of
+    the count and of a NULL-key flag (per partition when
+    ``partition_col`` is given).
+
+    - A NULL partition value or a NULL in any merge key is rejected: a
+      null key never matches under SQL equality, so the row would land
+      as a phantom insert (the reference's Postgres upsert rejects it at
+      the PK constraint).
+    - Two source rows for one merge key would each claim the same target
+      row, and the full-outer classification would silently DUPLICATE
+      it. Delta's MERGE INTO raises here
+      (DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW); so do we.
+
+    Returns the aggregate's rows: one row, or one per partition value.
+    Each carries ``_rows`` (source rows) and, with ``partition_col``,
+    the partition value and ``_mn_<k>``/``_mx_<k>`` bounds of every
+    other key (the stats-pruning input)."""
+    null_key = reduce(lambda a, b: a | b, [F.col(k).isNull() for k in keys])
+    per_key = source.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
+    aggs = [
+        F.sum("_n").alias("_rows"),
+        F.max("_n").alias("_max_n"),
+        F.max(null_key).alias("_null_key"),
+    ]
+    if partition_col is None:
+        rows = per_key.agg(*aggs).collect()
+    else:
+        for k in keys:
+            if k != partition_col:
+                aggs += [F.min(k).alias(f"_mn_{k}"), F.max(k).alias(f"_mx_{k}")]
+        rows = per_key.groupBy(partition_col).agg(*aggs).collect()
+        if any(r[partition_col] is None for r in rows):
+            raise ValueError(f"merge source contains NULL {partition_col!r}")
+    if any(r["_null_key"] for r in rows):
+        raise ValueError(f"merge source contains NULL in merge key(s) {list(keys)}")
+    if any((r["_max_n"] or 0) > 1 for r in rows):
         raise ValueError(
             f"merge source has multiple rows per merge key {list(keys)}; "
             "deduplicate the source first (Delta raises "
             "MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW here too)"
         )
+    return rows
 
 
 def _classify_merge(
@@ -168,6 +215,8 @@ def _classify_merge(
 
     return joined.select(*cols, action.alias("_action"))
 
+
+_ACTIONS = ("insert", "update", "unchanged", "keep", "soft_delete")
 
 _UNCHECKED = object()  # sentinel: commit without a version precondition
 
@@ -343,8 +392,6 @@ class ParquetMergeTable:
         ``repartitionByRange`` + sortWithinPartitions, or z-order
         compaction), a narrow range touches O(range) files instead of
         O(table) — the scan cost follows the predicate, not the table."""
-        from functools import reduce
-
         from pyspark.sql.types import StructType
 
         keep, _total = self.prune_files(bounds)
@@ -467,10 +514,17 @@ class ParquetMergeTable:
 
         Returns counters {inserted, updated, unchanged, soft_deleted}.
 
-        Source rows with a NULL in any merge key are rejected (a null key
-        can never match under SQL equality, so such a row would silently
-        land as a phantom insert — the reference's Postgres upsert rejects
-        them at the PK constraint).
+        Pass structure: the source is persisted once (released on exit,
+        also when the merge raises) and read twice.
+
+        1. One validation aggregate (``_validate_source``) rejects a
+           source with a NULL in any merge key or with several rows per
+           key before anything is written.
+        2. One classify-and-write pass writes the new snapshot. Its
+           action counters are observed on that write
+           (``DataFrame.observe``) and read after it, so there is no
+           cached snapshot and no separate counting job. On the table's
+           first write the counters come from the validation aggregate.
 
         ``on_extra_columns`` governs source columns the target lacks
         (schema drift): ``"error"`` (default) raises — an upstream
@@ -482,57 +536,54 @@ class ParquetMergeTable:
         """
         if on_extra_columns not in ("error", "evolve", "ignore"):
             raise ValueError(f"on_extra_columns must be error|evolve|ignore, got {on_extra_columns!r}")
-        null_key = None
-        for k in keys:
-            piece = F.col(k).isNull()
-            null_key = piece if null_key is None else (null_key | piece)
-        if source.filter(null_key).limit(1).count() > 0:
-            raise ValueError(f"merge source contains NULL in merge key(s) {list(keys)}")
-        _reject_duplicate_source_keys(source, keys)
-        base_version = self.current_version()
-        if base_version is None:
-            out = source
-            if audit_ts_col and audit_ts_col not in source.columns:
-                out = out.withColumn(audit_ts_col, F.current_timestamp())
-            # expected None: two concurrent creators conflict instead of
-            # one silently shadowing the other's snapshot
-            self._write_snapshot(out, expected_version=None)
-            n = out.count()
-            return {"inserted": n, "updated": 0, "unchanged": 0, "soft_deleted": 0}
+        with _persisted(source):
+            (check,) = _validate_source(source, keys)
+            base_version = self.current_version()
+            if base_version is None:
+                out = source
+                if audit_ts_col and audit_ts_col not in source.columns:
+                    out = out.withColumn(audit_ts_col, F.current_timestamp())
+                # expected None: two concurrent creators conflict instead of
+                # one silently shadowing the other's snapshot
+                self._write_snapshot(out, expected_version=None)
+                return {"inserted": check["_rows"] or 0, "updated": 0, "unchanged": 0, "soft_deleted": 0}
 
-        target = self.read(base_version)
-        src = source
-        if audit_ts_col and audit_ts_col not in src.columns:
-            src = src.withColumn(audit_ts_col, F.current_timestamp())
-        target, src = _align_source(target, src, audit_ts_col, on_extra_columns)
-        if soft_delete_scope_keys is not None:
-            if soft_delete_scope is not None:
-                raise ValueError(
-                    "pass soft_delete_scope OR soft_delete_scope_keys, not both"
+            target = self.read(base_version)
+            src = source
+            if audit_ts_col and audit_ts_col not in src.columns:
+                src = src.withColumn(audit_ts_col, F.current_timestamp())
+            target, src = _align_source(target, src, audit_ts_col, on_extra_columns)
+            if soft_delete_scope_keys is not None:
+                if soft_delete_scope is not None:
+                    raise ValueError(
+                        "pass soft_delete_scope OR soft_delete_scope_keys, not both"
+                    )
+                marker = (
+                    soft_delete_scope_keys.distinct().withColumn("_scope", F.lit(True))
                 )
-            marker = (
-                soft_delete_scope_keys.distinct().withColumn("_scope", F.lit(True))
-            )
-            target = target.join(
-                F.broadcast(marker), list(soft_delete_scope_keys.columns), "left"
-            )
-            soft_delete_scope = F.col("t._scope").isNotNull()
+                target = target.join(
+                    F.broadcast(marker), list(soft_delete_scope_keys.columns), "left"
+                )
+                soft_delete_scope = F.col("t._scope").isNotNull()
 
-        merged = _classify_merge(
-            target, src, keys, hash_col, update_condition,
-            soft_delete_scope, status_col, deleted_value,
-        )
-        merged.cache()
-        try:
-            counts = {r["_action"]: r["n"] for r in merged.groupBy("_action").agg(F.count(F.lit(1)).alias("n")).collect()}
-            self._write_snapshot(merged.drop("_action"), expected_version=base_version, operation="MERGE")
-        finally:
-            merged.unpersist()  # also on ConcurrentWriteError — retries must not stack cached plans
+            merged = _classify_merge(
+                target, src, keys, hash_col, update_condition,
+                soft_delete_scope, status_col, deleted_value,
+            )
+            # the action counters ride the write itself: no cached
+            # snapshot, no separate counting job
+            obs = Observation()
+            action = F.col("_action")
+            observed = merged.observe(
+                obs, *[F.count_if(action == a).alias(a) for a in _ACTIONS]
+            )
+            self._write_snapshot(observed.drop("_action"), expected_version=base_version, operation="MERGE")
+            counts = obs.get
         return {
-            "inserted": counts.get("insert", 0),
-            "updated": counts.get("update", 0),
-            "unchanged": counts.get("unchanged", 0) + counts.get("keep", 0),
-            "soft_deleted": counts.get("soft_delete", 0),
+            "inserted": counts["insert"],
+            "updated": counts["update"],
+            "unchanged": counts["unchanged"] + counts["keep"],
+            "soft_deleted": counts["soft_delete"],
         }
 
     # -- DELETE (M6/M7) -----------------------------------------------------
@@ -744,110 +795,100 @@ class PartitionedMergeTable:
         clustering that makes future merges' stats pruning tight, Delta's
         OPTIMIZE-ZORDER-at-write analog for one dimension.
 
+        Pass structure: the source is persisted once (released on exit,
+        also when the merge raises). One validation aggregate, grouped by
+        partition, rejects NULL or duplicate keys before anything is
+        written and also returns the affected partitions and their key
+        bounds. The classified frame is then cached, counted and written
+        once per affected partition.
+
         Returns the usual counters plus ``files_pruned`` /
         ``files_rewritten`` / ``rows_carried`` / ``rows_rewritten``.
         """
         pcol = self.partition_col
         if pcol not in keys:
             raise ValueError(f"partition column {pcol!r} must be part of the merge keys")
-        if source.filter(F.col(pcol).isNull()).limit(1).count() > 0:
-            raise ValueError(f"merge source contains NULL {pcol!r}")
-        null_key = None
-        for k in keys:
-            piece = F.col(k).isNull()
-            null_key = piece if null_key is None else (null_key | piece)
-        if source.filter(null_key).limit(1).count() > 0:
-            raise ValueError(f"merge source contains NULL in merge key(s) {list(keys)}")
-        _reject_duplicate_source_keys(source, keys)
+        with _persisted(source):
+            # affected partitions and their source key bounds (for stats
+            # pruning) come out of the validation aggregate: a small
+            # driver-side list by design (a batch touches one client / a
+            # few days, never the whole keyspace)
+            checked = _validate_source(source, keys, pcol)
+            affected = [r[pcol] for r in checked]
+            base = self._read_manifest()
+            read_versions = {str(v): base["parts"].get(str(v)) for v in affected}
+            nonpart_keys = [k for k in keys if k != pcol]
+            src_bounds = {
+                str(r[pcol]): {k: (r[f"_mn_{k}"], r[f"_mx_{k}"]) for k in nonpart_keys}
+                for r in checked
+            }
 
-        # affected partitions: a small driver-side list by design (a batch
-        # touches one client / a few days, never the whole keyspace)
-        affected = [r[0] for r in source.select(pcol).distinct().collect()]
-        base = self._read_manifest()
-        read_versions = {str(v): base["parts"].get(str(v)) for v in affected}
-
-        # per-partition source key bounds for stats pruning: one small agg
-        # over the delta (the cheap side), collected driver-side
-        nonpart_keys = [k for k in keys if k != pcol]
-        src_bounds: dict[str, dict[str, tuple]] = {}
-        if nonpart_keys and any(read_versions.values()):
-            aggs = []
-            for k in nonpart_keys:
-                aggs.append(F.min(k).alias(f"_mn_{k}"))
-                aggs.append(F.max(k).alias(f"_mx_{k}"))
-            for r in source.groupBy(pcol).agg(*aggs).collect():
-                src_bounds[str(r[pcol])] = {
-                    k: (r[f"_mn_{k}"], r[f"_mx_{k}"]) for k in nonpart_keys
+            target_files: list[str] = []
+            carry: dict[str, list[str]] = {}
+            carried_rows = 0
+            files_pruned = 0
+            log_stats = (
+                {
+                    rel: info.get("stats")
+                    for rel, info in self.delta_log.state()["files"].items()
                 }
+                if self.delta_log is not None
+                else {}
+            )
+            for v in affected:
+                sv = str(v)
+                live = self._live_files(base, sv) if read_versions.get(sv) else []
+                carry[sv] = []
+                bounds = src_bounds.get(sv, {})
+                for rel in live:
+                    n_skip = _prunable_rows(
+                        log_stats.get(rel) or _footer_stats(os.path.join(self.root, rel)),
+                        bounds,
+                    )
+                    if n_skip is None:
+                        target_files.append(rel)
+                    else:
+                        carry[sv].append(rel)
+                        carried_rows += n_skip
+                        files_pruned += 1
 
-        target_files: list[str] = []
-        carry: dict[str, list[str]] = {}
-        carried_rows = 0
-        files_pruned = 0
-        log_stats = (
-            {
-                rel: info.get("stats")
-                for rel, info in self.delta_log.state()["files"].items()
-            }
-            if self.delta_log is not None
-            else {}
-        )
-        for v in affected:
-            sv = str(v)
-            live = self._live_files(base, sv) if read_versions.get(sv) else []
-            carry[sv] = []
-            bounds = src_bounds.get(sv, {})
-            for rel in live:
-                n_skip = _prunable_rows(
-                    log_stats.get(rel) or _footer_stats(os.path.join(self.root, rel)),
-                    bounds,
+            if target_files:
+                target = self.spark.read.option("mergeSchema", "true").parquet(
+                    *[os.path.join(self.root, rel) for rel in target_files]
                 )
-                if n_skip is None:
-                    target_files.append(rel)
-                else:
-                    carry[sv].append(rel)
-                    carried_rows += n_skip
-                    files_pruned += 1
+            else:
+                target = None
 
-        if target_files:
-            target = self.spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(self.root, rel) for rel in target_files]
-            )
-        else:
-            target = None
-
-        src = source
-        if target is None:
+            src = source
             if audit_ts_col and audit_ts_col not in src.columns:
                 src = src.withColumn(audit_ts_col, F.current_timestamp())
-            merged = src.withColumn("_action", F.lit("insert"))
-        else:
-            if audit_ts_col and audit_ts_col not in src.columns:
-                src = src.withColumn(audit_ts_col, F.current_timestamp())
-            target, src = _align_source(target, src, audit_ts_col, on_extra_columns)
-            merged = _classify_merge(
-                target, src, keys, hash_col, None, None, "status", "deleted"
-            )
-        merged = merged.cache()
-        try:
-            counts = {
-                r["_action"]: r["n"]
-                for r in merged.groupBy("_action").agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-            # one new directory per affected partition, written lock-free
-            new_dirs: dict[str, str] = {}
-            stamp = _unique_stamp()
-            for i, v in enumerate(affected):
-                d = f"p_{i}_{stamp}"
-                part = merged.filter(F.col(pcol) == F.lit(v)).drop("_action")
-                if cluster_by:
-                    part = part.repartitionByRange(
-                        cluster_files, *[F.col(c) for c in cluster_by]
-                    ).sortWithinPartitions(*cluster_by)
-                part.write.mode("overwrite").parquet(os.path.join(self.root, d))
-                new_dirs[str(v)] = d
-        finally:
-            merged.unpersist()
+            if target is None:
+                merged = src.withColumn("_action", F.lit("insert"))
+            else:
+                target, src = _align_source(target, src, audit_ts_col, on_extra_columns)
+                merged = _classify_merge(
+                    target, src, keys, hash_col, None, None, "status", "deleted"
+                )
+            merged = merged.cache()
+            try:
+                counts = {
+                    r["_action"]: r["n"]
+                    for r in merged.groupBy("_action").agg(F.count(F.lit(1)).alias("n")).collect()
+                }
+                # one new directory per affected partition, written lock-free
+                new_dirs: dict[str, str] = {}
+                stamp = _unique_stamp()
+                for i, v in enumerate(affected):
+                    d = f"p_{i}_{stamp}"
+                    part = merged.filter(F.col(pcol) == F.lit(v)).drop("_action")
+                    if cluster_by:
+                        part = part.repartitionByRange(
+                            cluster_files, *[F.col(c) for c in cluster_by]
+                        ).sortWithinPartitions(*cluster_by)
+                    part.write.mode("overwrite").parquet(os.path.join(self.root, d))
+                    new_dirs[str(v)] = d
+            finally:
+                merged.unpersist()
 
         with self._commit_lock():
             manifest = self._read_manifest()

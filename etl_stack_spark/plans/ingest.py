@@ -16,7 +16,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_stack_spark.functions import clean_area, clean_price, clean_smallint, content_hash
-from etl_stack_spark.functions.cleaners import clean_numeric_small, title_truncate
+from etl_stack_spark.functions.cleaners import (
+    clean_numeric_small,
+    first_int,
+    price_number,
+    scrubbed_number,
+    title_truncate,
+)
 from etl_stack_spark.operators.merge import ParquetMergeTable
 
 
@@ -35,19 +41,34 @@ def incremental_gate(links: DataFrame, known: DataFrame, tolerance_s: int = 60) 
 
 
 def clean_and_hash(staged: DataFrame) -> DataFrame:
-    """P3-P9 over the canonical staged rows (string-typed raw fields)."""
+    """P3-P9 over the canonical staged rows (string-typed raw fields).
+
+    The parsed numbers are projected once in an inner select, so each
+    cleaner's CASE branches read a column instead of re-running the
+    regexp scrub (Catalyst keeps the two projections apart: collapsing
+    them would duplicate the scrub)."""
     status = F.lower(F.coalesce(F.col("status"), F.lit("active")))
-    df = staged.filter(status.isin("publish", "active", "published"))
-    price, currency = clean_price(F.col("price_raw"), F.col("currency_raw"))
+    df = staged.filter(status.isin("publish", "active", "published")).select(
+        "*",
+        price_number(F.col("price_raw")).alias("_price_num"),
+        scrubbed_number(F.col("sqm_raw")).alias("_area_num"),
+        first_int(F.col("bedrooms_raw")).alias("_bedrooms_num"),
+        scrubbed_number(F.col("bathrooms_raw")).alias("_bathrooms_num"),
+    )
+    price, currency = clean_price(
+        F.col("price_raw"), F.col("currency_raw"), num=F.col("_price_num")
+    )
     return df.select(
         "client_id",
         "external_id",
         title_truncate(F.col("title")).alias("title"),
         price.alias("price"),
         currency.alias("currency"),
-        clean_area(F.col("sqm_raw")).alias("area_sqm"),
-        clean_smallint(F.col("bedrooms_raw"), 100).alias("bedrooms"),
-        clean_numeric_small(F.col("bathrooms_raw"), 99).alias("bathrooms"),
+        clean_area(F.col("sqm_raw"), num=F.col("_area_num")).alias("area_sqm"),
+        clean_smallint(F.col("bedrooms_raw"), 100, num=F.col("_bedrooms_num")).alias("bedrooms"),
+        clean_numeric_small(
+            F.col("bathrooms_raw"), 99, num=F.col("_bathrooms_num")
+        ).alias("bathrooms"),
         F.col("lat").cast("double").alias("location_lat"),
         F.col("lng").cast("double").alias("location_lng"),
         F.col("features").alias("features"),

@@ -5,19 +5,18 @@ exactly-once composition (at-least-once replay + version-gated sink).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_stack_spark.operators.merge import ParquetMergeTable, PartitionedMergeTable
 from etl_stack_spark.streaming.delta_source import (
-
-import pytest
-# slow tier (VERDICT r10 task 1): readStream tails with real micro-batch drains;
-# run via tools/run_gate.py (the gate) or `pytest -m slow`.
-pytestmark = pytest.mark.slow
-
     DeltaStreamSource,
     signed_changes_batch_fn,
 )
+
+# slow tier (VERDICT r10 task 1): readStream tails with real micro-batch drains;
+# run via tools/run_gate.py (the gate) or `pytest -m slow`.
+pytestmark = pytest.mark.slow
 
 SCHEMA = "grp string, pk string, v long, content_hash string"
 

@@ -995,3 +995,120 @@ def test_soft_delete_scope_keys_frame_equivalent(spark, table):
             soft_delete_scope=F.col("t.client_id") == "c1",
             soft_delete_scope_keys=scope,
         )
+
+
+def _jobs_in(spark, group, fn):
+    """Run ``fn`` under a job group; return (its result, the number of
+    Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_merge_job_budget(spark, table):
+    """One merge = one validation aggregate + one classify-and-write pass
+    whose counters are observed: at most 8 jobs on a small table (the
+    three-pass form with a cached snapshot and a separate counting job
+    took 12)."""
+    table.merge(props(spark, BATCH1), keys=["client_id", "external_id"])
+    batch2 = [
+        ("c1", "p1", "Casa A v2", "h1b", "active"),
+        ("c1", "p3", "Casa C", "h3", "active"),
+    ]
+    stats, jobs = _jobs_in(
+        spark,
+        "test_merge_job_budget",
+        lambda: table.merge(
+            props(spark, batch2),
+            keys=["client_id", "external_id"],
+            soft_delete_scope=F.col("t.client_id") == "c1",
+        ),
+    )
+    assert stats == {"inserted": 1, "updated": 1, "unchanged": 1, "soft_deleted": 1}
+    assert 0 < jobs <= 8, jobs
+
+
+def test_merge_keeps_source_observation(spark, table):
+    """The merge persists its source; an ``observe()`` the caller attached
+    to that source must still deliver its counters (``obs.get`` blocks
+    until they arrive, so a lost observation would hang: wait with a
+    timeout instead)."""
+    import threading
+
+    from etl_stack_spark.plans.ingest import with_quality_observation
+
+    src = props(spark, BATCH1).select(
+        "*",
+        F.when(F.col("external_id") == "p2", None).otherwise(F.lit(1.0)).alias("price"),
+        F.lit(9.9).alias("location_lat"),
+        F.lit(None).cast("double").alias("location_lng"),
+    )
+    # an empty first write, so the observed merge below takes the
+    # classify-and-write path, which carries its own observation too
+    table.merge(src.limit(0), keys=["client_id", "external_id"])
+    observed, obs = with_quality_observation(src)
+    stats = table.merge(observed, keys=["client_id", "external_id"])
+    assert stats["inserted"] == 3
+    got = {}
+    reader = threading.Thread(target=lambda: got.update(obs.get), daemon=True)
+    reader.start()
+    reader.join(timeout=60)
+    assert not reader.is_alive(), "observation metrics never arrived"
+    assert (got["n_rows"], got["null_price"], got["null_coords"]) == (3, 1, 3)
+
+
+_BAD_SOURCES = {
+    "null_key": (
+        [("c1", "p1", "t", "h"), ("c1", None, "t", "h")],
+        "merge source contains NULL in merge key\\(s\\) \\['client_id', 'external_id'\\]",
+    ),
+    "duplicate_key": (
+        [("c1", "p1", "t", "h"), ("c1", "p1", "t2", "h2")],
+        "merge source has multiple rows per merge key \\['client_id', 'external_id'\\]; "
+        "deduplicate the source first",
+    ),
+    "null_partition": (
+        [("c1", "p1", "t", "h"), (None, "p2", "t", "h")],
+        "merge source contains NULL 'client_id'",
+    ),
+}
+
+
+@pytest.mark.parametrize("kind", ["whole", "partitioned"])
+@pytest.mark.parametrize("bad", sorted(_BAD_SOURCES))
+def test_rejected_source_changes_nothing(spark, tmp_path, kind, bad):
+    """A source that fails validation raises before anything is written:
+    same manifest, no new snapshot directory, and the merge's persist of
+    the source is released."""
+    import os
+
+    from pyspark import StorageLevel
+
+    from etl_stack_spark.operators.merge import PartitionedMergeTable
+
+    root = str(tmp_path / "t")
+    if kind == "whole":
+        t = ParquetMergeTable(spark, root)
+    else:
+        t = PartitionedMergeTable(spark, root, "client_id")
+    rows, message = _BAD_SOURCES[bad]
+    if bad == "null_partition" and kind == "whole":
+        message = _BAD_SOURCES["null_key"][1]  # no partition column: a plain null key
+    t.merge(_ptable_rows(spark, [("c1", "p1", "t", "h"), ("c2", "q1", "u", "g")]),
+            keys=["client_id", "external_id"])
+
+    def state():
+        with open(os.path.join(root, "MANIFEST.json")) as f:
+            return f.read(), sorted(os.listdir(root))
+
+    before = state()
+    source = _ptable_rows(spark, rows)
+    with pytest.raises(ValueError, match=f"^{message}"):
+        t.merge(source, keys=["client_id", "external_id"])
+    assert state() == before
+    assert source.storageLevel == StorageLevel.NONE

@@ -147,6 +147,55 @@ def test_ingest_pipeline_end_to_end(spark, tmp_path):
     assert stats2["updated"] == 0 and stats2["unchanged"] == 2  # idempotent
 
 
+def test_clean_and_hash_matches_single_projection(spark):
+    """clean_and_hash projects each parsed number once and hands it to
+    the cleaners; its rows must equal the public cleaners applied in one
+    select, on every dirty format the cleaners handle. (``collect``, not
+    ``exceptAll``: the ``features`` map column is not comparable.)"""
+    from etl_stack_spark.functions import clean_area, content_hash
+    from etl_stack_spark.functions.cleaners import clean_numeric_small, title_truncate
+
+    dirty = ["$1,234", "1.234,56", "₡ 2.500.000", "85 m2", "", None, "abc", "3 1/2", " 12 "]
+    currencies = ["USD", "crc", "₡", "", None]
+    n = len(dirty)
+    rows = [
+        ("c1", str(i), "T", dirty[i], currencies[i % 5], dirty[-1 - i],
+         dirty[(i + 3) % n], dirty[(i + 5) % n], "9.9", "-84.1", {"k": "v"}, "active")
+        for i in range(n)
+    ]
+    staged = spark.createDataFrame(
+        rows,
+        "client_id string, external_id string, title string, price_raw string, currency_raw string, "
+        "sqm_raw string, bedrooms_raw string, bathrooms_raw string, lat string, lng string, "
+        "features map<string,string>, status string",
+    )
+    price, currency = clean_price(F.col("price_raw"), F.col("currency_raw"))
+    single = staged.select(
+        "client_id",
+        "external_id",
+        title_truncate(F.col("title")).alias("title"),
+        price.alias("price"),
+        currency.alias("currency"),
+        clean_area(F.col("sqm_raw")).alias("area_sqm"),
+        clean_smallint(F.col("bedrooms_raw"), 100).alias("bedrooms"),
+        clean_numeric_small(F.col("bathrooms_raw"), 99).alias("bathrooms"),
+        F.col("lat").cast("double").alias("location_lat"),
+        F.col("lng").cast("double").alias("location_lng"),
+        F.col("features").alias("features"),
+        content_hash(
+            F.col("title"), F.col("price_raw"), F.col("currency_raw"), F.col("sqm_raw"),
+            F.col("lat"), F.col("lng"), F.col("features"),
+        ).alias("content_hash"),
+        F.lit("active").alias("status"),
+    )
+    got = clean_and_hash(staged)
+    assert got.columns == single.columns
+    key = lambda r: r["external_id"]  # noqa: E731
+    got_rows = sorted(got.collect(), key=key)
+    assert len(got_rows) == n
+    assert got_rows == sorted(single.collect(), key=key)
+
+
 def test_incremental_gate_60s_tolerance(spark):
     links = spark.createDataFrame(
         [
