@@ -48,6 +48,12 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_stack_spark.session import (
+    forget_parquet_schema,
+    read_parquet,
+    remember_parquet_schema,
+)
+
 # process-wide monotone sequence for snapshot/partition/compaction dir
 # names: (millis, pid) alone COLLIDES when two same-process writer
 # threads race inside one millisecond — FileOutputCommitter then merges
@@ -323,7 +329,7 @@ class ParquetMergeTable:
             cur = version
         if cur is None:
             raise FileNotFoundError(f"no current snapshot in {self.root}")
-        return self.spark.read.parquet(os.path.join(self.root, cur))
+        return read_parquet(self.spark, os.path.join(self.root, cur))
 
     # -- stats-based file skipping (zone maps via the Delta log) -------------
     def prune_files(self, bounds: dict[str, tuple]) -> tuple[list[str], int]:
@@ -454,6 +460,8 @@ class ParquetMergeTable:
                     df.schema.json(),
                     operation=operation,
                 )
+        # snapshots are immutable: the first read of this one infers nothing
+        remember_parquet_schema(self.spark, path, df.schema)
         return version
 
     @contextlib.contextmanager
@@ -614,6 +622,7 @@ class ParquetMergeTable:
                 json.dump(manifest, f)
             os.replace(tmp, self._manifest_path)
         for v in to_drop:
+            forget_parquet_schema(os.path.join(self.root, v))
             shutil.rmtree(os.path.join(self.root, v), ignore_errors=True)
         return to_drop
 

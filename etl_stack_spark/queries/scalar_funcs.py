@@ -25,6 +25,7 @@ from etl_stack_spark.functions import (
     split_latlng,
     title_truncate,
 )
+from etl_stack_spark.functions.cleaners import first_int, price_number, scrubbed_number
 from etl_stack_spark.functions.misc import case_contains, name_rescue
 from etl_stack_spark.functions.udfs import normalize_text
 from etl_stack_spark.queries import register
@@ -89,7 +90,10 @@ def p4_clean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = F.col("o_orderkey") % 4
     cur_raw = F.when(c == 0, "usd").when(c == 1, "CRC").when(c == 2, "EUR")
     df = orders.select("o_orderkey", dirty.alias("price_raw"), cur_raw.alias("currency_raw"))
-    price, currency = clean_price(F.col("price_raw"), F.col("currency_raw"))
+    # the parsed number gets its own projection, so its regexp scrub
+    # runs once per row, not once per CASE branch that references it
+    df = df.select("*", price_number(F.col("price_raw")).alias("num"))
+    price, currency = clean_price(F.col("price_raw"), F.col("currency_raw"), num=F.col("num"))
     return df.select("o_orderkey", price.alias("price"), currency.alias("currency"))
 
 
@@ -133,7 +137,8 @@ def p5_clean_area(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.format_string("%d", F.col("p_size")))
     )
     df = part.select("p_partkey", dirty.alias("area_raw"))
-    return df.select("p_partkey", clean_area(F.col("area_raw")).alias("area"))
+    df = df.select("*", scrubbed_number(F.col("area_raw")).alias("num"))
+    return df.select("p_partkey", clean_area(F.col("area_raw"), num=F.col("num")).alias("area"))
 
 
 # ---------------------------------------------------------------------------
@@ -173,7 +178,10 @@ def p6_clean_smallint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.format_string("%d", F.col("p_size") * 10))
     )
     df = part.select("p_partkey", dirty.alias("beds_raw"))
-    return df.select("p_partkey", clean_smallint(F.col("beds_raw"), 100).alias("bedrooms"))
+    df = df.select("*", first_int(F.col("beds_raw")).alias("num"))
+    return df.select(
+        "p_partkey", clean_smallint(F.col("beds_raw"), 100, num=F.col("num")).alias("bedrooms")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -214,7 +222,11 @@ def p7_clean_numeric_small(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.format_string("%.2f", F.col("p_retailprice")))
     )
     df = part.select("p_partkey", dirty.alias("baths_raw"))
-    return df.select("p_partkey", clean_numeric_small(F.col("baths_raw"), 99.9).alias("bathrooms"))
+    df = df.select("*", scrubbed_number(F.col("baths_raw")).alias("num"))
+    return df.select(
+        "p_partkey",
+        clean_numeric_small(F.col("baths_raw"), 99.9, num=F.col("num")).alias("bathrooms"),
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -5,14 +5,32 @@ knobs are the ones that matter on a 1000-executor cluster — AQE on (runtime
 coalesce + skew-join splitting), broadcast threshold high enough that dim
 tables (region/nation/config) always broadcast, shuffle partitions sized to
 cores locally and to ~2-3× total cores (or AQE-advisory target) on a cluster.
+
+Parquet schemas are resolved once, the way a database reads its catalog:
+``read_parquet`` infers a path's schema on first use (on Spark 4.1 a bare
+``spark.read.parquet`` launches a one-task footer-reading job every time)
+and afterwards reads with that schema. A cached schema is valid while
+both halves of its key hold:
+
+- file identity: the absolute path plus the mtime, size and inode of the
+  file, or of every file under a directory;
+- inference confs: the session's values of the confs that change what
+  Parquet inference returns (``_INFERENCE_CONFS``).
+
+So a rewritten file, or a session with different confs, is inferred
+again; a miss infers exactly as ``spark.read.parquet`` does, errors
+included. ``ParquetMergeTable`` records each snapshot's schema as it
+commits it (``remember_parquet_schema``) and forgets vacuumed ones.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -106,10 +124,80 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+# session confs whose value changes the schema Parquet inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# abspath -> (file identity, inference conf values, schema). One entry
+# per path; a rewrite or conf change replaces it. Plain dict reads and
+# writes are atomic, so concurrent readers at worst both infer on a miss.
+_SCHEMAS: dict[str, tuple[tuple, tuple, StructType]] = {}
+
+
+def _file_identity(path: str) -> tuple | None:
+    """(relative name, mtime, size, inode) of the file, or of every file
+    under the directory; None when the path cannot be stat'ed."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (("", st.st_mtime_ns, st.st_size, st.st_ino),)
+        out = []
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                full = os.path.join(root, f)
+                st = os.stat(full)
+                out.append((os.path.relpath(full, path), st.st_mtime_ns, st.st_size, st.st_ino))
+        return tuple(sorted(out))
+    except OSError:  # missing, or changing under us: read without the cache
+        return None
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple[str, tuple | None, tuple]:
+    path = os.path.abspath(path)
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    return path, _file_identity(path), confs
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema only on the
+    first read of this file identity under these inference confs. Every
+    call builds a fresh relation (new attribute ids), as a bare read does."""
+    # identity is taken before inference: a rewrite racing the inference
+    # leaves an entry under the old identity, which no later read matches
+    path, identity, confs = _schema_key(spark, path)
+    hit = _SCHEMAS.get(path)
+    if identity and hit is not None and hit[:2] == (identity, confs):
+        return spark.read.schema(hit[2]).parquet(path)
+    df = spark.read.parquet(path)
+    if identity:
+        _SCHEMAS[path] = (identity, confs, df.schema)
+    return df
+
+
+def remember_parquet_schema(spark: SparkSession, path: str, schema: StructType) -> None:
+    """Record the schema of Parquet data this process just wrote to
+    ``path``, so its first ``read_parquet`` infers nothing. Only for data
+    written by Spark, whose footers carry this very schema."""
+    path, identity, confs = _schema_key(spark, path)
+    if identity:
+        _SCHEMAS[path] = (identity, confs, schema)
+
+
+def forget_parquet_schema(path: str) -> None:
+    """Drop ``path``'s entry (its data was deleted)."""
+    _SCHEMAS.pop(os.path.abspath(path), None)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one test table. Plain parquet scan → full pushdown/pruning."""
+    """Read one test table. Plain parquet scan → full pushdown/pruning;
+    the schema is resolved once per file (``read_parquet``)."""
     ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = normalize_events_ts(df)
     return df

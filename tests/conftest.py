@@ -48,3 +48,16 @@ def duck_with_views(con: duckdb.DuckDBPyConnection, sf_dir: str) -> duckdb.DuckD
                 f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM read_parquet('{path}')"
             )
     return con
+
+
+def jobs_in(spark, group, fn):
+    """Run ``fn`` under a job group; return (its result, the number of
+    Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
