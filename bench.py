@@ -1276,63 +1276,26 @@ def main() -> None:
             print(f"# sweep {name}: {sweep_timings[name]}s ({n} rows)", file=sys.stderr)
         full_sweep_total = round(sum(t for t in sweep_timings.values() if t > 0), 3)
 
-    streaming = None
-    streaming_corpus = None
-    interval = None
-    pmerge = None
-    dtail = None
-    warc = None
-    skipping = None
-    annm = None
+    # (sidecar key, tier, stderr label, stderr error tag)
+    tier_specs = [
+        ("streaming_lead_prep", bench_streaming, "streaming lead-prep", "STREAM"),
+        ("streaming_corpus_clean", bench_streaming_corpus, "streaming corpus wash", "STREAM"),
+        ("streaming_interval_join", bench_interval_join, "streaming interval join", "STREAM"),
+        ("partitioned_merge", bench_partitioned_merge, "partitioned merge", "MERGE"),
+        ("delta_tail", bench_delta_tail, "delta tail", "TAIL"),
+        ("warc_pipeline", bench_warc_pipeline, "warc pipeline", "WARC"),
+        ("stats_skipping", bench_stats_skipping, "stats skipping", "SKIP"),
+        ("ann_maintenance", bench_ann_maintenance, "ann maintenance", "ANN"),
+    ]
+    tiers: dict[str, dict] = {}
     if stream:
-        try:
-            streaming = bench_streaming(spark, sf_dir)
-            print(f"# streaming lead-prep: {streaming}", file=sys.stderr)
-        except Exception as e:  # a streaming failure is a finding, not a crash
-            streaming = {"error": f"{type(e).__name__}: {e}"[:200]}
-            print(f"# STREAM-ERROR {streaming['error']}", file=sys.stderr)
-        try:
-            streaming_corpus = bench_streaming_corpus(spark, sf_dir)
-            print(f"# streaming corpus wash: {streaming_corpus}", file=sys.stderr)
-        except Exception as e:
-            streaming_corpus = {"error": f"{type(e).__name__}: {e}"[:200]}
-            print(f"# STREAM-ERROR {streaming_corpus['error']}", file=sys.stderr)
-        try:
-            interval = bench_interval_join(spark, sf_dir)
-            print(f"# streaming interval join: {interval}", file=sys.stderr)
-        except Exception as e:
-            interval = {"error": f"{type(e).__name__}: {e}"[:200]}
-            print(f"# STREAM-ERROR {interval['error']}", file=sys.stderr)
-        try:
-            pmerge = bench_partitioned_merge(spark, sf_dir)
-            print(f"# partitioned merge: {pmerge}", file=sys.stderr)
-        except Exception as e:
-            pmerge = {"error": f"{type(e).__name__}: {e}"[:200]}
-            print(f"# MERGE-ERROR {pmerge['error']}", file=sys.stderr)
-        try:
-            dtail = bench_delta_tail(spark, sf_dir)
-            print(f"# delta tail: {dtail}", file=sys.stderr)
-        except Exception as e:
-            dtail = {"error": f"{type(e).__name__}: {e}"[:200]}
-            print(f"# TAIL-ERROR {dtail['error']}", file=sys.stderr)
-        try:
-            warc = bench_warc_pipeline(spark, sf_dir)
-            print(f"# warc pipeline: {warc}", file=sys.stderr)
-        except Exception as e:
-            warc = {"error": f"{type(e).__name__}: {e}"[:200]}
-            print(f"# WARC-ERROR {warc['error']}", file=sys.stderr)
-        try:
-            skipping = bench_stats_skipping(spark, sf_dir)
-            print(f"# stats skipping: {skipping}", file=sys.stderr)
-        except Exception as e:
-            skipping = {"error": f"{type(e).__name__}: {e}"[:200]}
-            print(f"# SKIP-ERROR {skipping['error']}", file=sys.stderr)
-        try:
-            annm = bench_ann_maintenance(spark, sf_dir)
-            print(f"# ann maintenance: {annm}", file=sys.stderr)
-        except Exception as e:
-            annm = {"error": f"{type(e).__name__}: {e}"[:200]}
-            print(f"# ANN-ERROR {annm['error']}", file=sys.stderr)
+        for key, tier, label, tag in tier_specs:
+            try:
+                tiers[key] = tier(spark, sf_dir)
+                print(f"# {label}: {tiers[key]}", file=sys.stderr)
+            except Exception as e:  # a tier failure is a finding, not a crash
+                tiers[key] = {"error": f"{type(e).__name__}: {e}"[:200]}
+                print(f"# {tag}-ERROR {tiers[key]['error']}", file=sys.stderr)
 
     # end-of-run self-adjudication (VERDICT r8 task 1): every >2x headline
     # flag gets a RESAMPLE now — after the sweep and streaming tiers, when
@@ -1529,22 +1492,7 @@ def main() -> None:
         detail["full_sweep_queries"] = sweep_timings
         if sweep_resamples:
             detail["sweep_resamples"] = sweep_resamples
-    if streaming is not None:
-        detail["streaming_lead_prep"] = streaming
-    if streaming_corpus is not None:
-        detail["streaming_corpus_clean"] = streaming_corpus
-    if interval is not None:
-        detail["streaming_interval_join"] = interval
-    if pmerge is not None:
-        detail["partitioned_merge"] = pmerge
-    if dtail is not None:
-        detail["delta_tail"] = dtail
-    if warc is not None:
-        detail["warc_pipeline"] = warc
-    if skipping is not None:
-        detail["stats_skipping"] = skipping
-    if annm is not None:
-        detail["ann_maintenance"] = annm
+    detail.update(tiers)
     if headline_resamples:
         detail["headline_resamples"] = headline_resamples
     if regressions:

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_stack_spark.plans.corpus_clean import clean_corpus, clean_corpus_v2
-from etl_stack_spark.queries import register
+from etl_stack_spark.queries import register, stores
 from etl_stack_spark.queries.text_dedup import (
     _minhash_oracle,
     _SHINGLES,
@@ -27,33 +27,15 @@ from etl_stack_spark.session import load_table
 # they are now computed once per (session, sf_dir), persisted
 # MEMORY_AND_DISK, and injected into the plans. On a cluster the same
 # role is played by a checkpointed signals table the washes all read —
-# exactly the j6_base precedent (queries/geo.py). The parity suite runs
-# queries through an 8-thread pool, so build-and-persist is guarded by a
-# lock (double-checked get) — otherwise concurrent first calls from
-# llm1/llm2/llm3 each persist their own copy and leak the losers.
-_CORPUS_CACHE: dict[tuple[str, str], dict] = {}
-
-import threading as _threading
-
-_CORPUS_LOCK = _threading.Lock()
+# exactly the j6_base precedent (queries/geo.py, queries/stores.py).
 
 
-def clear_corpus_cache() -> None:
-    """Unpersist and drop the shared llm-wash intermediates (test hook)."""
-    with _CORPUS_LOCK:
-        for entry in _CORPUS_CACHE.values():
-            for df in entry.values():
-                df.unpersist()
-        _CORPUS_CACHE.clear()
-
-
+@stores.session_store
 def corpus_base(spark: SparkSession, sf_dir: str) -> dict:
     """Persisted shared intermediates: ``scored`` = score_documents over
     ALL documents (+ source column so each wash slices its own corpus),
     ``gate_ids`` = the v2 repetition∩decontamination id set over the
     non-src0 slice at the registry constants."""
-    import os as _os
-
     from pyspark import StorageLevel
 
     from etl_stack_spark.plans.corpus_clean import (
@@ -62,61 +44,42 @@ def corpus_base(spark: SparkSession, sf_dir: str) -> dict:
         score_documents,
     )
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    hit = _CORPUS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with _CORPUS_LOCK:
-        hit = _CORPUS_CACHE.get(key)
-        if hit is not None:
-            return hit
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-        scored = score_documents(docs, extra_cols=("source",)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        kept_ns = quality_lang_filter(
-            scored.filter(F.col("source") != "src0"), 0.4, ("en", "es", "de", "fr")
-        )
-        bench = docs.filter((F.col("source") == "src0") & (F.col("doc_id") < 500))
-        gate_ids = gate_ids_v2(kept_ns, bench).persist(StorageLevel.MEMORY_AND_DISK)
-        entry = {"scored": scored, "gate_ids": gate_ids}
-        _CORPUS_CACHE[key] = entry
-        return entry
+    docs = load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    scored = score_documents(docs, extra_cols=("source",)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    kept_ns = quality_lang_filter(
+        scored.filter(F.col("source") != "src0"), 0.4, ("en", "es", "de", "fr")
+    )
+    bench = docs.filter((F.col("source") == "src0") & (F.col("doc_id") < 500))
+    gate_ids = gate_ids_v2(kept_ns, bench).persist(StorageLevel.MEMORY_AND_DISK)
+    return {"scored": scored, "gate_ids": gate_ids}
 
 
+@stores.session_store
 def xdoc_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted v3-only corpus-level intermediate: the ids passing the
     cross-document 5-gram gate (rep2 constants) over the non-src0 slice.
     Like gate_ids it is a function of (docs, constants) alone, but only
-    llm3 consumes it — so it is built lazily on the first llm3 call
-    instead of charging llm1/llm2's first call for it."""
+    llm3 consumes it — so it is its own store, built lazily on the first
+    llm3 call instead of charging llm1/llm2's first call for it."""
     from pyspark import StorageLevel
 
     from etl_stack_spark.operators.curation import cross_doc_dup_ngrams
 
-    entry = corpus_base(spark, sf_dir)
-    hit = entry.get("xdoc_ids")
-    if hit is not None:
-        return hit
-    with _CORPUS_LOCK:
-        hit = entry.get("xdoc_ids")
-        if hit is not None:
-            return hit
-        docs_ns = load_table(spark, sf_dir, "documents").filter(
-            F.col("source") != "src0"
+    docs_ns = load_table(spark, sf_dir, "documents").filter(
+        F.col("source") != "src0"
+    )
+    return (
+        cross_doc_dup_ngrams(
+            docs_ns.select("doc_id", "text"), n=5, max_dup_frac=0.30
         )
-        ids = (
-            cross_doc_dup_ngrams(
-                docs_ns.select("doc_id", "text"), n=5, max_dup_frac=0.30
-            )
-            .filter(F.col("keep_cross_doc"))
-            .select("doc_id")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        entry["xdoc_ids"] = ids
-        return ids
+        .filter(F.col("keep_cross_doc"))
+        .select("doc_id")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
 
 
 def _lang_pieces() -> tuple[str, str]:

@@ -31,7 +31,7 @@ from etl_stack_spark.operators.curation import (
     repetition_metrics,
 )
 from etl_stack_spark.operators.text import token_count, tokens
-from etl_stack_spark.queries import register
+from etl_stack_spark.queries import register, stores
 from etl_stack_spark.queries.text_dedup import _H60, _SHINGLES, _TOKS
 from etl_stack_spark.session import load_table
 
@@ -243,50 +243,26 @@ def pk1_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reference corpus (source 'src0'). Integer milli-nat quantization makes
 # the log-prob sums exact cross-engine (see trigram_lm_score docstring).
 #
-# The scored frame is shared per (session, sf_dir) by lm1/lm2/lm2b (the
-# corpus_q._CORPUS_CACHE precedent): the ~2.4s train+score subtree ran
-# three times per sweep before round 8. Lock-guarded double-checked get —
-# the parity suite calls through an 8-thread pool.
+# The scored frame is a session store (queries/stores.py) shared by
+# lm1/lm2/lm2b: the ~2.4s train+score subtree ran three times per sweep
+# before round 8.
 # ---------------------------------------------------------------------------
-import threading as _threading  # noqa: E402
-
-_LM_CACHE: dict[tuple[str, str], DataFrame] = {}
-_LM_LOCK = _threading.Lock()
 
 
-def clear_lm_cache() -> None:
-    """Unpersist and drop the shared trigram-scored frames (test hook)."""
-    with _LM_LOCK:
-        for df in _LM_CACHE.values():
-            df.unpersist()
-        _LM_CACHE.clear()
-
-
+@stores.session_store
 def lm_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted (doc_id, n_trigrams, nll_millinats) over ALL documents,
     scored against the src0-trained trigram LM — the shared input of the
     lm family. On a cluster this is the checkpointed signals table every
     pruner reads; here it is MEMORY_AND_DISK per (session, sf_dir)."""
-    import os as _os
-
     from pyspark import StorageLevel
 
     from etl_stack_spark.operators.curation import trigram_lm_score
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    hit = _LM_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with _LM_LOCK:
-        hit = _LM_CACHE.get(key)
-        if hit is not None:
-            return hit
-        docs = load_table(spark, sf_dir, "documents")
-        scored = trigram_lm_score(
-            docs, docs.filter(F.col("source") == "src0")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _LM_CACHE[key] = scored
-        return scored
+    docs = load_table(spark, sf_dir, "documents")
+    return trigram_lm_score(
+        docs, docs.filter(F.col("source") == "src0")
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 _LM1_ORACLE = """
@@ -527,36 +503,23 @@ def dsir1_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and reuses — retraining per registry call was pure sweep cost (bpe1
 # 4.3s, ql2 4.0s in the r10 record). Deterministic training keeps the
 # committed golden hashes byte-identical cached or fresh.
-_TRAINED_CACHE: dict[tuple, object] = {}
-
-import threading as _threading
-
-_TRAINED_LOCK = _threading.Lock()
 
 
-def _session_trained(spark: SparkSession, sf_dir: str, what: str, builder):
-    import os as _os
+@stores.session_store
+def _bpe1_merges(spark: SparkSession, sf_dir: str):
+    """bpe1's merge list, trained once per session on the src0 corpus."""
+    from etl_stack_spark.operators.bpe import bpe_train
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), what)
-    if key not in _TRAINED_CACHE:
-        # double-checked: the parity suite calls through an 8-thread pool;
-        # without the lock concurrent first calls each pay the training
-        # pass (no leak — these are driver-side artifacts — but wasted jobs)
-        with _TRAINED_LOCK:
-            if key not in _TRAINED_CACHE:
-                _TRAINED_CACHE[key] = builder()
-    return _TRAINED_CACHE[key]
+    docs = load_table(spark, sf_dir, "documents")
+    return bpe_train(docs.filter(F.col("source") == "src0"), n_merges=20)
 
 
 @register("bpe1_subword_tokenize")
 def bpe1_subword_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_stack_spark.operators.bpe import bpe_tokenize, bpe_train
+    from etl_stack_spark.operators.bpe import bpe_tokenize
 
     docs = load_table(spark, sf_dir, "documents")
-    merges = _session_trained(
-        spark, sf_dir, "bpe1",
-        lambda: bpe_train(docs.filter(F.col("source") == "src0"), n_merges=20),
-    )
+    merges = _bpe1_merges(spark, sf_dir)
     return (
         bpe_tokenize(docs.filter(F.col("source") != "src0"), merges)
         .groupBy("doc_id")
@@ -687,12 +650,11 @@ def ql1_linear_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register("ql2_train_apply")
-def ql2_train_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_stack_spark.operators.curation import (
-        linear_quality_classifier,
-        train_linear_classifier,
-    )
+@stores.session_store
+def _ql2_weights(spark: SparkSession, sf_dir: str):
+    """ql2's classifier weights, trained once per session on the
+    quality-score teacher labels."""
+    from etl_stack_spark.operators.curation import train_linear_classifier
     from etl_stack_spark.operators.text import quality_score
 
     docs = load_table(spark, sf_dir, "documents")
@@ -701,11 +663,16 @@ def ql2_train_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         (quality_score(F.col("text")) >= 0.4).cast("int").alias("label"),
     )
-    weights = _session_trained(
-        spark, sf_dir, "ql2", lambda: train_linear_classifier(teacher, epochs=6)
-    )
+    return train_linear_classifier(teacher, epochs=6)
+
+
+@register("ql2_train_apply")
+def ql2_train_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from etl_stack_spark.operators.curation import linear_quality_classifier
+
+    docs = load_table(spark, sf_dir, "documents")
     return linear_quality_classifier(
-        docs.filter(F.col("source") != "src0"), weights
+        docs.filter(F.col("source") != "src0"), _ql2_weights(spark, sf_dir)
     ).select("doc_id", "n_tokens", "keep_quality")
 
 

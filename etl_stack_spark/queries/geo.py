@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from etl_stack_spark.functions.geo import haversine_km
 from etl_stack_spark.operators.rank import tiered_top_k
-from etl_stack_spark.queries import register
+from etl_stack_spark.queries import register, stores
 from etl_stack_spark.session import load_table
 
 # Per-category config — shape mirrors cl_config_lead_prep.json (radius_km,
@@ -255,49 +255,40 @@ def t1_lead_prep_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The matched (prop, poi, category, distance) stream is the shared input of
 # the whole lead-prep family (j6, t1, t2, t6, a2a3) — each query used to
-# recompute the radius join from scratch (VERDICT r4 task 2). It is persisted
-# once per (session, sf_dir) and reused; MEMORY_AND_DISK so an sf where the
-# match stream outgrows executor storage spills instead of evicting. On a
-# cluster the same role is played by a checkpointed staging table the family
-# reads — the reference computes all tiers from one query family per property
-# (cl_test1.py:63-218).
-_J6_CACHE: dict[tuple[str, str], DataFrame] = {}
+# recompute the radius join from scratch (VERDICT r4 task 2). It is a session
+# store (queries/stores.py), persisted once per (session, sf_dir) and reused;
+# MEMORY_AND_DISK so an sf where the match stream outgrows executor storage
+# spills instead of evicting. On a cluster the same role is played by a
+# checkpointed staging table the family reads — the reference computes all
+# tiers from one query family per property (cl_test1.py:63-218).
 
 
 def clear_j6_cache() -> None:
-    """Unpersist and drop all cached match streams (test/debug hook)."""
-    for df in _J6_CACHE.values():
-        df.unpersist()
-    _J6_CACHE.clear()
+    """Unpersist and drop this module's session stores (test/debug hook)."""
+    stores.clear(__name__)
 
 
+@stores.session_store
 def j6_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unrounded radius-join result reused by the ranked/metric queries.
     Uses the per-category grid (each category's cells sized to its own
     radius) — the scale-optimal form. Projected to the family's working
     superset BEFORE the persist: lat/lon pairs are join scaffolding no
     downstream consumer reads, and dropping them cuts the cached bytes."""
-    import os as _os
-
     from pyspark import StorageLevel
 
     from etl_stack_spark.operators.geo_join import radius_join_by_category
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    hit = _J6_CACHE.get(key)
-    if hit is not None:
-        return hit
     props = props_df(spark, sf_dir)
     pois = pois_df(spark, sf_dir)
-    matched = radius_join_by_category(
+    return radius_join_by_category(
         props, pois, {k: c["radius_km"] for k, c in CATEGORIES.items()}
     ).select(
         "prop_id", "poi_id", "category", "brand", "quality_score", "distance_km"
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    _J6_CACHE[key] = matched
-    return matched
 
 
+@stores.session_store
 def _lead_rank_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The family's SECOND persisted view (VERDICT r8 task 2): the tiered
     top-k REDUCTION of the match stream — ~props x categories x k rows
@@ -307,63 +298,43 @@ def _lead_rank_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is a staging table written in the same pass that materializes
     the match stream; here it derives from the persisted wide view, so
     building it costs one cached-scan, never a join recompute."""
-    import os as _os
-
     from pyspark import StorageLevel
 
     from etl_stack_spark.operators.rank import lead_prep_tiered_rank
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), "rank")
-    hit = _J6_CACHE.get(key)
-    if hit is not None:
-        return hit
-    ranked = lead_prep_tiered_rank(j6_base(spark, sf_dir), CATEGORIES).persist(
+    return lead_prep_tiered_rank(j6_base(spark, sf_dir), CATEGORIES).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    _J6_CACHE[key] = ranked
-    return ranked
 
 
+@stores.session_store
 def _lead_distance_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distance-ordered top-5 per (prop, category) — one persisted
     reduction serving BOTH t2 (the k=5 slice) and t6 (closest Education
     pick = the category's rnk-1 row, valid because Education's j6 radius
     is exactly t6's 10 km and t6's ordering matches this view's)."""
-    import os as _os
-
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), "dist")
-    hit = _J6_CACHE.get(key)
-    if hit is not None:
-        return hit
     matched = j6_base(spark, sf_dir).select(
         "prop_id", "category", "poi_id", "distance_km"
     )
-    ranked = tiered_top_k(
+    return tiered_top_k(
         matched,
         partition_by=["prop_id", "category"],
         order_by=[F.col("distance_km"), F.col("poi_id")],
         k=5,
         rank_col="rnk",
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    _J6_CACHE[key] = ranked
-    return ranked
 
 
+@stores.session_store
 def _lead_metrics_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The family's THIRD persisted view: a2a3's per-property aggregate
     (one row per property — counts and boolean flags only). The 33M-row
     stream passes through this groupBy ONCE; every subsequent a2a3 read
     is O(n_props). Same staging-table story at 100 TB as the rank view."""
-    import os as _os
-
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), "metrics")
-    hit = _J6_CACHE.get(key)
-    if hit is not None:
-        return hit
     matched = j6_base(spark, sf_dir)
     walkable = F.count(F.when(F.col("distance_km") < 1.0, 1))
     grocery = F.coalesce(
@@ -375,15 +346,13 @@ def _lead_metrics_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(False),
     )
     education = F.coalesce(F.bool_or(F.col("category") == "Education"), F.lit(False))
-    metrics = matched.groupBy("prop_id").agg(
+    return matched.groupBy("prop_id").agg(
         walkable.alias("n_walkable"),
         F.least(F.lit(10), F.floor(walkable / 2.0)).cast("int").alias("walk_score"),
         grocery.alias("has_premium_grocery"),
         education.alias("has_education"),
         (grocery & education).alias("is_premium_zone"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    _J6_CACHE[key] = metrics
-    return metrics
 
 
 # ---------------------------------------------------------------------------

@@ -18,7 +18,7 @@ from etl_stack_spark.operators.similarity import (
     hyperplane,
     lsh_bucketed_topk,
 )
-from etl_stack_spark.queries import register
+from etl_stack_spark.queries import register, stores
 from etl_stack_spark.session import load_table
 
 _COS = (
@@ -33,43 +33,19 @@ _COS = (
 # encode JIT repeated for identical deterministic results. Production
 # builds an index ONCE and searches it many times (ann_maintenance keeps
 # it current); the registry now mirrors that: the normalized corpus, the
-# trained codebooks, and the encoded index are cached per
-# (session, sf_dir) — the lead-prep `_J6_CACHE` precedent (queries/
-# geo.py:264). Training stays deterministic (hash-seeded, fixed
+# trained codebooks, and the encoded index are session stores
+# (queries/stores.py). Training stays deterministic (hash-seeded, fixed
 # iterations), so cached-vs-fresh outputs are bit-identical and the
 # driver's rows-only checks are unaffected.
 # ---------------------------------------------------------------------------
-_ANN_CACHE: dict[tuple, object] = {}
-
-# The parity suite calls registry entries through an 8-thread pool, and
-# pq1/ivfpq1 share _ann_normalized: without the corpus_q-style
-# double-checked lock, concurrent first calls each persist their own
-# corpus copy and leak the losers (the exact hazard corpus_base
-# documents). One lock serializes builds only; hits stay lock-free.
-import threading as _threading
-
-# RLock: _pq_trained/_ivfpq_trained build _ann_normalized while holding it
-_ANN_LOCK = _threading.RLock()
 
 
 def clear_ann_cache() -> None:
-    """Unpersist and drop all cached ANN artifacts (test/debug hook)."""
-    with _ANN_LOCK:
-        for v in _ANN_CACHE.values():
-            df = v[-1] if isinstance(v, tuple) else v
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        _ANN_CACHE.clear()
+    """Unpersist and drop this module's session stores (test/debug hook)."""
+    stores.clear(__name__)
 
 
-def _ann_key(spark: SparkSession, sf_dir: str, what: str) -> tuple:
-    import os as _os
-
-    return (spark.sparkContext.applicationId, _os.path.abspath(sf_dir), what)
-
-
+@stores.session_store
 def _ann_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2-normalized (vec_id, embedding) corpus, persisted once per
     (session, sf_dir) — the shared input of the trained-ANN family."""
@@ -77,23 +53,14 @@ def _ann_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from etl_stack_spark.operators.similarity import l2_normalize
 
-    key = _ann_key(spark, sf_dir, "cn")
-    hit = _ANN_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with _ANN_LOCK:
-        hit = _ANN_CACHE.get(key)
-        if hit is not None:
-            return hit
-        cn = (
-            load_table(spark, sf_dir, "embeddings")
-            .select("vec_id", l2_normalize(F.col("embedding")).alias("embedding"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        _ANN_CACHE[key] = cn
-        return cn
+    return (
+        load_table(spark, sf_dir, "embeddings")
+        .select("vec_id", l2_normalize(F.col("embedding")).alias("embedding"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
 
 
+@stores.session_store
 def _lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, v double[], n, bucket) LSH staging frame over the
     embeddings corpus, persisted once per (session, sf_dir) — the
@@ -108,63 +75,37 @@ def _lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from etl_stack_spark.operators.similarity import lsh_bucket_frame
 
-    key = _ann_key(spark, sf_dir, "lshb")
-    hit = _ANN_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with _ANN_LOCK:
-        hit = _ANN_CACHE.get(key)
-        if hit is not None:
-            return hit
-        b = lsh_bucket_frame(
-            load_table(spark, sf_dir, "embeddings"), keep_cols=("label",)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _ANN_CACHE[key] = b
-        return b
+    return lsh_bucket_frame(
+        load_table(spark, sf_dir, "embeddings"), keep_cols=("label",)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
+@stores.session_store
 def _pq_trained(spark: SparkSession, sf_dir: str):
     """(codebooks, encoded corpus) — trained/encoded once per session.
     Sandbox dials m=4/k=8 (see pq1's comment); the eager checkpoint
     materializes the encode so searches never re-run it."""
     from etl_stack_spark.operators.similarity import pq_encode, pq_train
 
-    key = _ann_key(spark, sf_dir, "pq")
-    hit = _ANN_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with _ANN_LOCK:
-        hit = _ANN_CACHE.get(key)
-        if hit is not None:
-            return hit
-        cn = _ann_normalized(spark, sf_dir)
-        books = pq_train(cn, dim=64, m=4, k=8, n_iter=2, sample=2048)
-        codes = pq_encode(cn, books, dim=64).localCheckpoint(eager=True)
-        _ANN_CACHE[key] = (books, codes)
-        return books, codes
+    cn = _ann_normalized(spark, sf_dir)
+    books = pq_train(cn, dim=64, m=4, k=8, n_iter=2, sample=2048)
+    codes = pq_encode(cn, books, dim=64).localCheckpoint(eager=True)
+    return books, codes
 
 
+@stores.session_store
 def _ivfpq_trained(spark: SparkSession, sf_dir: str):
     """(centroids, codebooks, encoded index) — the IVFADC index as a
     materialized TABLE, built once per session (ann_maintenance is the
     streaming counterpart that keeps such an index current)."""
     from etl_stack_spark.operators.similarity import ivfpq_encode, ivfpq_train
 
-    key = _ann_key(spark, sf_dir, "ivfpq")
-    hit = _ANN_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with _ANN_LOCK:
-        hit = _ANN_CACHE.get(key)
-        if hit is not None:
-            return hit
-        cn = _ann_normalized(spark, sf_dir)
-        cents, books = ivfpq_train(
-            cn, dim=64, n_cells=8, m=4, k=8, n_iter=1, sample=2048
-        )
-        index = ivfpq_encode(cn, cents, books, dim=64).localCheckpoint(eager=True)
-        _ANN_CACHE[key] = (cents, books, index)
-        return cents, books, index
+    cn = _ann_normalized(spark, sf_dir)
+    cents, books = ivfpq_train(
+        cn, dim=64, n_cells=8, m=4, k=8, n_iter=1, sample=2048
+    )
+    index = ivfpq_encode(cn, cents, books, dim=64).localCheckpoint(eager=True)
+    return cents, books, index
 
 
 # ---------------------------------------------------------------------------

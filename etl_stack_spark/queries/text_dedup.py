@@ -27,7 +27,7 @@ from etl_stack_spark.operators.text import (
     simhash16,
     token_count,
 )
-from etl_stack_spark.queries import register
+from etl_stack_spark.queries import register, stores
 from etl_stack_spark.session import load_table
 
 # --- session MinHash stores: signatures → pairs → clusters ------------------
@@ -50,60 +50,31 @@ from etl_stack_spark.session import load_table
 # signatures staging table materialized once at ingest (the Dolma/
 # FineWeb "minhash signatures" intermediate). Store is computed over ALL
 # documents (the superset every consumer needs); subset consumers
-# semi-join it down inside minhash_near_duplicates. The parity suite
-# calls through an 8-thread pool, so build-and-persist is double-checked
-# under a lock (the corpus_q leak rationale).
-import threading as _threading
-
-_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-_CLUSTER_CACHE: dict[tuple[str, str], DataFrame] = {}
-_SEM_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-# RLock: cluster_base builds pair_base builds sig_base, nested under it
-_SIG_LOCK = _threading.RLock()
-
-
-def _os_path(sf_dir: str) -> str:
-    import os as _os
-
-    return _os.path.abspath(sf_dir)
+# semi-join it down inside minhash_near_duplicates. All four are session
+# stores (queries/stores.py).
 
 
 def clear_sig_cache() -> None:
     """Unpersist and drop the session signature/pair/cluster stores
     (test hook)."""
-    with _SIG_LOCK:
-        for cache in (_SIG_CACHE, _PAIR_CACHE, _CLUSTER_CACHE, _SEM_PAIR_CACHE):
-            for df in cache.values():
-                df.unpersist()
-            cache.clear()
+    stores.clear(__name__)
 
 
+@stores.session_store
 def sig_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted (doc_id, mh0..mh15) over ALL documents at the registry
     defaults (n=3 shingles, 16 hashes) — the session signature store."""
-    import os as _os
-
     from pyspark import StorageLevel
 
     from etl_stack_spark.operators.dedup import minhash_signatures
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    hit = _SIG_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with _SIG_LOCK:
-        hit = _SIG_CACHE.get(key)
-        if hit is not None:
-            return hit
-        docs = load_table(spark, sf_dir, "documents").repartition(
-            spark.sparkContext.defaultParallelism
-        )
-        sigs = minhash_signatures(docs).persist(StorageLevel.MEMORY_AND_DISK)
-        _SIG_CACHE[key] = sigs
-        return sigs
+    docs = load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
+    )
+    return minhash_signatures(docs).persist(StorageLevel.MEMORY_AND_DISK)
 
 
+@stores.session_store
 def pair_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted CONFIRMED near-dup pairs (doc_a, doc_b, est_jaccard)
     over ALL documents at the registry constants (n=3, 16 hashes, 8x2
@@ -114,24 +85,15 @@ def pair_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     its EXACT pair list by restricting this table with two semi-joins.
     Production materializes this once per dedup run (the FineWeb/Dolma
     duplicate-pairs intermediate); dd2 IS this table."""
-    key = (spark.sparkContext.applicationId, _os_path(sf_dir))
-    hit = _PAIR_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with _SIG_LOCK:
-        hit = _PAIR_CACHE.get(key)
-        if hit is not None:
-            return hit
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        docs = load_table(spark, sf_dir, "documents")
-        pairs = minhash_near_duplicates(
-            docs, threshold=0.5, sigs=sig_base(spark, sf_dir)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _PAIR_CACHE[key] = pairs
-        return pairs
+    docs = load_table(spark, sf_dir, "documents")
+    return minhash_near_duplicates(
+        docs, threshold=0.5, sigs=sig_base(spark, sf_dir)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
+@stores.session_store
 def cluster_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted (doc_id, cluster_id, is_duplicate) over ALL documents —
     the session dedup-clusters store (connected components over
@@ -139,26 +101,17 @@ def cluster_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     window and split1's leakage-safe fold both read it instead of
     re-running the CC loop per query, the way production splits read the
     written clusters table."""
-    key = (spark.sparkContext.applicationId, _os_path(sf_dir))
-    hit = _CLUSTER_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with _SIG_LOCK:
-        hit = _CLUSTER_CACHE.get(key)
-        if hit is not None:
-            return hit
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        from etl_stack_spark.operators.dedup import minhash_cluster_dedup
+    from etl_stack_spark.operators.dedup import minhash_cluster_dedup
 
-        docs = load_table(spark, sf_dir, "documents")
-        clusters = minhash_cluster_dedup(
-            docs, pairs=pair_base(spark, sf_dir)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _CLUSTER_CACHE[key] = clusters
-        return clusters
+    docs = load_table(spark, sf_dir, "documents")
+    return minhash_cluster_dedup(
+        docs, pairs=pair_base(spark, sf_dir)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
+@stores.session_store
 def sem_pair_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Persisted within-label semantic duplicate pairs (_ida < _idb,
     cosine ≥ 0.3) over ALL embeddings — the SemDeDup analog of
@@ -166,24 +119,14 @@ def sem_pair_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``label``) is intrinsic to each row, so the pair relation restricts
     exactly (semantic_dup_pairs' contract). sd1 and llm3's final
     SemDeDup stage both read it."""
-    key = (spark.sparkContext.applicationId, _os_path(sf_dir))
-    hit = _SEM_PAIR_CACHE.get(key)
-    if hit is not None:
-        return hit
-    with _SIG_LOCK:
-        hit = _SEM_PAIR_CACHE.get(key)
-        if hit is not None:
-            return hit
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        from etl_stack_spark.operators.dedup import semantic_dup_pairs
+    from etl_stack_spark.operators.dedup import semantic_dup_pairs
 
-        emb = load_table(spark, sf_dir, "embeddings")
-        pairs = semantic_dup_pairs(emb, threshold=0.3).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        _SEM_PAIR_CACHE[key] = pairs
-        return pairs
+    emb = load_table(spark, sf_dir, "embeddings")
+    return semantic_dup_pairs(emb, threshold=0.3).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
 
 # --- shared DuckDB fragments (match operators/text.py semantics) -----------

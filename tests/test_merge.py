@@ -937,7 +937,11 @@ def test_vacuum_tombstones_reclaims_under_carried_files(spark, tmp_path):
     carried = {p for p in state_before["files"] if p.startswith(first_dir + "/")}
     assert carried, "stats pruning must have carried files in the old dir"
 
-    deleted = vacuum_tombstones(pt, retention_ms=0)
+    # now_ms one past the newest tombstone: a wall-clock `now` can read the
+    # commit's own millisecond, and a tombstone aged 0 ms is not expired
+    deleted = vacuum_tombstones(
+        pt, retention_ms=0, now_ms=max(state_before["tombstones"].values()) + 1
+    )
     assert sorted(deleted) == sorted(dead)
     for rel in carried:  # live files untouched, in the same directory
         assert (root / rel).is_file()
@@ -962,7 +966,10 @@ def test_vacuum_tombstones_reclaims_under_carried_files(spark, tmp_path):
         spark.createDataFrame([("b", "h2")], "pk string, content_hash string"),
         keys=["pk"],
     )
-    deleted = vacuum_tombstones(t, retention_ms=0)
+    deleted = vacuum_tombstones(
+        t, retention_ms=0,
+        now_ms=max(DeltaLog(str(tmp_path / "t")).state()["tombstones"].values()) + 1,
+    )
     assert deleted and all(p.startswith(old_version + "/") for p in deleted)
     hist = t._read_manifest()["history"]
     assert old_version not in hist and t.current_version() in hist
