@@ -1,24 +1,22 @@
 """Benchmark harness: run the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) and print ONE JSON line.
 
-Per-query numbers are the MEDIAN of $SPARK_GRAFT_BENCH_RUNS (default 3)
-back-to-back runs — round-2's single-shot timings could not separate plan
-regressions from environment noise (VERDICT r2 task 1). A secondary tier
-runs every OTHER registered query once and reports ``full_sweep_total`` so
-a regression in an unsampled query can't hide until the driver samples it
-(VERDICT r2 task 8).
+Each headline number is the median of $SPARK_GRAFT_BENCH_RUNS (default 3)
+back-to-back runs of one query, after a warmup that builds the session
+stores and times each build. A sweep then runs every other registered
+query once, so a slow query outside the headline still shows up, and
+eight ``bench_*`` tiers time the streaming, merge, Delta-tail, WARC,
+file-skipping and ANN-maintenance paths. Samples, sweep and tiers go to
+a sidecar: BENCH_DETAIL.json on a full run, BENCH_SUBSET.json on a
+--queries run.
 
-The headline is SELF-ADJUDICATING (VERDICT r8 task 1): any query >2x its
-committed baseline triggers (a) an immediate cpu+shuffle probe pair
-recorded next to the flag and (b) an end-of-run resample after the sweep
-and streaming tiers — the flag is suppressed iff the resample median
-lands <=1.5x baseline, with all evidence under `headline_resamples` in
-the sidecar. BENCH_r08 shipped 3 false flags from a start-of-run
-shuffle-contention window; this closes that class.
+Queries are timed with ``.count()``, and Catalyst prunes some plans under
+it to a bare row count, so those read low (perfbench/README.md, "Not
+comparable with bench.py"). The numbers are a record, not a verdict: to
+judge a change against its parent, use perfbench's interleaved pairs or
+tools/microbench.py on one box.
 
-Usage: python bench.py [--queries=q1,q2] [--strict] [--no-sweep]
-  --strict   exit 1 when any headline query exceeds 2x its last-round time
-             AND survives the end-of-run resample
+Usage: python bench.py [--queries=q1,q2] [--no-sweep] [--no-stream]
 """
 
 from __future__ import annotations
@@ -75,304 +73,6 @@ HEADLINE = [
 ]
 
 
-def load_baseline() -> dict[str, float]:
-    """Per-query times from the newest BENCH_r{N}.json next to this file —
-    the regression bar: no headline query may exceed 2x its last-round
-    time (VERDICT round 1 set BENCH_r01 as the floor going forward)."""
-    import glob
-    import re
-
-    candidates: list[tuple[int, str]] = []
-    here = os.path.dirname(os.path.abspath(__file__))
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if m:
-            candidates.append((int(m.group(1)), path))
-    # the committed sidecar from the previous round outranks driver records —
-    # rounds 3/4 both recorded `parsed: null` and would pin the bar at r2
-    detail = os.path.join(here, "BENCH_DETAIL.json")
-    if os.path.exists(detail):
-        candidates.append((10**6, detail))
-    # newest round with a PARSED result wins — a crashed round records
-    # {"parsed": null} (BENCH_r03 did) and must not blank the baseline
-    for _, path in sorted(candidates, reverse=True):
-        try:
-            with open(path) as f:
-                data = json.load(f)
-            # driver wrapper nests the parsed line under "parsed"
-            data = data.get("parsed", data)
-            if isinstance(data, dict) and data.get("queries"):
-                return dict(data["queries"])
-        except (OSError, json.JSONDecodeError):
-            continue
-    return {}
-
-
-def box_speed_probe(spark) -> float:
-    """Deterministic CPU-bound calibration probe (VERDICT r7 task 1):
-    sha256+crc32 over 64M in-memory rows across all cores — no IO, no
-    shuffle, no data dependence — timed as the min of 3 runs (the first
-    absorbs codegen JIT). The result is a property of the BOX, not of
-    the engine code: every BENCH record carries it, and the headline is
-    reported both raw and normalized to the committed baseline's probe,
-    so the documented ±40% box-speed band (committed 15.86s vs driver
-    19.19s vs judge 18.52s on identical code, r7) stops making perf
-    claims unadjudicable. Policy (README): compare NORMALIZED totals
-    across rounds; the committed baseline is the (value, probe) pair in
-    BENCH_DETAIL.json, never a fastest-observed scalar."""
-    from pyspark.sql import functions as F
-
-    times = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(0, 64_000_000, 1, 32).select(
-            F.sum(F.crc32(F.sha2(F.col("id").cast("string"), 256))).alias("s")
-        ).collect()
-        times.append(time.perf_counter() - t0)
-    return round(min(times), 3)
-
-
-def shuffle_probe(spark) -> float:
-    """Exchange-bound calibration probe, the complement of
-    box_speed_probe: 16M rows hash-repartitioned 64 ways then summed —
-    dominated by serialization + memory bandwidth, the resources a
-    noisy VM neighbor contends for WITHOUT showing up in either CPU
-    steal or a compute-bound hash probe (observed: probe 20% FASTER
-    than baseline, steal 0.2%, yet every query ~30% slower — only a
-    bandwidth-shaped probe can tell that run apart from a plan
-    regression). Min of 3 runs, first absorbs codegen."""
-    from pyspark.sql import functions as F
-
-    times = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(0, 16_000_000, 1, 32).repartition(
-            64, (F.col("id") % 9973).cast("int")
-        ).agg(F.sum("id").alias("s")).collect()
-        times.append(time.perf_counter() - t0)
-    return round(min(times), 3)
-
-
-def cached_gib() -> float | None:
-    """Page-cache size from /proc/meminfo, recorded start and end. The
-    host was observed dropping the guest page cache to ~1 GiB; the
-    sf0.1 test data itself is tiny (17 MB), so this matters for shuffle
-    spill / temp IO rather than scans — it is an environment-health
-    signal, one more line of the record that lets a degraded-host
-    sample be told apart from a plan change."""
-    try:
-        with open("/proc/meminfo") as f:
-            for line in f:
-                if line.startswith("Cached:"):
-                    return round(int(line.split()[1]) / 1024 / 1024, 2)
-    except Exception:
-        return None
-    return None
-
-
-def read_probe_mb_s(sf_dir: str) -> float | None:
-    """Sequential-read throughput through the current cache state: read
-    the largest table file once, report MB/s (measured here: ~1 GB/s
-    warm, ~200 MB/s evicted). Same role as cached_gib: an environment
-    signal for the disk that shuffle spills share, not a data-scan
-    cost (the test tables are tiny)."""
-    try:
-        path = os.path.join(sf_dir, "lineitem.parquet")
-        size = os.path.getsize(path)
-        t0 = time.perf_counter()
-        with open(path, "rb") as f:
-            while f.read(8 << 20):
-                pass
-        dt = time.perf_counter() - t0
-        return round(size / 1048576 / dt, 1) if dt > 0 else None
-    except Exception:
-        return None
-
-
-def read_cpu_counters() -> list[int] | None:
-    """Aggregate jiffies from /proc/stat (user..steal). Returns None off
-    Linux; callers treat steal as unmeasurable then."""
-    try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        return [int(x) for x in parts[1:9]]
-    except Exception:
-        return None
-
-
-def steal_pct(start: list[int] | None, end: list[int] | None) -> float | None:
-    """CPU steal over the window, as % of all jiffies. Measured because
-    the box-speed probe CANNOT see it: this container is a VM on an
-    overcommitted host (measured 0-15%+ steal under full 32-core load,
-    varying minute-to-minute), so a start-of-run probe can catch a calm
-    window and the queries then run into a noisy one — which is exactly
-    the r7 ±40% band. Steal over the WHOLE run is the contention the run
-    actually experienced; a record of (value, probe, steal_pct) is
-    adjudicable where (value, probe) alone is not."""
-    if not start or not end:
-        return None
-    d = [b - a for a, b in zip(start, end)]
-    tot = sum(d)
-    return round(100.0 * d[7] / tot, 2) if tot > 0 else None
-
-
-def load_baseline_probe() -> float | None:
-    """The committed baseline's box-speed probe, from the same record
-    precedence as load_baseline()."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    detail = os.path.join(here, "BENCH_DETAIL.json")
-    try:
-        with open(detail) as f:
-            data = json.load(f)
-        data = data.get("parsed", data)
-        v = data.get("box_speed_probe_secs")
-        return float(v) if v else None
-    except (OSError, json.JSONDecodeError, TypeError, ValueError):
-        return None
-
-
-def load_baseline_shuffle_probe() -> float | None:
-    """The committed baseline's shuffle probe, same precedence as
-    load_baseline_probe(): the denominator of the run's shuffle-
-    contention ratio (r8 forensics proved the CPU probe alone cannot
-    adjudicate a bandwidth-contended window — BENCH_r08's CPU ratio was
-    1.19x while the lead-prep family ran 2-2.6x slow and the shuffle
-    probe read 1.94x; the ratio is now part of the official record,
-    not just the sidecar)."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        with open(os.path.join(here, "BENCH_DETAIL.json")) as f:
-            data = json.load(f)
-        data = data.get("parsed", data)
-        v = data.get("shuffle_probe_secs")
-        return float(v) if v else None
-    except (OSError, json.JSONDecodeError, TypeError, ValueError):
-        return None
-
-
-def load_baseline_cpus() -> int:
-    """Core count of the committed baseline run (32 for records that
-    predate the field). When a run's $SPARK_GRAFT_CPUS differs, the
-    cpu/shuffle probe RATIOS are core-count artifacts, not contention
-    (an 8-core run's probes read ~4x a 32-core baseline regardless of
-    box health — BENCH_r10_c8's 2.347 cpu probe was exactly this plus
-    real contention, and the PERF scaling block became noise; VERDICT
-    r10 task 8). Such runs skip ratio-based contended marking and the
-    blended normalization; the read-probe floor and steal%, which are
-    core-count independent, still govern."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        with open(os.path.join(here, "BENCH_DETAIL.json")) as f:
-            data = json.load(f)
-        data = data.get("parsed", data)
-        return int(data.get("cpus", 32))
-    except (OSError, json.JSONDecodeError, TypeError, ValueError):
-        return 32
-
-
-def load_baseline_read_probe() -> float | None:
-    """The committed baseline's disk read probe (MB/s), same precedence
-    as load_baseline_probe(): the reference point for the I/O-health
-    routing rule below."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        with open(os.path.join(here, "BENCH_DETAIL.json")) as f:
-            data = json.load(f)
-        data = data.get("parsed", data)
-        v = data.get("read_probe_mb_s")
-        return float(v) if v else None
-    except (OSError, json.JSONDecodeError, TypeError, ValueError):
-        return None
-
-
-# Floor for a HEALTHY disk read through an evicted page cache, from the
-# round-10 measured band: calm boxes read 201-1427 MB/s depending on
-# cache state; the one I/O-degraded host read 49 MB/s and inflated every
-# query a uniform ~1.3x (session-5 record, OPTIMIZATION_r10.md). 100 is
-# half the worst healthy reading and 2x the degraded one.
-READ_PROBE_FLOOR_MB_S = 100.0
-
-
-def read_probe_contended(rp: float | None, baseline_rp: float | None) -> bool:
-    """Whether the disk read probe marks the run I/O-degraded (routed to
-    BENCH_DETAIL_CONTENDED.json, barred from the committed baseline).
-
-    The probe is cache-state dependent (warm ~1 GB/s, evicted ~200 MB/s),
-    so a pure ratio-to-baseline bar would misroute a cold-cache run
-    measured against a warm-cache baseline (201/956 = 0.21x, healthy).
-    The governing term is therefore the ABSOLUTE floor; the ratio term
-    only tightens the bar further when the committed baseline itself was
-    recorded on a slower disk (keeps the rule meaningful if the baseline
-    box changes class)."""
-    if rp is None:
-        return False
-    bar = READ_PROBE_FLOOR_MB_S
-    if baseline_rp:
-        bar = min(bar, 0.5 * baseline_rp)
-    return rp < bar
-
-
-# Blended speed normalization (VERDICT r9 task 4). The CPU probe alone
-# over-corrects: two calm runs of identical r9 code normalized to 13.806s
-# and 18.573s (±35%) because headline queries are shuffle/IO-bound in a
-# way the arithmetic probe isn't. The rule is now a log-linear blend of
-# both probe ratios,
-#
-#     normalized = raw * (cpu_base/cpu)^A * (sh_base/sh)^B
-#
-# with (A, B) calibrated on the two committed same-code run pairs that
-# carry full (value, cpu, shuffle) triples:
-#   r9 code: calm 16.396s @ (1.032, 0.965)  vs driver 14.362s @ (0.798, 0.826)
-#   r8 code: calm 18.388s @ (0.904, 0.959)  vs driver 26.440s @ (1.074, 1.860)
-# Requiring each pair to normalize to the SAME number gives A=0.217,
-# B=0.492 — the shuffle probe carries ~70% of the weight, consistent
-# with the r8 forensics (a 1.19x CPU ratio could not explain the 2-2.6x
-# family band that its own 1.94x shuffle ratio did). Replay check:
-# tests/test_bench_normalization.py holds all four records to <=10%
-# within-pair agreement under this rule.
-NORM_CPU_EXP = 0.217
-NORM_SHUFFLE_EXP = 0.492
-
-
-def blended_normalized(
-    raw: float,
-    cpu: float | None,
-    shuffle: float | None,
-    cpu_base: float | None,
-    shuffle_base: float | None,
-) -> float | None:
-    """The official normalized headline value; None when the blend's
-    inputs are incomplete (a cpu-only record falls back to the legacy
-    linear rule at the call site, labeled as such)."""
-    if not (raw and cpu and shuffle and cpu_base and shuffle_base):
-        return None
-    return round(
-        raw
-        * (cpu_base / cpu) ** NORM_CPU_EXP
-        * (shuffle_base / shuffle) ** NORM_SHUFFLE_EXP,
-        3,
-    )
-
-
-def load_sweep_baseline() -> dict[str, float]:
-    """Per-query sweep times from the COMMITTED BENCH_DETAIL.json (read
-    before this run overwrites it). The sweep is single-run, so a >30%
-    delta vs this baseline triggers an automatic second sample (VERDICT
-    r6 task 2) — without it, ±40% VM-noise swings are indistinguishable
-    from real regressions and every round re-litigates them."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        with open(os.path.join(here, "BENCH_DETAIL.json")) as f:
-            data = json.load(f)
-        return {
-            k: v
-            for k, v in (data.get("full_sweep_queries") or {}).items()
-            if isinstance(v, (int, float)) and v > 0
-        }
-    except (OSError, json.JSONDecodeError):
-        return {}
-
-
 def time_query(fn, spark, sf_dir: str) -> tuple[float, int]:
     t0 = time.perf_counter()
     n = fn(spark, sf_dir).count()  # full execution, no driver-side data collect
@@ -380,16 +80,12 @@ def time_query(fn, spark, sf_dir: str) -> tuple[float, int]:
 
 
 def warm_stores(spark, sf_dir: str, requested: set[str] | None) -> dict[str, float]:
-    """Build + materialize each session store / trained index explicitly,
-    TIMED (VERDICT r10 task 2): the official line carries
-    ``store_build_secs`` so a reader of the record alone can compute
-    (build + N×consumer) vs (N×inline) without opening
-    OPTIMIZATION_r*.md. The stores are keyed per (applicationId, sf_dir)
-    — nothing survives the run; this only makes the build cost the
-    warmup already paid implicitly (inside the first consumer's first
-    sample) explicit and attributable. On a --queries subset run a store
-    is built only when a requested query consumes it (same rationale as
-    the warm-entry subset rule). Zero change to the timed region."""
+    """Build and materialize each session store / trained index, timing
+    each build, so the record prices the once-per-session cost that the
+    timed queries then read for free. Stores are keyed per session and
+    sf_dir, so nothing survives the run. With ``requested`` set (a
+    --queries run), a store is built only when a requested query reads
+    it. Returns {store: build secs}; a failed build is skipped."""
     from etl_stack_spark.queries import corpus_q
     from etl_stack_spark.queries import similarity as sim_q
     from etl_stack_spark.queries import text_dedup
@@ -447,9 +143,8 @@ def warm_stores(spark, sf_dir: str, requested: set[str] | None) -> dict[str, flo
 def bench_streaming(spark, sf_dir: str) -> dict:
     """Time the streaming lead-prep drain at bench scale: the sf props as
     a one-shot property feed through foreachBatch (radius join + rank +
-    hash-gated MERGE) into a fresh results table. Returns rows/sec so the
-    streaming path carries a round-over-round perf signal (VERDICT r4
-    task 8)."""
+    hash-gated MERGE) into a fresh results table. Returns props/sec, the
+    streaming path's throughput signal."""
     import shutil
     import tempfile
 
@@ -486,7 +181,7 @@ def bench_streaming_corpus(spark, sf_dir: str) -> dict:
     """Time the streaming corpus wash at bench scale: the sf documents as
     a one-shot feed through foreachBatch (gates + PII redaction +
     cross-batch first-seen dedup) into a fresh merge table. docs/sec is
-    the round-over-round signal for the curation streaming path."""
+    the curation streaming path's throughput signal."""
     import shutil
     import tempfile
 
@@ -517,11 +212,9 @@ def bench_streaming_corpus(spark, sf_dir: str) -> dict:
             "docs_per_sec": round(n_docs / secs, 1) if secs else None,
         }
         # same feed, cross-batch NEAR-dup enabled (incremental LSH state).
-        # TWO samples into fresh state dirs + a per-stage cost split
-        # (VERDICT r6 task 1: the tier's r5->r6 record halved with no code
-        # change in the path — a single cold sample could not adjudicate
-        # plan regression vs environment; now the record carries the
-        # spread AND where each second went)
+        # TWO samples into fresh state dirs + a per-stage cost split: one
+        # cold sample cannot tell a plan change from a noisy box, so the
+        # record carries the spread AND where each second went
         nd_samples = []
         nd_stage_runs = []
         nd_rows = None
@@ -555,7 +248,7 @@ def bench_streaming_corpus(spark, sf_dir: str) -> dict:
 def bench_warc_pipeline(
     spark, sf_dir: str, n_files: int = 32, recs_per_file: int = 2000
 ) -> dict:
-    """WARC→HTML→wash front-door tier (VERDICT r6 task 6): N multi-record
+    """WARC→HTML→wash front-door tier: N multi-record
     .warc.gz files (one gzip member per record, the CommonCrawl layout;
     a warcinfo record leading each file) → parse_warc_batch → HTML→text
     extraction → token-count quality gate. warc1/html1 pin correctness
@@ -640,7 +333,7 @@ def bench_warc_pipeline(
 
 
 def bench_stats_skipping(spark, sf_dir: str, files: int = 64) -> dict:
-    """Zone-map file-skipping tier (round 7): load orders into a
+    """Zone-map file-skipping tier: load orders into a
     Delta-logged merge table clustered on o_custkey (range partition +
     sort), then run the same narrow range read twice — once through
     ``read_where`` (stats-pruned file list) and once as a full-scan
@@ -697,7 +390,7 @@ def bench_stats_skipping(spark, sf_dir: str, files: int = 64) -> dict:
 
 
 def bench_partitioned_merge(spark, sf_dir: str) -> dict:
-    """Partitioned-MERGE tier (VERDICT r5 task 7): load orders into a
+    """Partitioned-MERGE tier: load orders into a
     16-partition PartitionedMergeTable, then merge an update touching ONE
     partition, and the SAME update into a whole-snapshot ParquetMergeTable.
     Two recorded signals of the 100 TB claim that a partition-scoped
@@ -744,9 +437,9 @@ def bench_partitioned_merge(spark, sf_dir: str) -> dict:
         # rewritten partition stays prunable for the narrow tier below
         stats = pt.merge(delta, keys=["bucket", "lkey"], cluster_by=["lkey"], cluster_files=8)
         part_secs = round(time.perf_counter() - t0, 3)
-        # narrow clustered delta (r8 tier): a contiguous lkey slice of ONE
+        # narrow clustered delta: a contiguous lkey slice of ONE
         # partition — per-file stats must prune most of the partition, so
-        # the rewrite is sub-partition (VERDICT r7 task 5)
+        # the rewrite is sub-partition
         # keys are zero-padded orderkeys: slice the bottom ~1/8 of the
         # key range, a contiguous run of the range-clustered files
         hi_key = rows.filter(F.col("bucket") == "3").agg(F.max("lkey")).first()[0]
@@ -781,9 +474,9 @@ def bench_partitioned_merge(spark, sf_dir: str) -> dict:
             "one_partition_merge_secs": part_secs,
             "snapshot_merge_secs": snap_secs,
             "wall_ratio_vs_snapshot": round(snap_secs / part_secs, 2) if part_secs else None,
-            # r8 sub-partition tier: stats-pruned merge of a narrow
+            # sub-partition tier: stats-pruned merge of a narrow
             # clustered delta — files_pruned/rows_rewritten are the
-            # scale-invariant signals (VERDICT r7 task 5)
+            # scale-invariant signals
             "narrow_delta_rows": n_narrow,
             "narrow_merge_secs": narrow_secs,
             "narrow_files_pruned": nstats["files_pruned"],
@@ -799,7 +492,7 @@ def bench_partitioned_merge(spark, sf_dir: str) -> dict:
 
 
 def bench_delta_tail(spark, sf_dir: str) -> dict:
-    """Delta-log streaming-source tier (VERDICT r7 task 2): load orders
+    """Delta-log streaming-source tier: load orders
     into a clustered 8-partition delta-logged table, commit 4 narrow
     merges, then TAIL the table in changes mode into a retractable
     per-bucket aggregate. Recorded signals: change rows/sec through the
@@ -890,8 +583,8 @@ def bench_delta_tail(spark, sf_dir: str) -> dict:
 
 
 def bench_ann_maintenance(spark, sf_dir: str) -> dict:
-    """Incremental ANN index maintenance tier (VERDICT r8 task 4; LSM
-    form recorded as the default since r9 task 3): load the sf
+    """Incremental ANN index maintenance tier, LSM (merge-on-read)
+    form: load the sf
     embeddings into a delta-logged vector table, train IVF-PQ once
     (frozen codebooks — excluded from the drain timing, like the warc
     tier's synthesis), bootstrap-drain a MergeOnReadANNIndex, then
@@ -1008,14 +701,13 @@ def bench_ann_maintenance(spark, sf_dir: str) -> dict:
 
 
 def bench_interval_join(spark, sf_dir: str) -> dict:
-    """Watermarked stream-stream interval-join tier (VERDICT r5 task 8):
+    """Watermarked stream-stream interval-join tier:
     the sf events split into an impression feed (views) and a click feed
     (clicks/purchases), joined per user within 10 minutes of event time
     through interval_join in a one-shot availableNow drain. State is
     bounded by watermark+interval eviction — O(rate x 40min of event
     time), never O(stream) — which is the property this tier watches:
-    events/sec collapsing round-over-round means state stopped
-    evicting."""
+    events/sec collapsing between runs means state stopped evicting."""
     import shutil
     import tempfile
 
@@ -1051,7 +743,7 @@ def bench_interval_join(spark, sf_dir: str) -> dict:
         )
         q.awaitTermination(600)
         secs = round(time.perf_counter() - t0, 3)
-        # state-size note (VERDICT r5 #8): buffered-row bytes from the
+        # state-size note: buffered-row bytes from the
         # join's state store — the number that must track rate x
         # (watermark + interval), never stream length
         state = None
@@ -1080,9 +772,8 @@ def main() -> None:
 
     args = sys.argv[1:]
     subset = any(a.startswith("--queries") for a in args)
-    strict = "--strict" in args
-    stream = "--no-stream" not in args and os.environ.get("SPARK_GRAFT_BENCH_STREAM", "1") != "0"
-    sweep = "--no-sweep" not in args and os.environ.get("SPARK_GRAFT_BENCH_SWEEP", "1") != "0"
+    stream = "--no-stream" not in args
+    sweep = "--no-sweep" not in args
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -1097,37 +788,15 @@ def main() -> None:
             if unknown:
                 sys.exit(f"error: unknown queries {unknown}; known: {sorted(registry)}")
 
-    # warmup: a small-table scan plus ONE pass of the flagship geo query
-    # at the smallest SF — absorbs JVM startup AND the join/window codegen
-    # JIT that otherwise inflates every first timed sample (medians then
-    # measure steady state, the quantity the per-query medians claim)
+    # Warmup, outside every timed region. The small scan absorbs JVM
+    # start-up. warm_stores builds and times each session store, and one
+    # pass of each entry below builds what it does not (the lead-prep
+    # views, the trained PQ/IVF-PQ indexes, bpe1/ql2 training) and
+    # absorbs join and window codegen. Each median then measures the
+    # read a pipeline repeats, not a build it pays once per session.
+    # Stores are keyed on sf_dir, so the warmup runs at the bench scale.
+    # A --queries run warms only what its own queries read.
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-    # at the BENCH sf, not sf0.001: the lead-prep family shares one
-    # persisted match stream per sf_dir, and warming the wrong sf left its
-    # one-time materialization inside the first timed j6 sample (7.4s
-    # spikes in the spread; medians survived but the claim is steady state)
-    # all three persisted family views (match stream + rank + metrics +
-    # distance) materialize here, so the medians measure steady state.
-    # The trained-ANN family (VERDICT r9 task 2) joins the warmup for the
-    # same reason: codebook training + corpus encode happen once per
-    # session (the production index-build), so the timed pq1/ivfpq1
-    # entries measure SEARCH, not the build they'd never repeat.
-    # dd2/dd6 join the list for the session MinHash stores
-    # (queries/text_dedup.py::sig_base/pair_base/cluster_base — the
-    # signatures, duplicate-pairs, and dedup-clusters staging tables a
-    # production wash materializes once per dedup run): the first dd2
-    # call builds signatures + confirmed pairs, the first dd6 call the
-    # cluster assignment, and every consumer (dd2/dd6/dd8/split1/llm1-3)
-    # reads those tables — timed entries measure what a steady-state
-    # pipeline pays, not the per-call re-banding it would never repeat.
-    # On a --queries subset run, only warm entries the subset will time:
-    # warming a session store no requested query reads is pure cost (the
-    # adjudication e2es spawn single-query subset runs — each was paying
-    # the full 9-entry warmup, ~half the test's 100s wall).
-    # Since r11 each store build is timed explicitly (warm_stores) and the
-    # official line carries store_build_secs + warmup_total_secs (VERDICT
-    # r10 task 2): the build work was already outside the timed region —
-    # now its cost is part of the record instead of only this comment.
     warm_t0 = time.perf_counter()
     store_build_secs = warm_stores(spark, sf_dir, set(names) if subset else None)
     if store_build_secs:
@@ -1155,104 +824,22 @@ def main() -> None:
                 print(f"# warmup skipped: {e}", file=sys.stderr)
     warmup_total_secs = round(time.perf_counter() - warm_t0, 3)
 
-    # box-speed calibration (VERDICT r7 task 1): measured AFTER warmup
-    # (JVM up, codegen hot) so the probe times the box, not startup
-    probe_secs = None
-    try:
-        probe_secs = box_speed_probe(spark)
-        print(f"# box speed probe: {probe_secs}s", file=sys.stderr)
-    except Exception as e:  # calibration must never fail the bench
-        print(f"# box probe skipped: {e}", file=sys.stderr)
-    shuffle_probe_secs = None
-    try:
-        shuffle_probe_secs = shuffle_probe(spark)
-        print(f"# shuffle probe: {shuffle_probe_secs}s", file=sys.stderr)
-    except Exception as e:
-        print(f"# shuffle probe skipped: {e}", file=sys.stderr)
-    cpu_at_start = read_cpu_counters()
-    cache_start = cached_gib()
-
-    baseline = load_baseline()
-    # self-test hook: SPARK_GRAFT_BENCH_FAULT="name:factor,name:factor"
-    # multiplies the MEASURED headline time (never the resample) — the
-    # deterministic way to exercise the flag->probe->resample->suppress
-    # machinery end-to-end (a contended window can't be summoned on
-    # demand; this container's CPU/bandwidth headroom shrugged off 96
-    # deliberate hog processes). Production runs never set it.
-    fault: dict[str, float] = {}
-    for part in os.environ.get("SPARK_GRAFT_BENCH_FAULT", "").split(","):
-        if ":" in part:
-            qn, factor = part.rsplit(":", 1)
-            fault[qn.strip()] = float(factor)
-    # companion self-test hook: SPARK_GRAFT_BENCH_BASELINE_OVERRIDE=
-    # "name:secs,..." replaces the committed baseline for those queries.
-    # Why (VERDICT r9 task 1): the adjudication e2e used to assert the
-    # un-faulted sf0.001 resample lands under 1.5x the REAL sf0.1
-    # baseline — false for fixed-overhead queries on a busy box (llm1's
-    # 2.541s baseline vs a 7.29s contended resample). A synthetic
-    # baseline sized orders above any plausible resample makes the
-    # suppression assertion contention-immune while still exercising
-    # the full flag→probe→resample→suppress machinery. Like the fault
-    # map, an overridden run is echoed into the record and barred from
-    # the committed sidecar.
-    baseline_override: dict[str, float] = {}
-    for part in os.environ.get("SPARK_GRAFT_BENCH_BASELINE_OVERRIDE", "").split(","):
-        if ":" in part:
-            qn, secs = part.rsplit(":", 1)
-            baseline_override[qn.strip()] = float(secs)
-    baseline.update(baseline_override)
     timings: dict[str, float] = {}
     spreads: dict[str, list[float]] = {}
-    flag_probes: dict[str, dict] = {}
     for name in names:
         samples = []
         n = 0
         for _ in range(runs):
             dt, n = time_query(registry[name], spark, sf_dir)
-            dt *= fault.get(name, 1.0)
             samples.append(round(dt, 3))
         timings[name] = round(statistics.median(samples), 3)
         spreads[name] = samples
         print(f"# {name}: median {timings[name]}s of {samples} ({n} rows)", file=sys.stderr)
-        # immediate environment probe AT FLAG TIME (VERDICT r8 task 1):
-        # a >2x flag triggers a cpu+shuffle probe pair right now, while
-        # whatever slowed the samples is plausibly still happening —
-        # recorded next to the flag so the adjudicator sees the
-        # environment the slow samples ran in, not the start-of-run one
-        base = baseline.get(name)
-        if base and base > 0 and timings[name] > 2.0 * base:
-            try:
-                flag_probes[name] = {
-                    "cpu": box_speed_probe(spark),
-                    "shuffle": shuffle_probe(spark),
-                }
-                print(f"# flag-probe {name}: {flag_probes[name]}", file=sys.stderr)
-            except Exception as e:
-                print(f"# flag-probe {name} skipped: {e}", file=sys.stderr)
-
     total = round(sum(timings.values()), 3)
-    regressions = {
-        name: {"now": t, "baseline": baseline[name]}
-        for name, t in timings.items()
-        if name in baseline and baseline[name] > 0 and t > 2.0 * baseline[name]
-    }
-    for name, r in regressions.items():
-        print(
-            f"# REGRESSION {name}: {r['now']}s > 2x baseline {r['baseline']}s",
-            file=sys.stderr,
-        )
 
-    full_sweep_total = None
-    sweep_resamples: dict[str, list[float]] = {}
+    sweep_timings: dict[str, float] = {}
     if sweep:
-        # secondary tier: every registered query NOT in the headline set,
-        # single run each — catches regressions the headline sample misses.
-        # Any query drifting >30% from the committed baseline (either
-        # direction — an unexplained speedup is also a claim) gets a
-        # SECOND sample and records the min: one cold outlier can no
-        # longer masquerade as a trend (VERDICT r6 task 2).
-        sweep_baseline = load_sweep_baseline()
-        sweep_timings: dict[str, float] = {}
+        # every registered query outside the headline, one sample each
         for name in sorted(registry):
             if name in timings:
                 continue
@@ -1262,19 +849,8 @@ def main() -> None:
                 print(f"# SWEEP-ERROR {name}: {e}", file=sys.stderr)
                 sweep_timings[name] = -1.0
                 continue
-            base = sweep_baseline.get(name)
-            if base and base > 0.1 and abs(dt - base) > 0.3 * base:
-                dt2, _ = time_query(registry[name], spark, sf_dir)
-                sweep_resamples[name] = [round(dt, 3), round(dt2, 3)]
-                dt = min(dt, dt2)
-                print(
-                    f"# sweep resample {name}: {sweep_resamples[name]} "
-                    f"(baseline {base}s) -> {round(dt, 3)}s",
-                    file=sys.stderr,
-                )
             sweep_timings[name] = round(dt, 3)
             print(f"# sweep {name}: {sweep_timings[name]}s ({n} rows)", file=sys.stderr)
-        full_sweep_total = round(sum(t for t in sweep_timings.values() if t > 0), 3)
 
     # (sidecar key, tier, stderr label, stderr error tag)
     tier_specs = [
@@ -1297,68 +873,11 @@ def main() -> None:
                 tiers[key] = {"error": f"{type(e).__name__}: {e}"[:200]}
                 print(f"# {tag}-ERROR {tiers[key]['error']}", file=sys.stderr)
 
-    # end-of-run self-adjudication (VERDICT r8 task 1): every >2x headline
-    # flag gets a RESAMPLE now — after the sweep and streaming tiers, when
-    # a start-of-run contention window has typically passed — plus a final
-    # probe pair. The flag is suppressed iff the resample median lands
-    # <=1.5x baseline (environmental, with the evidence recorded under
-    # `headline_resamples`), and the committed per-query time takes the
-    # better median (the sweep's min rule: a contended sample must not
-    # become next round's baseline). A flag whose resample STAYS >1.5x is
-    # a real regression and survives.
-    headline_resamples: dict[str, dict] = {}
-    if regressions:
-        end_probes = None
-        try:
-            end_probes = {"cpu": box_speed_probe(spark), "shuffle": shuffle_probe(spark)}
-            print(f"# end-of-run probes: {end_probes}", file=sys.stderr)
-        except Exception as e:
-            print(f"# end-of-run probes skipped: {e}", file=sys.stderr)
-        for name in list(regressions):
-            try:
-                rs = []
-                for _ in range(runs):
-                    dt, _n = time_query(registry[name], spark, sf_dir)
-                    rs.append(round(dt, 3))
-            except Exception as e:  # a resample failure leaves the flag standing
-                print(f"# resample {name} failed: {e}", file=sys.stderr)
-                continue
-            med2 = round(statistics.median(rs), 3)
-            base = regressions[name]["baseline"]
-            suppressed = med2 <= 1.5 * base
-            headline_resamples[name] = {
-                "original_median": regressions[name]["now"],
-                "baseline": base,
-                "flag_probes": flag_probes.get(name),
-                "end_probes": end_probes,
-                "resample": rs,
-                "resample_median": med2,
-                "suppressed": suppressed,
-            }
-            print(
-                f"# headline resample {name}: {rs} -> median {med2}s "
-                f"(baseline {base}s, {'SUPPRESSED' if suppressed else 'CONFIRMED'})",
-                file=sys.stderr,
-            )
-            if med2 < timings[name]:
-                # adopt the better median, and keep the regression record
-                # self-consistent: a CONFIRMED flag's "now" must equal the
-                # committed per-query time (ADVICE r9: the evidence and the
-                # timing previously disagreed on the same record)
-                timings[name] = med2
-                if not suppressed:
-                    regressions[name]["now"] = med2
-            if suppressed:
-                del regressions[name]
-        total = round(sum(timings.values()), 3)
-
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    # The driver tails stdout with a bounded buffer: round 4's single line
-    # (headline + samples + ~80-query sweep) overflowed it and the official
-    # record got `parsed: null` (VERDICT r4 task 1). Contract now: the FINAL
-    # stdout line is a compact JSON object — headline total + per-query
-    # medians only — and everything else (samples, sweep, regressions) goes
-    # to BENCH_DETAIL.json next to this script plus stderr.
+    # The final stdout line stays compact (headline total, per-query
+    # medians, warmup accounting, core count) so a reader that tails
+    # stdout through a bounded buffer can still parse it. Samples, the
+    # sweep and the tiers go to the sidecar and stderr.
     out = {
         "metric": "headline_queries_total",
         "value": total,
@@ -1366,164 +885,26 @@ def main() -> None:
         "queries": timings,
         "sf": float(sf) if sf else None,
         "runs_per_query": runs,
-        # warmup accounting (VERDICT r10 task 2): what the session-store /
-        # trained-index builds cost, so (build + N×consumer) vs (N×inline)
-        # is computable from this record alone. Timed entries unchanged.
+        # what the session-store builds cost, so (build + N x consumer)
+        # against (N x inline) is computable from this line alone
         "store_build_secs": store_build_secs,
         "warmup_total_secs": warmup_total_secs,
-        # core count the run actually used (VERDICT r10 task 8: low-core
-        # scaling records must be self-describing)
         "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
     }
-    # raw AND speed-normalized headline: normalized = what this box's
-    # total would read on the committed baseline's box (the policy that
-    # makes rounds comparable across the ±40% box-speed band). Since r10
-    # the rule is the calibrated cpu+shuffle blend (blended_normalized) —
-    # the cpu-only linear rule over-corrected by ±35% between calm runs
-    # of identical code; it survives only as the labeled fallback for
-    # records missing a shuffle probe.
-    baseline_probe = load_baseline_probe()
-    baseline_shuffle = load_baseline_shuffle_probe()
-    # probe ratios only adjudicate same-core-count runs (see
-    # load_baseline_cpus): a $SPARK_GRAFT_CPUS scaling run keeps its raw
-    # probes in the record but never normalizes with them
-    cpus_match_baseline = out["cpus"] == load_baseline_cpus()
-    if not cpus_match_baseline:
-        out["probe_ratios_suppressed"] = "cpus differ from baseline"
-    if probe_secs:
-        out["box_speed_probe_secs"] = probe_secs
-        if baseline_probe:
-            out["baseline_probe_secs"] = baseline_probe
-    if shuffle_probe_secs:
-        out["shuffle_probe_secs"] = shuffle_probe_secs
-        # the shuffle-contention ratio is part of the OFFICIAL record,
-        # not just the sidecar (VERDICT r8 task 1 / "what's wrong" #2):
-        # >1.5x marks the run `contended` — r8's worked example is a run
-        # whose CPU ratio (1.19x) could not explain a 2-2.6x family band
-        # that its own 1.94x shuffle ratio did
-        if baseline_shuffle:
-            out["baseline_shuffle_probe_secs"] = baseline_shuffle
-            out["shuffle_ratio"] = round(shuffle_probe_secs / baseline_shuffle, 2)
-            if out["shuffle_ratio"] > 1.5 and cpus_match_baseline:
-                out["contended"] = True
-    blended = (
-        blended_normalized(
-            total, probe_secs, shuffle_probe_secs, baseline_probe, baseline_shuffle
-        )
-        if cpus_match_baseline
-        else None  # probe ratios are core-count artifacts on a low-core run
-    )
-    if blended is not None:
-        out["normalized_value"] = blended
-        out["normalized_rule"] = "cpu^%.3f*shuffle^%.3f" % (
-            NORM_CPU_EXP,
-            NORM_SHUFFLE_EXP,
-        )
-        # transparency band: the raw value scaled by each probe ratio
-        # alone — the spread the blend is splitting
-        r_cpu = baseline_probe / probe_secs
-        r_sh = baseline_shuffle / shuffle_probe_secs
-        out["normalized_band"] = [
-            round(total * min(r_cpu, r_sh), 3),
-            round(total * max(r_cpu, r_sh), 3),
-        ]
-    elif probe_secs and baseline_probe and cpus_match_baseline:
-        out["normalized_value"] = round(total * baseline_probe / probe_secs, 3)
-        out["normalized_rule"] = "cpu-only-legacy"
-    # whole-run CPU steal: the contention the run actually experienced
-    # (the probe can't see it — see steal_pct's docstring)
-    run_steal = steal_pct(cpu_at_start, read_cpu_counters())
-    if run_steal is not None:
-        out["steal_pct"] = run_steal
-        if run_steal > 5:  # README's documented contended-sample bar
-            out["contended"] = True
-        print(f"# cpu steal over run: {run_steal}%", file=sys.stderr)
-    if cache_start is not None:
-        out["cached_gib_start"] = cache_start
-        cache_end = cached_gib()
-        if cache_end is not None:
-            out["cached_gib_end"] = cache_end
-    rp = read_probe_mb_s(sf_dir)
-    if rp is not None and rp < READ_PROBE_FLOOR_MB_S:
-        # one calm-window retry (VERDICT r10 task 8): a transient I/O
-        # stall at probe time must not condemn a whole healthy run; a
-        # genuinely degraded disk fails both probes and routes as before
-        time.sleep(20)
-        rp2 = read_probe_mb_s(sf_dir)
-        if rp2 is not None:
-            out["read_probe_retry_mb_s"] = rp2
-            rp = max(rp, rp2)
-    if rp is not None:
-        out["read_probe_mb_s"] = rp
-        print(f"# read probe: {rp} MB/s", file=sys.stderr)
-        # I/O-health routing (round-10 session-5 gap): an I/O-degraded
-        # host inflates every query a uniform ~1.3x without moving the
-        # cpu or shuffle probes (observed: 49 MB/s, cpu probe BETTER
-        # than baseline) — such a run must be routed wholesale to the
-        # contended sidecar, not flagged query-by-query
-        baseline_rp = load_baseline_read_probe()
-        if baseline_rp:
-            out["read_ratio"] = round(rp / baseline_rp, 2)
-        if read_probe_contended(rp, baseline_rp):
-            out["contended"] = True
-            print(
-                f"# read probe {rp} MB/s below the I/O-health bar "
-                f"-> run marked contended",
-                file=sys.stderr,
-            )
-    if headline_resamples:
-        # suppressed count surfaces in the official line so the driver
-        # record shows adjudication HAPPENED, not just its outcome
-        out["suppressed_regression_count"] = sum(
-            1 for r in headline_resamples.values() if r["suppressed"]
-        )
-    if fault:
-        # a fault-injected run is a self-test, never evidence: echo the
-        # map into the official line AND the sidecar, and route the run
-        # away from the committed baseline below (ADVICE r9: a <=2x fault
-        # previously slipped past the flag machinery straight into
-        # BENCH_DETAIL.json and would have become next round's baseline)
-        out["fault_injected"] = dict(fault)
-    if baseline_override:
-        out["baseline_override"] = dict(baseline_override)
     detail = {**out, "samples": spreads, "warmup_entry_secs": warm_entry_secs}
-    if full_sweep_total is not None:
-        detail["full_sweep_total"] = full_sweep_total
+    if sweep:
+        detail["full_sweep_total"] = round(sum(t for t in sweep_timings.values() if t > 0), 3)
         detail["full_sweep_queries"] = sweep_timings
-        if sweep_resamples:
-            detail["sweep_resamples"] = sweep_resamples
     detail.update(tiers)
-    if headline_resamples:
-        detail["headline_resamples"] = headline_resamples
-    if regressions:
-        detail["regressions"] = regressions
-        out["regression_count"] = len(regressions)
-    here = os.path.dirname(os.path.abspath(__file__))
-    # a --queries subset is a debug run: it must NOT clobber the sidecar,
-    # which doubles as the committed baseline load_baseline() reads.
-    # Neither may a CONTENDED run (shuffle_ratio >1.5x, steal >5%, or any
-    # suppressed flag): the r8 driver run overwrote the calm 18.4s/0.96s
-    # baseline with its contended 26.4s/1.86s record and the inflated
-    # baselines would have weakened every next-round regression bar —
-    # contended evidence goes to BENCH_DETAIL_CONTENDED.json instead,
-    # leaving the committed (value, probe) baseline pair intact
-    # A fault-injected or baseline-overridden run is likewise barred from
-    # the committed baseline regardless of whether it tripped any flag.
-    if subset or fault or baseline_override:
-        sidecar = "BENCH_SUBSET.json"
-    elif out.get("contended") or out.get("suppressed_regression_count"):
-        sidecar = "BENCH_DETAIL_CONTENDED.json"
-    else:
-        sidecar = "BENCH_DETAIL.json"
+    # a --queries run is partial: it must not replace the full record
+    sidecar = "BENCH_SUBSET.json" if subset else "BENCH_DETAIL.json"
     try:
-        with open(os.path.join(here, sidecar), "w") as f:
+        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), sidecar), "w") as f:
             json.dump(detail, f, indent=1)
     except OSError as e:  # the sidecar is best-effort; never lose the headline
         print(f"# {sidecar} not written: {e}", file=sys.stderr)
     print(f"# detail: {json.dumps(detail)}", file=sys.stderr)
     print(json.dumps(out))
-    if strict and regressions:
-        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -1,12 +1,14 @@
 """Dump `.explain("formatted")` for a set of registered queries in ONE
 Spark session (python -m etl_stack_spark explain pays a fresh JVM per
-query; this amortizes it for the round's plans/rNN deliverable).
+query; this amortizes it over many queries). Dumps are not committed:
+regenerate them into a scratch directory when a change needs before and
+after plans.
 
-    python tools/dump_plans.py --out plans/r10 --suffix _after q1 q2 ...
-    python tools/dump_plans.py --out plans/r10 --suffix _before --all-touched
+    python tools/dump_plans.py --out /tmp/plans --suffix _after q1 q2 ...
+    python tools/dump_plans.py --out /tmp/plans --suffix _before --all-touched
 
 Plans are captured at sf0.01 (the explain CLI's default): plan SHAPE is
-what the deliverable pins; AQE-final shapes at other SFs are recorded by
+what a dump shows; AQE-final shapes at other SFs are recorded by
 the bench sidecars instead.
 """
 
