@@ -6,9 +6,9 @@ engine live in ``etl_stack_spark.functions.udfs`` (accent-normalize parity,
 difflib fuzzy parity, AI-effect providers) and each has a native
 approximation documented next to it.
 
-Functions that must agree byte-for-byte with the DuckDB oracle keep a
-``*_sql`` twin in ``oracle_sql.py`` — same logic rendered in DuckDB
-dialect; tests pin the pair.
+A function that must agree byte-for-byte with DuckDB is pinned by the
+oracle SQL of each query that uses it (``queries.register(name, oracle)``),
+which restates the same logic in DuckDB dialect.
 """
 
 from etl_stack_spark.functions.cleaners import (  # noqa: F401

@@ -5,7 +5,7 @@ P2, P13, P15, P19, P27, P28 from SURVEY.md §2.2 — all pure Column exprs.
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -47,15 +47,6 @@ def case_contains(col: Column, rules: Sequence[tuple[str, int]], default: int) -
     expr = F.lit(default)
     for needle, value in reversed(rules):
         expr = F.when(F.instr(lowered, needle) > 0, F.lit(value)).otherwise(expr)
-    return expr
-
-
-def map_lookup(col: Column, mapping: Mapping[str, str], default: Column | None = None) -> Column:
-    """Literal-map lookup (P15/P16 brand & label maps): compiles to a
-    broadcast-free CASE chain — fine for curated lists of ≲1000 entries."""
-    expr = default if default is not None else F.lit(None).cast("string")
-    for k, v in reversed(list(mapping.items())):
-        expr = F.when(col == k, F.lit(v)).otherwise(expr)
     return expr
 
 

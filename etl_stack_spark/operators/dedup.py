@@ -527,7 +527,6 @@ def incremental_minhash_dedup(
     n: int = 3,
     n_minhash: int = N_MINHASH,
     band_size: int = BAND_SIZE,
-    stage_secs: dict | None = None,
 ) -> DataFrame:
     """Cross-batch near-dup dedup: dd2's MinHash+LSH made INCREMENTAL.
 
@@ -555,19 +554,8 @@ def incremental_minhash_dedup(
     Docs shorter than ``n`` tokens have no signature and pass through
     (not near-dup-detectable, same contract as minhash_signatures).
 
-    ``stage_secs`` (optional) accumulates per-stage wall seconds into
-    the given dict under ``signatures`` / ``probe`` / ``state_append``
-    — the stage boundaries are the eager actions the plan already
-    takes, so instrumentation adds no extra jobs (VERDICT r6 task 1:
-    the tier's cost split must be recordable).
-
     Returns the kept rows of ``new_docs`` (original columns).
     """
-    import time as _time
-
-    def _mark(key: str, t0: float) -> None:
-        if stage_secs is not None:
-            stage_secs[key] = stage_secs.get(key, 0.0) + (_time.perf_counter() - t0)
     # Evaluation discipline, streaming-safe: ``sigs`` is persist()ed and
     # fully consumed INSIDE this function (every decision materializes
     # here, the losers/survivors sever lineage via EAGER ids-only local
@@ -581,9 +569,7 @@ def incremental_minhash_dedup(
     sigs = minhash_signatures(new_docs, text_col, id_col, n=n, n_minhash=n_minhash)
     sigs.persist()
     try:
-        t0 = _time.perf_counter()
         sig_ids = sigs.select(id_col).localCheckpoint(eager=True)
-        _mark("signatures", t0)
 
         # in-batch: pairwise min-id survivor
         in_pairs = lsh_candidate_pairs(sigs, id_col, band_size=band_size)
@@ -628,22 +614,18 @@ def incremental_minhash_dedup(
                 .distinct()
             )
             surv_sigs = surv_sigs.join(cross_losers, id_col, "left_anti")
-        t0 = _time.perf_counter()
         surv_ids = surv_sigs.select(id_col).localCheckpoint(eager=True)
-        _mark("probe", t0)
 
         # constant hash gate => an existing (band_key, doc) row is always
         # "unchanged": replays and re-banding are free no-ops
         append = banded(sigs.join(surv_ids, id_col, "left_semi")).withColumn(
             "_gate", F.lit("v1")
         )
-        t0 = _time.perf_counter()
         if state.exists():
             state.merge(append, keys=["band_key", id_col], hash_col="_gate",
                         audit_ts_col=None)
         else:
             state.overwrite(append)
-        _mark("state_append", t0)
     finally:
         sigs.unpersist()
     return new_docs.join(surv_ids, id_col, "left_semi").unionByName(

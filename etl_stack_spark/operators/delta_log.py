@@ -482,24 +482,6 @@ def live_files_payload(
     return out
 
 
-def partitioned_snapshot_files(
-    root: str, parts: dict[str, str], partition_col: str
-) -> list[tuple]:
-    """(relative_path, size, mtime_ms, stats_json, partitionValues) for
-    every parquet file across a partitioned table's LIVE directories —
-    the full-set payload commit() diffs incrementally (untouched
-    partitions' files are already live, so only rewritten partitions
-    produce add/remove actions). O(partitions) listdirs driver-side;
-    the partition list is small by design (loader batches touch one
-    client / a few days)."""
-    out: list[tuple] = []
-    for value, version_dir in parts.items():
-        pvals = {partition_col: value}
-        for f in snapshot_parquet_files(root, version_dir):
-            out.append(f + (pvals,))
-    return out
-
-
 def snapshot_parquet_files(
     root: str, version_dir: str
 ) -> list[tuple[str, int, int, str | None]]:

@@ -1157,31 +1157,6 @@ def dedup_status_results(
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
-def status_lifecycle_update(
-    table: ParquetMergeTable,
-    keys: Sequence[str],
-    results: DataFrame,
-    status_col: str = "status",
-    error_col: str = "error_message",
-) -> None:
-    """M5: bulk status transition (PENDING → SYNCED/FAILED with message)
-    driven by a results DataFrame carrying keys + new status (+ error)."""
-    base_version = table.current_version()
-    target = table.read(base_version)
-    r = results.select(
-        *keys, F.col(status_col).alias("_new_status"),
-        (F.col(error_col) if error_col in results.columns else F.lit(None).cast("string")).alias("_new_error"),
-    )
-    r = dedup_status_results(r, keys, "_new_status", "_new_error")
-    joined = target.join(r, on=list(keys), how="left")
-    out = joined.withColumn(
-        status_col, F.coalesce(F.col("_new_status"), F.col(status_col))
-    )
-    if error_col in target.columns:
-        out = out.withColumn(error_col, F.coalesce(F.col("_new_error"), F.col(error_col)))
-    table.overwrite(out.drop("_new_status", "_new_error"), expected_version=base_version)
-
-
 def diff_versions(
     table: ParquetMergeTable,
     old_version: str | int,

@@ -36,7 +36,6 @@ def corpus_clean_batch_fn(
     keep_langs: tuple[str, ...] = ("en", "es", "de", "fr"),
     lsh_state: ParquetMergeTable | None = None,
     near_dup_threshold: float = 0.5,
-    stage_secs: dict | None = None,
     metrics: dict | None = None,
 ):
     """Build the foreachBatch callback: gate, redact, dedup, merge.
@@ -48,11 +47,6 @@ def corpus_clean_batch_fn(
     fingerprint differs (``operators/dedup.py:incremental_minhash_dedup``
     — replay-idempotent like everything else in this flow).
 
-    ``stage_secs`` (optional) accumulates per-stage wall seconds across
-    batches: ``gates`` (score/redact/first-seen materialization),
-    ``signatures``/``probe``/``state_append`` (from the incremental
-    dedup), ``result_merge``, and ``batches`` (count).
-
     ``metrics`` (optional, VERDICT r8 task 7) accumulates the wash's
     quality counters across batches at ZERO extra passes — the
     ingest-flow ``observe()`` discipline applied here: ``docs_in`` /
@@ -63,23 +57,15 @@ def corpus_clean_batch_fn(
     ``cross_batch_dups``/``inserted`` fall out of the MERGE's own
     action counters. The reference logs these with separate COUNT
     queries per cycle; here every number is a byproduct."""
-    import time as _time
-
     from etl_stack_spark.operators.curation import redact_pii
     from etl_stack_spark.operators.rank import top_1_per_group
     from etl_stack_spark.operators.text import fingerprint, lang_id, quality_score
-
-    def _mark(key: str, t0: float) -> None:
-        if stage_secs is not None:
-            stage_secs[key] = stage_secs.get(key, 0.0) + (_time.perf_counter() - t0)
 
     def batch_fn(batch_df: DataFrame, _batch_id: int) -> None:
         # NO isEmpty() guard: it is a full extra execution of the source
         # plan per epoch — it both re-runs the scan and double-counts
         # the feed-level observe() metrics a listener reads. Emptiness
         # falls out of the first-seen count the flow takes anyway.
-        if stage_secs is not None:
-            stage_secs["batches"] = stage_secs.get("batches", 0) + 1
         # a micro-batch's partitioning is whatever the source files gave
         # it — a single-file backlog arrives as ONE partition and the
         # regex-heavy gate scan runs on one core; spread it first (the
@@ -140,11 +126,9 @@ def corpus_clean_batch_fn(
         first = top_1_per_group(kept, ["fp"], [F.col("doc_id").asc()])
         # materialize the gated batch ONCE: the regex-heavy score/redact
         # scan otherwise re-runs per consumer (shingling AND the result
-        # merge — measured 2x the scalar work in the near-dup tier)
-        t0 = _time.perf_counter()
+        # merge — measured 2x the scalar work on a near-dup drain)
         first = first.persist()
         n_first = first.count()
-        _mark("gates", t0)
         if metrics is not None and obs is not None:
             m = obs.get
             metrics["docs_in"] = metrics.get("docs_in", 0) + m["docs_in"]
@@ -167,7 +151,7 @@ def corpus_clean_batch_fn(
                 state = type(lsh_state)(batch_df.sparkSession, lsh_state.root)
                 out = incremental_minhash_dedup(
                     first, state, text_col="_text_orig",
-                    threshold=near_dup_threshold, stage_secs=stage_secs,
+                    threshold=near_dup_threshold,
                 )
             out = out.select(*_RESULT_COLS)
             n_out = n_first
@@ -179,7 +163,6 @@ def corpus_clean_batch_fn(
                 metrics["neardup_drops"] = metrics.get("neardup_drops", 0) + (
                     n_first - n_out
                 )
-            t0 = _time.perf_counter()
             if hasattr(results, "insert_new"):
                 # LSM results (operators/lsm_table.MergeOnReadTable — the
                 # 100 TB shape, r10 task 8): the wash is INSERT-ONLY
@@ -215,7 +198,6 @@ def corpus_clean_batch_fn(
                 if metrics is not None:
                     metrics["inserted"] = metrics.get("inserted", 0) + results.read().count()
                     metrics.setdefault("cross_batch_dups", 0)
-            _mark("result_merge", t0)
         finally:
             first.unpersist()
 
@@ -228,18 +210,16 @@ def run_corpus_clean_stream(
     results: ParquetMergeTable,
     checkpoint_dir: str,
     lsh_state: ParquetMergeTable | None = None,
-    stage_secs: dict | None = None,
     metrics: dict | None = None,
 ):
     """Drain the document feed through the wash into ``results``.
     availableNow (process backlog, stop) — on a cluster the same call
     with a processingTime trigger runs continuously. ``lsh_state``
     switches on cross-batch near-dup dedup (see corpus_clean_batch_fn);
-    ``stage_secs`` collects the per-stage cost split; ``metrics``
-    accumulates the wash's quality counters (zero extra passes — see
-    corpus_clean_batch_fn). The streaming frame additionally carries an
-    ``observe("corpus_wash_in", ...)`` feed-level row count, so a
-    registered StreamingQueryListener sees per-micro-batch arrivals in
+    ``metrics`` accumulates the wash's quality counters (zero extra
+    passes — see corpus_clean_batch_fn). The streaming frame additionally
+    carries an ``observe("corpus_wash_in", ...)`` feed-level row count, so
+    a registered StreamingQueryListener sees per-micro-batch arrivals in
     ``progress.observedMetrics`` without touching the batch internals
     (queue.ObservedMetricsListener is the ready-made tap)."""
     from etl_stack_spark.streaming.queue import run_stream
@@ -248,9 +228,7 @@ def run_corpus_clean_stream(
         spark,
         feed_dir,
         DOC_FEED_SCHEMA,
-        corpus_clean_batch_fn(
-            results, lsh_state=lsh_state, stage_secs=stage_secs, metrics=metrics
-        ),
+        corpus_clean_batch_fn(results, lsh_state=lsh_state, metrics=metrics),
         checkpoint_dir,
         observe=("corpus_wash_in", [F.count(F.lit(1)).alias("docs_in")]),
     )

@@ -124,8 +124,7 @@ def html1_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # CRAWL2 — the composed crawl front door (round 7): WARC bytes → parse →
-# status filter → HTML→text extraction → token-count quality gate, the
-# exact flow the warc_pipeline bench tier measures at volume, here
+# status filter → HTML→text extraction → token-count quality gate,
 # oracle-checked end-to-end. Pages synthesize in-engine (HTML-wrapped
 # document text as HTTP responses, 404s from doc_id arithmetic); the
 # oracle restates the surviving rows in closed form from `documents`

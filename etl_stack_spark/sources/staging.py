@@ -1,5 +1,5 @@
-"""JSON staging envelope reader/writer (SURVEY S3/S4) and binary sources
-(S9/S10 plumbing).
+"""JSON staging envelope reader/writer (SURVEY S3/S4) and the
+quarantining CSV reader.
 
 The reference stages one ``{metadata{...}, properties[...]}`` JSON file
 per site between extract and load (`base_provider.py:61-78`,
@@ -37,18 +37,6 @@ def write_staging_envelope(df: DataFrame, path: str, metadata: dict) -> None:
     }
     with open(path, "w", encoding="utf-8") as f:
         json.dump(envelope, f, ensure_ascii=False, default=str)
-
-
-def read_binary_files(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """S9/S10: binary assets as (path, modificationTime, length, content)
-    + sha256 content hash — the content-addressed identity the image/PDF
-    pipelines key on."""
-    df = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-    return df.withColumn("content_hash", F.sha2(F.col("content"), 256))
 
 
 def read_csv_quarantine(

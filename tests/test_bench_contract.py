@@ -1,8 +1,10 @@
 """bench.py's output contract, driven through the real CLI on a two-query
 subset: the final stdout line is a compact JSON object with exactly the
 contract keys, its value is the sum of the per-query medians, and a
---queries run writes BENCH_SUBSET.json while leaving the full record in
-BENCH_DETAIL.json byte-for-byte alone."""
+--queries run writes BENCH_SUBSET.json (exactly the contract keys plus
+the samples and warmup timings) while leaving the full record in
+BENCH_DETAIL.json byte-for-byte alone. An argument bench.py does not
+know fails fast, before any Spark session starts."""
 
 from __future__ import annotations
 
@@ -54,7 +56,6 @@ def test_subset_run_prints_contract_line_and_writes_subset_sidecar():
             os.path.join(REPO, "bench.py"),
             "--queries=" + ",".join(QUERIES),
             "--no-sweep",
-            "--no-stream",
         ],
         capture_output=True,
         text=True,
@@ -75,3 +76,22 @@ def test_subset_run_prints_contract_line_and_writes_subset_sidecar():
         subset = json.load(f)
     assert set(subset["samples"]) == set(QUERIES)
     assert all(len(s) == 1 for s in subset["samples"].values())
+    assert set(subset) == CONTRACT_KEYS | {"samples", "warmup_entry_secs"}
+
+
+def test_unknown_argument_exits_with_usage_before_spark_starts():
+    detail_path = os.path.join(REPO, "BENCH_DETAIL.json")
+    detail_before = _sha256(detail_path)
+    # a retired flag: it must not fall through to a full bench run
+    out = subprocess.run(
+        [sys.executable, os.path.join(REPO, "bench.py"), "--no-stream"],
+        capture_output=True,
+        text=True,
+        cwd=REPO,
+        timeout=30,
+    )
+    assert out.returncode != 0
+    assert "usage: python bench.py" in out.stderr
+    assert "--no-stream" in out.stderr
+    assert out.stdout == ""
+    assert _sha256(detail_path) == detail_before

@@ -174,6 +174,22 @@ def test_warc_batch_stage(spark):
     assert {bytes(r.body).decode() for r in rows} == {f"body {i}" for i in range(4)}
     assert all(r.http_status == 200 for r in rows)
 
+    # one file of many members behind a warcinfo leader (the CommonCrawl
+    # segment layout): every member becomes its own row, in file order
+    segment = gzip_members(
+        [encode_warc_record("info", "warcinfo", None, b"software: x")]
+        + [
+            encode_warc_record(f"m{i}", "response", f"http://t/m{i}",
+                               encode_http_response(f"page {i}".encode()))
+            for i in range(3)
+        ]
+    )
+    many = parse_warc_batch(
+        spark.createDataFrame([("seg", segment)], "path string, content binary")
+    ).collect()
+    assert [r.warc_type for r in many] == ["warcinfo"] + ["response"] * 3
+    assert [bytes(r.body).decode() for r in many[1:]] == [f"page {i}" for i in range(3)]
+
 
 def test_html_to_text_edge_cases(spark):
     """Tag stripping: nested attrs, multiline script bodies, self-closing
