@@ -84,8 +84,9 @@ def warm_stores(spark, sf_dir: str, requested: set[str] | None) -> dict[str, flo
     each build, so the record prices the once-per-session cost that the
     timed queries then read for free. Stores are keyed per session and
     sf_dir, so nothing survives the run. With ``requested`` set (a
-    --queries run), a store is built only when a requested query reads
-    it. Returns {store: build secs}; a failed build is skipped."""
+    --queries run with no sweep), a store is built only when a requested
+    query reads it. Returns {store: build secs}; a failed build is
+    skipped."""
     from etl_stack_spark.queries import corpus_q
     from etl_stack_spark.queries import similarity as sim_q
     from etl_stack_spark.queries import text_dedup
@@ -153,6 +154,9 @@ def main() -> None:
 
     subset = any(a.startswith("--queries") for a in args)
     sweep = "--no-sweep" not in args
+    # the sweep times every query, so only a subset run without it may
+    # skip the stores and warmup entries its own queries do not read
+    narrow = subset and not sweep
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -174,10 +178,12 @@ def main() -> None:
     # absorbs join and window codegen. Each median then measures the
     # read a pipeline repeats, not a build it pays once per session.
     # Stores are keyed on sf_dir, so the warmup runs at the bench scale.
-    # A --queries run warms only what its own queries read.
+    # A --queries run with --no-sweep warms only what its own queries
+    # read; with the sweep on, a cold store would be built inside a
+    # sweep entry's one timed sample.
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
     warm_t0 = time.perf_counter()
-    store_build_secs = warm_stores(spark, sf_dir, set(names) if subset else None)
+    store_build_secs = warm_stores(spark, sf_dir, set(names) if narrow else None)
     if store_build_secs:
         print(f"# store builds: {store_build_secs}", file=sys.stderr)
     warm_entry_secs: dict[str, float] = {}
@@ -192,7 +198,7 @@ def main() -> None:
         "dd2_minhash_lsh",
         "dd6_cluster_dedup",
     ):
-        if subset and warm not in names:
+        if narrow and warm not in names:
             continue
         if warm in registry:
             try:

@@ -1,6 +1,7 @@
 """Delta Lake transaction log writer — the PUBLIC protocol format
-(delta-io PROTOCOL.md), emitted alongside ParquetMergeTable's manifest
-so the table is loadable by any stock Delta reader.
+(delta-io PROTOCOL.md), emitted alongside the manifest of either merge
+table (``ParquetMergeTable``, ``PartitionedMergeTable``) so the table is
+loadable by any stock Delta reader.
 
 What this is: the merge layer already implements Delta's SEMANTICS
 (hash-gated MERGE, optimistic concurrency, time travel, vacuum) against
@@ -62,9 +63,10 @@ def _version_fname(version: int) -> str:
 class DeltaLog:
     """Append-only Delta transaction log for a snapshot-replace table.
 
-    The caller (ParquetMergeTable) invokes :meth:`commit` INSIDE its
-    commit lock, so log versions are serialized by the same mutex that
-    serializes manifest swaps — the put-if-absent the spec requires."""
+    The caller (the commit both merge tables share, ``_commit`` in
+    operators/merge.py) invokes :meth:`commit` INSIDE its commit lock,
+    so log versions are serialized by the same mutex that serializes
+    manifest swaps — the put-if-absent the spec requires."""
 
     def __init__(self, table_root: str):
         self.table_root = table_root
@@ -407,7 +409,8 @@ def file_stats(full_path: str) -> str | None:
     skipped — the spec permits partial stats); a column missing from
     min/maxValues is simply never pruned on. Cost is O(files) driver-
     side footer reads per commit — footers are KBs, and the payoff is
-    zone-map file skipping at read time (``ParquetMergeTable.read_where``)."""
+    zone-map file skipping at read time (``ParquetMergeTable.read_where``)
+    and at merge time (``PartitionedMergeTable.merge``)."""
     import datetime
 
     import pyarrow.parquet as pq

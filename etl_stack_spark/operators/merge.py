@@ -40,14 +40,23 @@ import contextlib
 import itertools
 import json
 import os
+import shutil
 import time
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from functools import reduce
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from etl_stack_spark.operators.delta_log import (
+    TOMBSTONE_RETENTION_MS,
+    DeltaLog,
+    file_stats,
+    live_files_payload,
+    snapshot_parquet_files,
+)
 from etl_stack_spark.session import (
     forget_parquet_schema,
     read_parquet,
@@ -133,13 +142,12 @@ def _validate_source(
       (DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW); so do we.
 
     Returns the aggregate's rows: one row, or one per partition value.
-    Each carries ``_rows`` (source rows) and, with ``partition_col``,
-    the partition value and ``_mn_<k>``/``_mx_<k>`` bounds of every
-    other key (the stats-pruning input)."""
+    With ``partition_col``, each carries the partition value and
+    ``_mn_<k>``/``_mx_<k>`` bounds of every other key (the
+    stats-pruning input)."""
     null_key = reduce(lambda a, b: a | b, [F.col(k).isNull() for k in keys])
     per_key = source.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
     aggs = [
-        F.sum("_n").alias("_rows"),
         F.max("_n").alias("_max_n"),
         F.max(null_key).alias("_null_key"),
     ]
@@ -168,25 +176,31 @@ def _classify_merge(
     src: DataFrame,
     keys: Sequence[str],
     hash_col: str,
-    update_condition: Column | None,
-    soft_delete_scope: Column | None,
-    status_col: str,
-    deleted_value: str,
+    update_condition: Column | None = None,
+    soft_delete_scope: Column | None = None,
+    soft_delete_scope_keys: DataFrame | None = None,
+    status_col: str = "status",
+    deleted_value: str = "deleted",
 ) -> DataFrame:
     """The MERGE classification core (shared by the whole-table and the
     partition-scoped tables): full-outer join on keys, per-row action in
     ``_action`` ∈ insert/update/unchanged/keep/soft_delete, columns
     resolved source-vs-target accordingly. ``src`` must already be
-    aligned to ``target``'s column set."""
+    aligned to ``target``'s column set. ``soft_delete_scope_keys`` (see
+    ``ParquetMergeTable.merge``) marks in-scope target rows through a
+    broadcast join."""
+    if soft_delete_scope_keys is not None:
+        marker = soft_delete_scope_keys.distinct().withColumn("_scope", F.lit(True))
+        target = target.join(
+            F.broadcast(marker), list(soft_delete_scope_keys.columns), "left"
+        )
+        soft_delete_scope = F.col("t._scope").isNotNull()
     # presence flags, not key null-ness: a legacy null-keyed row already
     # IN the target (e.g. via append) must still classify as "keep",
     # not collapse into an all-null phantom
     t = target.withColumn("_t_present", F.lit(True)).alias("t")
     s = src.withColumn("_s_present", F.lit(True)).alias("s")
-    cond = None
-    for k in keys:
-        piece = F.col(f"t.{k}") == F.col(f"s.{k}")
-        cond = piece if cond is None else (cond & piece)
+    cond = reduce(lambda a, b: a & b, [F.col(f"t.{k}") == F.col(f"s.{k}") for k in keys])
     joined = t.join(s, cond, "full_outer")
 
     in_src = F.col("s._s_present").isNotNull()
@@ -227,10 +241,51 @@ _ACTIONS = ("insert", "update", "unchanged", "keep", "soft_delete")
 _UNCHECKED = object()  # sentinel: commit without a version precondition
 
 
-def _footer_stats(full_path: str) -> str | None:
-    from etl_stack_spark.operators.delta_log import file_stats
+def _merge_pass(
+    target: DataFrame | None,
+    source: DataFrame,
+    keys: Sequence[str],
+    hash_col: str,
+    audit_ts_col: str | None,
+    on_extra_columns: str,
+    shape: Callable[[DataFrame], DataFrame] | None = None,
+    **classify,
+) -> tuple[DataFrame, Callable[[], dict]]:
+    """The merge pass both tables write: audit timestamp, alignment to
+    ``target`` and ``_classify_merge(**classify)`` (no target: all
+    inserts). Returns the frame to write and a function that reads the
+    action counters, observed on the write itself: no cached frame, no
+    counting job. ``shape`` goes BELOW the observation: a range
+    exchange samples its child in a job of its own, and an observation
+    under it would count those rows twice."""
+    src = source
+    if audit_ts_col and audit_ts_col not in src.columns:
+        src = src.withColumn(audit_ts_col, F.current_timestamp())
+    if target is None:
+        merged = src.withColumn("_action", F.lit("insert"))
+    else:
+        target, src = _align_source(target, src, audit_ts_col, on_extra_columns)
+        merged = _classify_merge(target, src, keys, hash_col, **classify)
+    if shape is not None:
+        merged = shape(merged)
+    obs = Observation()
+    action = F.col("_action")
+    observed = merged.observe(obs, *[F.count_if(action == a).alias(a) for a in _ACTIONS])
 
-    return file_stats(full_path)
+    def counters() -> dict:
+        c = obs.get
+        return {
+            "inserted": c["insert"], "updated": c["update"],
+            "unchanged": c["unchanged"] + c["keep"], "soft_deleted": c["soft_delete"],
+        }
+
+    return observed.drop("_action"), counters
+
+
+def _entry(e: str | dict) -> tuple[str, str | None]:
+    """(dir, partition) of a history entry: a ``{"dir", "part"}`` dict or
+    a bare dir string (whole-table snapshots, legacy partitioned ones)."""
+    return (e["dir"], e.get("part")) if isinstance(e, dict) else (e, None)
 
 
 def _stat_comparable(a, b) -> bool:
@@ -254,7 +309,7 @@ def _prunable_rows(stats_json, bounds: dict[str, tuple]) -> int | None:
     one disjoint key range excludes the whole file; NULL target keys
     never match under SQL equality and are safely carried). ``None`` =
     the file must join: no usable stats, incomparable types, or ranges
-    intersect."""
+    intersect. A None bound is an unbounded side (``prune_files``)."""
     if not stats_json or not bounds:
         return None
     s = json.loads(stats_json) if isinstance(stats_json, str) else stats_json
@@ -264,16 +319,155 @@ def _prunable_rows(stats_json, bounds: dict[str, tuple]) -> int | None:
     mins, maxs = s.get("minValues", {}), s.get("maxValues", {})
     for k, (lo, hi) in bounds.items():
         fmn, fmx = mins.get(k), maxs.get(k)
-        if fmn is None or fmx is None or lo is None or hi is None:
-            continue
-        if not (_stat_comparable(fmn, lo) and _stat_comparable(fmx, hi)):
-            continue
-        if fmx < lo or fmn > hi:
+        if fmn is None or fmx is None:
+            continue  # no stat → can't prove exclusion
+        if lo is not None and _stat_comparable(fmx, lo) and fmx < lo:
+            return n
+        if hi is not None and _stat_comparable(fmn, hi) and fmn > hi:
             return n
     return None
 
 
-class ParquetMergeTable:
+class _MergeTable:
+    """What both merge tables share: the sticky Delta log, the manifest
+    and its lock, one commit protocol and one vacuum. A manifest maps
+    each slot to the directory holding its live data: the whole table
+    has one slot (``None`` → ``current``), the partitioned table one per
+    partition value (``parts``). A layout supplies ``_empty_manifest``,
+    ``_pointer`` (a slot's dir), ``_live_dirs`` and ``_log_commit``."""
+
+    # dir prefixes this layout writes; a dir with one that the manifest
+    # never heard of is a crashed writer's orphan (see fsck)
+    _ORPHAN_PREFIXES: tuple[str, ...] = ()
+
+    def __init__(self, spark: SparkSession, root: str, delta_log: bool = False):
+        self.spark = spark
+        self.root = root
+        os.makedirs(root, exist_ok=True)
+        sticky = delta_log or os.path.isdir(os.path.join(root, "_delta_log"))
+        self.delta_log: DeltaLog | None = DeltaLog(root) if sticky else None
+
+    # -- snapshot plumbing --------------------------------------------------
+    @property
+    def _manifest_path(self) -> str:
+        return os.path.join(self.root, "MANIFEST.json")
+
+    def _read_manifest(self) -> dict:
+        if not os.path.exists(self._manifest_path):
+            return self._empty_manifest()
+        with open(self._manifest_path) as f:
+            return json.load(f)
+
+    def _write_manifest(self, manifest: dict) -> None:
+        tmp = self._manifest_path + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
+        os.replace(tmp, self._manifest_path)  # atomic pointer swap
+
+    def _parquet_files(self, d: str) -> list[str]:
+        """Relative paths of dir ``d``'s parquet files ([] if it is gone)."""
+        p = os.path.join(self.root, d)
+        names = sorted(os.listdir(p)) if os.path.isdir(p) else []
+        return [f"{d}/{f}" for f in names if f.endswith(".parquet")]
+
+    @contextlib.contextmanager
+    def _commit_lock(self):
+        """O_EXCL lock file — the manifest mutex for commits AND vacuum
+        (a vacuum racing a committer's manifest read would otherwise drop
+        the version the committer is about to append after)."""
+        lock_path = os.path.join(self.root, "COMMIT_LOCK")
+        deadline = time.time() + 60.0
+        while True:
+            try:
+                fd = os.open(lock_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+                break
+            except FileExistsError:
+                if time.time() > deadline:  # pragma: no cover — crashed writer
+                    raise TimeoutError(f"commit lock stuck: {lock_path}") from None
+                time.sleep(0.01)
+        try:
+            yield
+        finally:
+            os.close(fd)
+            os.unlink(lock_path)
+
+    def _commit(
+        self,
+        written: dict,
+        expected: dict,
+        apply: Callable[[dict, dict], None],
+        operation: str,
+        schema_json: str | None = None,
+        skip_stale: bool = False,
+    ) -> list:
+        """Swap each slot of ``written`` to the directory this transaction
+        wrote lock-free. Under the commit lock, a slot whose directory
+        moved past the one ``expected`` names (the one the transaction
+        READ) is stale: the commit raises ConcurrentWriteError and
+        removes every written directory, or with ``skip_stale``
+        (compaction: data-identical, so the newer version wins) removes
+        only the stale ones. ``apply(manifest, fresh)`` updates the
+        manifest, which swaps atomically; a Delta log commits the same
+        state inside the lock (the put-if-absent the Delta protocol
+        requires), with ``schema_json`` or else the manifest's recorded
+        schema. Returns the stale slots."""
+        with self._commit_lock():
+            manifest = self._read_manifest()
+            stale = [k for k, d in expected.items() if self._pointer(manifest, k) != d]
+            if stale and not skip_stale:
+                for d in written.values():
+                    shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
+                k = stale[0]
+                what = "table" if k is None else f"partition {k!r}"
+                raise ConcurrentWriteError(
+                    f"{what} advanced from {expected[k]!r} to "
+                    f"{self._pointer(manifest, k)!r} during the transaction; retry"
+                )
+            for k in stale:
+                shutil.rmtree(os.path.join(self.root, written[k]), ignore_errors=True)
+            fresh = {k: d for k, d in written.items() if k not in stale}
+            if fresh:
+                apply(manifest, fresh)
+                self._write_manifest(manifest)
+                if self.delta_log is not None:
+                    schema_json = schema_json or json.dumps(manifest.get("schema") or {})
+                    self._log_commit(manifest, operation, schema_json)
+        return stale
+
+    def vacuum(self, keep_last: int = 2) -> list[str]:
+        """Drop superseded version directories (the emulation's answer to
+        Delta VACUUM), keeping the ``keep_last`` most recent history
+        entries PER PARTITION plus everything currently referenced
+        (``keep_last=0`` keeps only the live versions). The whole table
+        is one partition. Retention is per partition value so a busy
+        partition cannot evict a quiet partition's retained versions
+        (ADVICE r4). The manifest is rewritten first, under the commit
+        lock, and directories are removed after, so a concurrent reader
+        of a live version never loses it."""
+        with self._commit_lock():
+            manifest = self._read_manifest()
+            live = self._live_dirs(manifest)
+            history = manifest["history"]
+            by_part: dict[object, list[str]] = {}
+            for e in history:
+                d, part = _entry(e)
+                by_part.setdefault(part, []).append(d)
+            to_drop = [
+                d
+                for dirs in by_part.values()
+                for d in (dirs[:-keep_last] if keep_last else dirs)
+                if d not in live
+            ]
+            dropped = set(to_drop)
+            manifest["history"] = [e for e in history if _entry(e)[0] not in dropped]
+            self._write_manifest(manifest)
+        for d in to_drop:
+            forget_parquet_schema(os.path.join(self.root, d))
+            shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
+        return to_drop
+
+
+class ParquetMergeTable(_MergeTable):
     """A directory of versioned Parquet snapshots with a manifest pointer.
 
     Layout: ``<root>/v_<n>/part-*.parquet`` + ``<root>/MANIFEST.json``
@@ -290,27 +484,23 @@ class ParquetMergeTable:
     stale, which a stock reader cannot detect).
     """
 
-    def __init__(self, spark: SparkSession, root: str, delta_log: bool = False):
-        from etl_stack_spark.operators.delta_log import DeltaLog
+    _ORPHAN_PREFIXES = ("v_",)
 
-        self.spark = spark
-        self.root = root
-        os.makedirs(root, exist_ok=True)
-        if delta_log or os.path.isdir(os.path.join(root, "_delta_log")):
-            self.delta_log: DeltaLog | None = DeltaLog(root)
-        else:
-            self.delta_log = None
+    def _empty_manifest(self) -> dict:
+        return {"current": None, "history": []}
 
-    # -- snapshot plumbing --------------------------------------------------
-    @property
-    def _manifest_path(self) -> str:
-        return os.path.join(self.root, "MANIFEST.json")
+    def _pointer(self, manifest: dict, slot: None) -> str | None:
+        return manifest["current"]
 
-    def _read_manifest(self) -> dict:
-        if not os.path.exists(self._manifest_path):
-            return {"current": None, "history": []}
-        with open(self._manifest_path) as f:
-            return json.load(f)
+    def _live_dirs(self, manifest: dict) -> set[str]:
+        return {manifest["current"]} if manifest["current"] else set()
+
+    def _log_commit(self, manifest: dict, operation: str, schema_json: str) -> None:
+        self.delta_log.commit(
+            snapshot_parquet_files(self.root, manifest["current"]),
+            schema_json,
+            operation=operation,
+        )
 
     def current_version(self) -> str | None:
         return self._read_manifest()["current"]
@@ -345,24 +535,13 @@ class ParquetMergeTable:
             raise ValueError(
                 f"stats pruning needs a Delta log: open {self.root} with delta_log=True"
             )
-        state = self.delta_log.state()
-        keep = []
-        for rel in sorted(state["files"]):
-            info = state["files"][rel]
-            stats = info.get("stats")
-            s = json.loads(stats) if isinstance(stats, str) else (stats or {})
-            mins, maxs = s.get("minValues", {}), s.get("maxValues", {})
-            skip = False
-            for col, (lo, hi) in bounds.items():
-                mn, mx = mins.get(col), maxs.get(col)
-                if mn is None or mx is None:
-                    continue  # no stat → can't prove exclusion
-                if (hi is not None and mn > hi) or (lo is not None and mx < lo):
-                    skip = True
-                    break
-            if not skip:
-                keep.append(rel)
-        return keep, len(state["files"])
+        files = self.delta_log.state()["files"]
+        keep = [
+            rel
+            for rel in sorted(files)
+            if _prunable_rows(files[rel].get("stats"), bounds) is None
+        ]
+        return keep, len(files)
 
     def optimize_zorder(
         self, cols: list[str], bits: int = 12, files: int | None = None
@@ -398,13 +577,9 @@ class ParquetMergeTable:
         ``repartitionByRange`` + sortWithinPartitions, or z-order
         compaction), a narrow range touches O(range) files instead of
         O(table) — the scan cost follows the predicate, not the table."""
-        from pyspark.sql.types import StructType
-
         keep, _total = self.prune_files(bounds)
         if not keep:
-            schema = StructType.fromJson(
-                json.loads(self.delta_log.state()["schema_string"])
-            )
+            schema = StructType.fromJson(json.loads(self.delta_log.state()["schema_string"]))
             df = self.spark.createDataFrame([], schema)
         else:
             df = self.spark.read.parquet(*[os.path.join(self.root, p) for p in keep])
@@ -432,58 +607,16 @@ class ParquetMergeTable:
         version = f"v_{_unique_stamp()}"
         path = os.path.join(self.root, version)
         df.write.mode("overwrite").parquet(path)
-        with self._commit_lock():
-            manifest = self._read_manifest()
-            if expected_version is not _UNCHECKED and manifest["current"] != expected_version:
-                import shutil
 
-                shutil.rmtree(path, ignore_errors=True)
-                raise ConcurrentWriteError(
-                    f"table advanced from {expected_version!r} to "
-                    f"{manifest['current']!r} during the transaction; retry"
-                )
+        def apply(manifest: dict, fresh: dict) -> None:
             manifest["history"].append(version)
             manifest["current"] = version
-            tmp = self._manifest_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            os.replace(tmp, self._manifest_path)  # atomic pointer swap
-            if self.delta_log is not None:
-                # inside the lock: log versions serialize with manifest
-                # swaps (the put-if-absent the Delta protocol requires)
-                from etl_stack_spark.operators.delta_log import (
-                    snapshot_parquet_files,
-                )
 
-                self.delta_log.commit(
-                    snapshot_parquet_files(self.root, version),
-                    df.schema.json(),
-                    operation=operation,
-                )
+        expected = {} if expected_version is _UNCHECKED else {None: expected_version}
+        self._commit({None: version}, expected, apply, operation, df.schema.json())
         # snapshots are immutable: the first read of this one infers nothing
         remember_parquet_schema(self.spark, path, df.schema)
         return version
-
-    @contextlib.contextmanager
-    def _commit_lock(self):
-        """O_EXCL lock file — the manifest mutex for commits AND vacuum
-        (a vacuum racing a committer's manifest read would otherwise drop
-        the version the committer is about to append after)."""
-        lock_path = os.path.join(self.root, "COMMIT_LOCK")
-        deadline = time.time() + 60.0
-        while True:
-            try:
-                fd = os.open(lock_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                break
-            except FileExistsError:
-                if time.time() > deadline:  # pragma: no cover — crashed writer
-                    raise TimeoutError(f"commit lock stuck: {lock_path}") from None
-                time.sleep(0.01)
-        try:
-            yield
-        finally:
-            os.close(fd)
-            os.unlink(lock_path)
 
     def overwrite(self, df: DataFrame, expected_version=_UNCHECKED) -> str:
         """Replace the snapshot. Pass ``expected_version`` (from
@@ -528,11 +661,11 @@ class ParquetMergeTable:
         1. One validation aggregate (``_validate_source``) rejects a
            source with a NULL in any merge key or with several rows per
            key before anything is written.
-        2. One classify-and-write pass writes the new snapshot. Its
-           action counters are observed on that write
+        2. One classify-and-write pass (``_merge_pass``) writes the new
+           snapshot. Its action counters are observed on that write
            (``DataFrame.observe``) and read after it, so there is no
-           cached snapshot and no separate counting job. On the table's
-           first write the counters come from the validation aggregate.
+           cached snapshot and no separate counting job; on the table's
+           first write every source row is an insert.
 
         ``on_extra_columns`` governs source columns the target lacks
         (schema drift): ``"error"`` (default) raises — an upstream
@@ -544,100 +677,47 @@ class ParquetMergeTable:
         """
         if on_extra_columns not in ("error", "evolve", "ignore"):
             raise ValueError(f"on_extra_columns must be error|evolve|ignore, got {on_extra_columns!r}")
+        if soft_delete_scope is not None and soft_delete_scope_keys is not None:
+            raise ValueError("pass soft_delete_scope OR soft_delete_scope_keys, not both")
         with _persisted(source):
-            (check,) = _validate_source(source, keys)
+            _validate_source(source, keys)
             base_version = self.current_version()
-            if base_version is None:
-                out = source
-                if audit_ts_col and audit_ts_col not in source.columns:
-                    out = out.withColumn(audit_ts_col, F.current_timestamp())
-                # expected None: two concurrent creators conflict instead of
-                # one silently shadowing the other's snapshot
-                self._write_snapshot(out, expected_version=None)
-                return {"inserted": check["_rows"] or 0, "updated": 0, "unchanged": 0, "soft_deleted": 0}
-
-            target = self.read(base_version)
-            src = source
-            if audit_ts_col and audit_ts_col not in src.columns:
-                src = src.withColumn(audit_ts_col, F.current_timestamp())
-            target, src = _align_source(target, src, audit_ts_col, on_extra_columns)
-            if soft_delete_scope_keys is not None:
-                if soft_delete_scope is not None:
-                    raise ValueError(
-                        "pass soft_delete_scope OR soft_delete_scope_keys, not both"
-                    )
-                marker = (
-                    soft_delete_scope_keys.distinct().withColumn("_scope", F.lit(True))
-                )
-                target = target.join(
-                    F.broadcast(marker), list(soft_delete_scope_keys.columns), "left"
-                )
-                soft_delete_scope = F.col("t._scope").isNotNull()
-
-            merged = _classify_merge(
-                target, src, keys, hash_col, update_condition,
-                soft_delete_scope, status_col, deleted_value,
+            out, counters = _merge_pass(
+                self.read(base_version) if base_version is not None else None,
+                source, keys, hash_col, audit_ts_col, on_extra_columns,
+                update_condition=update_condition, soft_delete_scope=soft_delete_scope,
+                soft_delete_scope_keys=soft_delete_scope_keys, status_col=status_col,
+                deleted_value=deleted_value,
             )
-            # the action counters ride the write itself: no cached
-            # snapshot, no separate counting job
-            obs = Observation()
-            action = F.col("_action")
-            observed = merged.observe(
-                obs, *[F.count_if(action == a).alias(a) for a in _ACTIONS]
-            )
-            self._write_snapshot(observed.drop("_action"), expected_version=base_version, operation="MERGE")
-            counts = obs.get
-        return {
-            "inserted": counts["insert"],
-            "updated": counts["update"],
-            "unchanged": counts["unchanged"] + counts["keep"],
-            "soft_deleted": counts["soft_delete"],
-        }
+            # expected None on the first write: two concurrent creators
+            # conflict instead of one silently shadowing the other's snapshot
+            operation = "WRITE" if base_version is None else "MERGE"
+            self._write_snapshot(out, expected_version=base_version, operation=operation)
+            return counters()
 
     # -- DELETE (M6/M7) -----------------------------------------------------
     def delete_where(self, predicate: Column) -> int:
         """Delete rows matching the predicate (e.g. chunk purge by
-        ``content_id LIKE 'x_part_%'`` — M6/M7)."""
+        ``content_id LIKE 'x_part_%'`` — M6/M7). As in SQL's and Delta's
+        ``DELETE WHERE``, only rows where the predicate is TRUE go; a
+        row where it is NULL stays. The deleted count is observed on
+        the rewrite, with no counting job."""
         base_version = self.current_version()
         target = self.read(base_version)
-        keep = target.filter(~predicate)
-        n = target.count() - keep.count()
+        hit = F.coalesce(predicate, F.lit(False))
+        obs = Observation()
+        keep = target.observe(obs, F.count_if(hit).alias("n")).filter(~hit)
         self._write_snapshot(keep, expected_version=base_version, operation="DELETE")
-        return n
-
-    def vacuum(self, keep_last: int = 2) -> list[str]:
-        """Drop snapshot directories older than the last ``keep_last``
-        versions (the emulation's answer to Delta VACUUM). The manifest is
-        rewritten first, so a concurrent reader of the current version
-        never loses its snapshot."""
-        import shutil
-
-        with self._commit_lock():
-            manifest = self._read_manifest()
-            history = manifest["history"]
-            to_drop = [v for v in history[:-keep_last] if v != manifest["current"]]
-            manifest["history"] = [v for v in history if v not in to_drop]
-            tmp = self._manifest_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            os.replace(tmp, self._manifest_path)
-        for v in to_drop:
-            forget_parquet_schema(os.path.join(self.root, v))
-            shutil.rmtree(os.path.join(self.root, v), ignore_errors=True)
-        return to_drop
+        return obs.get["n"]
 
     def append(self, df: DataFrame) -> None:
         base_version = self.current_version()
         if base_version is not None:
-            self._write_snapshot(
-                self.read(base_version).unionByName(df, allowMissingColumns=True),
-                expected_version=base_version,
-            )
-        else:
-            self._write_snapshot(df, expected_version=None)
+            df = self.read(base_version).unionByName(df, allowMissingColumns=True)
+        self._write_snapshot(df, expected_version=base_version)
 
 
-class PartitionedMergeTable:
+class PartitionedMergeTable(_MergeTable):
     """Partition-scoped MERGE: the 100 TB shape of ``ParquetMergeTable``.
 
     A whole-snapshot rewrite per merge is exactly what Delta/Iceberg
@@ -652,30 +732,36 @@ class PartitionedMergeTable:
     Layout: ``<root>/p_<i>_<ts>/...parquet`` per partition version +
     ``MANIFEST.json``: ``{"partition_col": c, "parts": {value: dir},
     "history": [dirs]}``. Partition values are stored in the data too, so
-    reads need no reconstruction.
+    reads need no reconstruction. A merge writes all its partitions into
+    ``<root>/p_stage_<ts>/`` first and renames each into place.
     """
 
+    # p_ = merge-written partition versions (and their p_stage_ write
+    # dirs), c_ = compaction rewrites: a compactor that died between data
+    # write and manifest swap parks a c_ dir no manifest knows — it must
+    # be orphan-collectable too
+    _ORPHAN_PREFIXES = ("p_", "c_")
+
     def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        partition_col: str,
-        delta_log: bool = False,
+        self, spark: SparkSession, root: str, partition_col: str, delta_log: bool = False
     ):
-        from etl_stack_spark.operators.delta_log import DeltaLog
-
-        self.spark = spark
-        self.root = root
+        super().__init__(spark, root, delta_log)
         self.partition_col = partition_col
-        os.makedirs(root, exist_ok=True)
-        # same stickiness rule as ParquetMergeTable: an existing log keeps
-        # appending even when reopened without the flag
-        if delta_log or os.path.isdir(os.path.join(root, "_delta_log")):
-            self.delta_log: DeltaLog | None = DeltaLog(root)
-        else:
-            self.delta_log = None
 
-    def _log_commit(self, manifest: dict, operation: str) -> None:
+    def _empty_manifest(self) -> dict:
+        return {"partition_col": self.partition_col, "parts": {}, "history": []}
+
+    def _pointer(self, manifest: dict, slot: str) -> str | None:
+        return manifest["parts"].get(slot)
+
+    def _live_dirs(self, manifest: dict) -> set[str]:
+        # stats-pruned merges carry files in superseded directories: any
+        # dir still referenced by the file-granular live set is live,
+        # whatever its history age
+        files = manifest.get("files", {}).values()
+        return set(manifest["parts"].values()) | {r.split("/", 1)[0] for rs in files for r in rs}
+
+    def _log_commit(self, manifest: dict, operation: str, schema_json: str) -> None:
         """Emit one Delta commit for the table's CURRENT live state —
         called inside the commit lock, after the manifest swap. Add
         actions carry partitionValues ({partition_col: value}), so a
@@ -684,27 +770,25 @@ class PartitionedMergeTable:
         actually rewrote produce actions (untouched partitions — and,
         with stats pruning, untouched files inside a touched
         partition — are already live)."""
-        from etl_stack_spark.operators.delta_log import live_files_payload
-
         self.delta_log.commit(
             live_files_payload(
                 self.root,
                 {v: self._live_files(manifest, v) for v in manifest["parts"]},
                 self.partition_col,
             ),
-            json.dumps(manifest.get("schema") or {}),
+            schema_json,
             operation=operation,
             partition_columns=[self.partition_col],
         )
 
-    _manifest_path = ParquetMergeTable._manifest_path
-    _commit_lock = ParquetMergeTable._commit_lock
-
-    def _read_manifest(self) -> dict:
-        if not os.path.exists(self._manifest_path):
-            return {"partition_col": self.partition_col, "parts": {}, "history": []}
-        with open(self._manifest_path) as f:
-            return json.load(f)
+    def _install(self, manifest: dict, dirs: dict[str, str], carry: dict) -> None:
+        """Point each partition at its new directory: its live files are
+        the ``carry``-ed ones plus the new directory's; its history entry
+        records the partition so vacuum can retain per partition."""
+        for v, d in dirs.items():
+            manifest["parts"][v] = d
+            manifest.setdefault("files", {})[v] = carry.get(v, []) + self._parquet_files(d)
+            manifest["history"].append({"dir": d, "part": v})
 
     def exists(self) -> bool:
         return bool(self._read_manifest()["parts"])
@@ -723,54 +807,36 @@ class PartitionedMergeTable:
         if rels is not None:
             return list(rels)
         d = manifest["parts"].get(str(value))
-        if d is None:
-            return []
-        return [
-            f"{d}/{f}"
-            for f in sorted(os.listdir(os.path.join(self.root, d)))
-            if f.endswith(".parquet")
-        ]
+        return self._parquet_files(d) if d is not None else []
+
+    def _read_files(self, manifest: dict, rels: Sequence[str]) -> DataFrame:
+        """Read live files with the manifest-recorded table schema: after
+        ``on_extra_columns='evolve'`` only the touched partitions carry
+        the widened schema, and a schema inferred from the files would
+        drop the evolved column (ADVICE r4) or, read for an un-evolved
+        partition alone, lack it. Files written before the evolve read
+        the new column as NULL — the Delta table-schema semantics. A
+        manifest that records no schema infers one with mergeSchema."""
+        paths, schema = [os.path.join(self.root, rel) for rel in rels], manifest.get("schema")
+        if schema:
+            return self.spark.read.schema(StructType.fromJson(schema)).parquet(*paths)
+        return self.spark.read.option("mergeSchema", "true").parquet(*paths)
 
     def read(self, part_values: Sequence[object] | None = None) -> DataFrame:
         """Read the whole table, or only the named partitions — the
-        partition-pruned path a per-client/per-day job takes.
-
-        Reads with ``mergeSchema`` and projects to the manifest-recorded
-        table schema: after ``on_extra_columns='evolve'`` only the touched
-        partitions carry the widened schema, and a plain parquet read
-        would silently drop the evolved column (ADVICE r4). Partitions
-        written before the evolve surface the new column as NULL — the
-        Delta table-schema semantics.
-        """
+        partition-pruned path a per-client/per-day job takes."""
         manifest = self._read_manifest()
         parts = manifest["parts"]
         if not parts:
             raise FileNotFoundError(f"no partitions in {self.root}")
-        if part_values is not None:
-            selected = [str(v) for v in part_values if str(v) in parts]
-        else:
-            selected = list(parts)
+        selected = list(parts) if part_values is None else [
+            str(v) for v in part_values if str(v) in parts
+        ]
         if not selected:
             raise FileNotFoundError(f"no matching partitions in {self.root}")
-        paths = [
-            os.path.join(self.root, rel)
-            for v in selected
-            for rel in self._live_files(manifest, v)
-        ]
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        schema_json = manifest.get("schema")
-        if schema_json:
-            from pyspark.sql.types import StructType
-
-            table_schema = StructType.fromJson(schema_json)
-            df = df.select(
-                *[
-                    F.col(f.name) if f.name in df.columns
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in table_schema.fields
-                ]
-            )
-        return df
+        return self._read_files(
+            manifest, [rel for v in selected for rel in self._live_files(manifest, v)]
+        )
 
     def merge(
         self,
@@ -798,9 +864,10 @@ class PartitionedMergeTable:
         of O(partition). Pruning is conservative: a file with no usable
         stats for any key joins as before.
 
-        ``cluster_by`` (optional): range-cluster each rewritten
-        partition's rows on these columns into ``cluster_files`` files
-        (repartitionByRange + sortWithinPartitions) — the write-side
+        ``cluster_by`` (optional): range-cluster the rewritten rows on
+        these columns into ``cluster_files`` key ranges
+        (repartitionByRange + sortWithinPartitions), each written as one
+        file per rewritten partition it holds rows of — the write-side
         clustering that makes future merges' stats pruning tight, Delta's
         OPTIMIZE-ZORDER-at-write analog for one dimension.
 
@@ -808,8 +875,11 @@ class PartitionedMergeTable:
         also when the merge raises). One validation aggregate, grouped by
         partition, rejects NULL or duplicate keys before anything is
         written and also returns the affected partitions and their key
-        bounds. The classified frame is then cached, counted and written
-        once per affected partition.
+        bounds. The target files are read with the table schema, and one
+        observed classify-and-write pass (``_merge_pass``) writes every
+        affected partition in ONE job, partitioned by a ``_dir`` column
+        naming each row's new directory into ``p_stage_<ts>``; each
+        ``_dir=<dir>`` is then renamed into place before the commit.
 
         Returns the usual counters plus ``files_pruned`` /
         ``files_rewritten`` / ``rows_carried`` / ``rows_rewritten``.
@@ -826,32 +896,19 @@ class PartitionedMergeTable:
             affected = [r[pcol] for r in checked]
             base = self._read_manifest()
             read_versions = {str(v): base["parts"].get(str(v)) for v in affected}
-            nonpart_keys = [k for k in keys if k != pcol]
-            src_bounds = {
-                str(r[pcol]): {k: (r[f"_mn_{k}"], r[f"_mx_{k}"]) for k in nonpart_keys}
-                for r in checked
-            }
+            log_files = self.delta_log.state()["files"] if self.delta_log is not None else {}
 
             target_files: list[str] = []
             carry: dict[str, list[str]] = {}
             carried_rows = 0
-            files_pruned = 0
-            log_stats = (
-                {
-                    rel: info.get("stats")
-                    for rel, info in self.delta_log.state()["files"].items()
-                }
-                if self.delta_log is not None
-                else {}
-            )
-            for v in affected:
-                sv = str(v)
-                live = self._live_files(base, sv) if read_versions.get(sv) else []
+            for r in checked:
+                sv = str(r[pcol])
+                bounds = {k: (r[f"_mn_{k}"], r[f"_mx_{k}"]) for k in keys if k != pcol}
                 carry[sv] = []
-                bounds = src_bounds.get(sv, {})
-                for rel in live:
+                for rel in self._live_files(base, sv):
                     n_skip = _prunable_rows(
-                        log_stats.get(rel) or _footer_stats(os.path.join(self.root, rel)),
+                        log_files.get(rel, {}).get("stats")
+                        or file_stats(os.path.join(self.root, rel)),
                         bounds,
                     )
                     if n_skip is None:
@@ -859,108 +916,60 @@ class PartitionedMergeTable:
                     else:
                         carry[sv].append(rel)
                         carried_rows += n_skip
-                        files_pruned += 1
+            files_pruned = sum(len(c) for c in carry.values())
 
-            if target_files:
-                target = self.spark.read.option("mergeSchema", "true").parquet(
-                    *[os.path.join(self.root, rel) for rel in target_files]
+            # one new directory per affected partition, written lock-free
+            # in one job
+            stamp = _unique_stamp()
+            new_dirs = {str(v): f"p_{i}_{stamp}" for i, v in enumerate(affected)}
+            dir_col = F.lit(None).cast("string")
+            for v in affected:
+                dir_col = F.when(F.col(pcol) == F.lit(v), new_dirs[str(v)]).otherwise(dir_col)
+
+            def shape(merged: DataFrame) -> DataFrame:
+                merged = merged.withColumn("_dir", dir_col)
+                return (
+                    merged.repartitionByRange(cluster_files, *cluster_by) if cluster_by else merged
                 )
-            else:
-                target = None
 
-            src = source
-            if audit_ts_col and audit_ts_col not in src.columns:
-                src = src.withColumn(audit_ts_col, F.current_timestamp())
-            if target is None:
-                merged = src.withColumn("_action", F.lit("insert"))
-            else:
-                target, src = _align_source(target, src, audit_ts_col, on_extra_columns)
-                merged = _classify_merge(
-                    target, src, keys, hash_col, None, None, "status", "deleted"
-                )
-            merged = merged.cache()
-            try:
-                counts = {
-                    r["_action"]: r["n"]
-                    for r in merged.groupBy("_action").agg(F.count(F.lit(1)).alias("n")).collect()
-                }
-                # one new directory per affected partition, written lock-free
-                new_dirs: dict[str, str] = {}
-                stamp = _unique_stamp()
-                for i, v in enumerate(affected):
-                    d = f"p_{i}_{stamp}"
-                    part = merged.filter(F.col(pcol) == F.lit(v)).drop("_action")
-                    if cluster_by:
-                        part = part.repartitionByRange(
-                            cluster_files, *[F.col(c) for c in cluster_by]
-                        ).sortWithinPartitions(*cluster_by)
-                    part.write.mode("overwrite").parquet(os.path.join(self.root, d))
-                    new_dirs[str(v)] = d
-            finally:
-                merged.unpersist()
-
-        with self._commit_lock():
-            manifest = self._read_manifest()
-            for v, expected in read_versions.items():
-                if manifest["parts"].get(v) != expected:
-                    import shutil
-
-                    for d in new_dirs.values():
-                        shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
-                    raise ConcurrentWriteError(
-                        f"partition {v!r} advanced from {expected!r} to "
-                        f"{manifest['parts'].get(v)!r} during the transaction; retry"
-                    )
-            manifest["parts"].update(new_dirs)
-            # file-granular live set: carried (pruned) files stay live in
-            # their old directories; only rewritten files point at the
-            # new directory. The conflict check above guarantees the
-            # carried paths are still live (the partition has not moved).
-            files_map = manifest.setdefault("files", {})
-            rewritten_files = 0
-            for v, d in new_dirs.items():
-                new_rels = [
-                    f"{d}/{f}"
-                    for f in sorted(os.listdir(os.path.join(self.root, d)))
-                    if f.endswith(".parquet")
-                ]
-                rewritten_files += len(new_rels)
-                files_map[v] = carry.get(v, []) + new_rels
-            # history entries record their partition so vacuum can retain
-            # per-partition; legacy manifests may hold bare dir strings
-            manifest["history"].extend(
-                {"dir": d, "part": v} for v, d in new_dirs.items()
+            out, counters = _merge_pass(
+                self._read_files(base, target_files) if target_files else None,
+                source, keys, hash_col, audit_ts_col, on_extra_columns, shape=shape,
             )
-            # table-level schema: the source of truth read() projects to,
-            # so an evolved column survives mixed-schema partition dirs.
-            # Union with the recorded schema — a later merge touching only
-            # un-evolved partitions must not narrow the table schema.
-            new_schema = merged.drop("_action").schema
-            prior = manifest.get("schema")
-            if prior:
-                from pyspark.sql.types import StructType
+            if cluster_by:
+                out = out.sortWithinPartitions("_dir", *cluster_by)
+            stage = os.path.join(self.root, f"p_stage_{stamp}")
+            out.write.partitionBy("_dir").mode("overwrite").parquet(stage)
+            counts = counters()
+        for d in new_dirs.values():
+            os.rename(os.path.join(stage, f"_dir={d}"), os.path.join(self.root, d))
+        shutil.rmtree(stage, ignore_errors=True)
+        rewritten_files = sum(len(self._parquet_files(d)) for d in new_dirs.values())
+        out_schema = out.drop("_dir").schema
 
-                prior_schema = StructType.fromJson(prior)
-                known = {f.name for f in prior_schema.fields}
-                for f in new_schema.fields:
-                    if f.name not in known:
-                        prior_schema.add(f)
-                new_schema = prior_schema
-            manifest["schema"] = new_schema.jsonValue()
-            tmp = self._manifest_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            os.replace(tmp, self._manifest_path)
-            if self.delta_log is not None:
-                self._log_commit(manifest, "MERGE")
+        def apply(manifest: dict, fresh: dict) -> None:
+            # the conflict check guarantees the carried paths are still
+            # live (the partition has not moved)
+            self._install(manifest, fresh, carry)
+            # table-level schema: the source of truth reads use, so an
+            # evolved column survives mixed-schema partition dirs. Union
+            # with the recorded schema — a later merge touching only
+            # un-evolved partitions must not narrow the table schema.
+            prior = manifest.get("schema")
+            schema = StructType.fromJson(prior) if prior else StructType()
+            known = set(schema.fieldNames())
+            for f in out_schema.fields:
+                if f.name not in known:
+                    schema.add(f)
+            manifest["schema"] = schema.jsonValue()
+
+        self._commit(new_dirs, read_versions, apply, "MERGE")
         return {
-            "inserted": counts.get("insert", 0),
-            "updated": counts.get("update", 0),
+            **counts,
             # carried rows were proven untouchable by stats, so they are
             # exactly the rows the un-pruned merge would have classified
             # "keep" — counters stay identical with pruning on
-            "unchanged": counts.get("unchanged", 0) + counts.get("keep", 0) + carried_rows,
-            "soft_deleted": 0,
+            "unchanged": counts["unchanged"] + carried_rows,
             "partitions_rewritten": len(affected),
             "files_pruned": files_pruned,
             "files_rewritten": rewritten_files,
@@ -990,112 +999,36 @@ class PartitionedMergeTable:
 
         Returns {"compacted": {value: files_before}, "skipped": [value]}.
         """
-        import shutil
-
         manifest = self._read_manifest()
         parts = manifest["parts"]
-        selected = (
-            {str(v): parts[str(v)] for v in part_values if str(v) in parts}
-            if part_values is not None
-            else dict(parts)
-        )
-        plan: dict[str, tuple[str, int]] = {}
-        live_rels: dict[str, list[str]] = {}
-        for v, d in selected.items():
-            rels = self._live_files(manifest, v)
-            if len(rels) > min_files:
-                plan[v] = (d, len(rels))
-                live_rels[v] = rels
+        selected = list(parts) if part_values is None else [
+            str(v) for v in part_values if str(v) in parts
+        ]
+        live_rels = {v: self._live_files(manifest, v) for v in selected}
+        plan = [v for v in selected if len(live_rels[v]) > min_files]
         if not plan:
             return {"compacted": {}, "skipped": []}
 
         stamp = _unique_stamp()
-        new_dirs: dict[str, str] = {}
-        for i, (v, (d, _)) in enumerate(plan.items()):
-            nd = f"c_{i}_{stamp}"
+        new_dirs = {v: f"c_{i}_{stamp}" for i, v in enumerate(plan)}
+        for v, nd in new_dirs.items():
             # read the partition's live FILES (they may span directories
             # after stats-pruned merges), consolidate into one dir
-            self.spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(self.root, rel) for rel in live_rels[v]]
-            ).coalesce(target_files_per_partition).write.mode("overwrite").parquet(
+            live = self._read_files(manifest, live_rels[v])
+            live.coalesce(target_files_per_partition).write.mode("overwrite").parquet(
                 os.path.join(self.root, nd)
             )
-            new_dirs[v] = nd
 
-        compacted: dict[str, int] = {}
-        skipped: list[str] = []
-        with self._commit_lock():
-            manifest = self._read_manifest()
-            for v, nd in new_dirs.items():
-                read_dir, n_files = plan[v]
-                if manifest["parts"].get(v) != read_dir:  # advanced mid-rewrite
-                    shutil.rmtree(os.path.join(self.root, nd), ignore_errors=True)
-                    skipped.append(v)
-                    continue
-                manifest["parts"][v] = nd
-                # compaction re-consolidates the file-granular live set
-                manifest.setdefault("files", {})[v] = [
-                    f"{nd}/{f}"
-                    for f in sorted(os.listdir(os.path.join(self.root, nd)))
-                    if f.endswith(".parquet")
-                ]
-                manifest["history"].append({"dir": nd, "part": v})
-                compacted[v] = n_files
-            tmp = self._manifest_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            os.replace(tmp, self._manifest_path)
-            if self.delta_log is not None and compacted:
-                self._log_commit(manifest, "OPTIMIZE")
+        skipped = self._commit(
+            new_dirs,
+            {v: parts[v] for v in plan},
+            # compaction re-consolidates the file-granular live set
+            lambda m, fresh: self._install(m, fresh, {}),
+            "OPTIMIZE",
+            skip_stale=True,
+        )
+        compacted = {v: len(live_rels[v]) for v in plan if v not in skipped}
         return {"compacted": compacted, "skipped": skipped}
-
-    def vacuum(self, keep_last: int = 2) -> list[str]:
-        """Drop superseded partition-version directories, keeping the
-        ``keep_last`` most recent history entries PER PARTITION plus
-        everything currently referenced (``keep_last=0`` keeps only the
-        live versions). Retention is per partition value so a busy
-        partition cannot evict a quiet partition's retained versions
-        (ADVICE r4). Mirrors the whole-table vacuum: manifest rewrites
-        first under the commit lock, directories are removed after, so a
-        concurrent reader of a live partition never loses it."""
-        import shutil
-
-        with self._commit_lock():
-            manifest = self._read_manifest()
-            live = set(manifest["parts"].values())
-            # stats-pruned merges carry files in superseded directories:
-            # any dir still referenced by the file-granular live set is
-            # live, whatever its history age
-            for rels in manifest.get("files", {}).values():
-                for rel in rels:
-                    live.add(rel.split("/", 1)[0])
-            history = manifest["history"]
-            # entries are {"dir", "part"} dicts; legacy manifests hold bare
-            # dir strings with no partition association — group those as one
-            by_part: dict[object, list[str]] = {}
-            for entry in history:
-                d = entry["dir"] if isinstance(entry, dict) else entry
-                p = entry.get("part") if isinstance(entry, dict) else None
-                by_part.setdefault(p, []).append(d)
-            to_drop = [
-                d
-                for dirs in by_part.values()
-                for d in (dirs[:-keep_last] if keep_last else dirs)
-                if d not in live
-            ]
-            dropped = set(to_drop)
-            manifest["history"] = [
-                e
-                for e in history
-                if (e["dir"] if isinstance(e, dict) else e) not in dropped
-            ]
-            tmp = self._manifest_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            os.replace(tmp, self._manifest_path)
-        for d in to_drop:
-            shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
-        return to_drop
 
 
 def merge_with_retry(
@@ -1204,10 +1137,7 @@ def diff_frames(
         ]
         cmp_old = F.struct(*[F.col(f"o.{c}") for c in shared])
         cmp_new = F.struct(*[F.col(f"n.{c}") for c in shared])
-    on = [F.col(f"o.{k}").eqNullSafe(F.col(f"n.{k}")) for k in keys]
-    cond = on[0]
-    for c in on[1:]:
-        cond = cond & c
+    cond = reduce(lambda a, b: a & b, [F.col(f"o.{k}").eqNullSafe(F.col(f"n.{k}")) for k in keys])
     j = old.alias("o").join(new.alias("n"), cond, "full_outer")
     key_present_new = F.col(f"n.{keys[0]}").isNotNull()
     key_present_old = F.col(f"o.{keys[0]}").isNotNull()
@@ -1249,13 +1179,10 @@ def vacuum_tombstones(table, retention_ms: int | None = None, now_ms: int | None
     older than the horizon fail loudly on the missing files. Returns
     the deleted relative paths.
     """
-    from etl_stack_spark.operators.delta_log import TOMBSTONE_RETENTION_MS
-
     if table.delta_log is None:
         raise ValueError(f"vacuum_tombstones needs a Delta log: {table.root}")
-    retention = TOMBSTONE_RETENTION_MS if retention_ms is None else retention_ms
     now = int(time.time() * 1000) if now_ms is None else now_ms
-    cutoff = now - retention
+    cutoff = now - (TOMBSTONE_RETENTION_MS if retention_ms is None else retention_ms)
     deleted: list[str] = []
     with table._commit_lock():
         state = table.delta_log.state()
@@ -1271,30 +1198,16 @@ def vacuum_tombstones(table, retention_ms: int | None = None, now_ms: int | None
             touched_dirs = {rel.split("/", 1)[0] for rel in deleted}
             # drop now-empty version directories entirely
             for d in sorted(touched_dirs):
-                dd = os.path.join(table.root, d)
-                try:
-                    if os.path.isdir(dd) and not os.listdir(dd):
-                        os.rmdir(dd)
-                except OSError:  # pragma: no cover — concurrent cleanup
-                    pass
+                with contextlib.suppress(OSError):  # not empty, or already gone
+                    os.rmdir(os.path.join(table.root, d))
             # a dir that lost files is no longer a complete snapshot:
             # prune its manifest-history entries so time travel can only
-            # resolve intact versions (live pointers are never pruned —
-            # live files were excluded above)
+            # resolve intact versions (live dirs are never pruned — live
+            # files were excluded above)
             manifest = table._read_manifest()
-            manifest["history"] = [
-                e
-                for e in manifest["history"]
-                if (e["dir"] if isinstance(e, dict) else e) not in touched_dirs
-                or (e["dir"] if isinstance(e, dict) else e) in set(
-                    manifest.get("parts", {}).values()
-                )
-                or (e if isinstance(e, str) else e["dir"]) == manifest.get("current")
-            ]
-            tmp = table._manifest_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            os.replace(tmp, table._manifest_path)
+            gone = touched_dirs - table._live_dirs(manifest)
+            manifest["history"] = [e for e in manifest["history"] if _entry(e)[0] not in gone]
+            table._write_manifest(manifest)
     return deleted
 
 
@@ -1312,9 +1225,11 @@ def fsck(table, remove_orphans: bool = False) -> dict:
     * ``history_missing`` — superseded versions whose dirs are gone
       (breaks time travel only). ``remove_orphans=True`` prunes these
       entries from the manifest so history matches disk.
-    * ``orphans`` — ``v_*``/``p_*`` dirs on disk the manifest has never
-      heard of (crashed writers park data there: snapshots are written
-      BEFORE the manifest commit). ``remove_orphans=True`` deletes them.
+    * ``orphans`` — ``v_*``/``p_*``/``c_*`` dirs on disk the manifest has
+      never heard of (crashed writers park data there: snapshots are
+      written BEFORE the manifest commit, and a partitioned merge that
+      died between its write and its renames leaves a ``p_stage_*``
+      dir). ``remove_orphans=True`` deletes them.
     * ``stale_lock`` — a ``COMMIT_LOCK`` older than 60s (the lock-wait
       deadline: any live committer would have timed out by now);
       ``remove_orphans=True`` unlinks it.
@@ -1323,44 +1238,17 @@ def fsck(table, remove_orphans: bool = False) -> dict:
     first — that is the one mutation that cannot take the lock). Returns
     ``{"ok": bool, findings..., "removed": [...]}``.
     """
-    import shutil
-
     root = table.root
     manifest = table._read_manifest()
-    if "parts" in manifest:
-        live = dict(manifest["parts"])
-        # dirs referenced by the file-granular live set (stats-pruned
-        # merges carry files in superseded dirs) are live too
-        for v, rels in manifest.get("files", {}).items():
-            for rel in rels:
-                live[f"file:{rel}"] = rel.split("/", 1)[0]
-        history = [
-            (e["dir"] if isinstance(e, dict) else e) for e in manifest["history"]
-        ]
-        # p_ = merge-written partition versions, c_ = compaction rewrites:
-        # a compactor that died between data write and manifest swap parks
-        # a c_ dir no manifest knows — it must be orphan-collectable too
-        prefix: tuple[str, ...] = ("p_", "c_")
-    else:
-        live = {"current": manifest["current"]} if manifest["current"] else {}
-        history = list(manifest["history"])
-        prefix = ("v_",)
-
-    def has_parquet(d: str) -> bool:
-        p = os.path.join(root, d)
-        return os.path.isdir(p) and any(
-            f.endswith(".parquet") for f in os.listdir(p)
-        )
-
-    live_missing = sorted(d for d in live.values() if not has_parquet(d))
-    history_missing = sorted(
-        d for d in set(history) - set(live.values()) if not has_parquet(d)
-    )
-    known = set(history) | set(live.values())
+    live = table._live_dirs(manifest)
+    history = {_entry(e)[0] for e in manifest["history"]}
+    live_missing = sorted(d for d in live if not table._parquet_files(d))
+    history_missing = sorted(d for d in history - live if not table._parquet_files(d))
+    known = history | live
     orphans = sorted(
         d
         for d in os.listdir(root)
-        if d.startswith(prefix) and os.path.isdir(os.path.join(root, d))
+        if d.startswith(table._ORPHAN_PREFIXES) and os.path.isdir(os.path.join(root, d))
         and d not in known
     )
     lock_path = os.path.join(root, "COMMIT_LOCK")
@@ -1377,18 +1265,8 @@ def fsck(table, remove_orphans: bool = False) -> dict:
         with table._commit_lock():
             manifest = table._read_manifest()  # re-read under the lock
             gone = set(history_missing)
-            if "parts" in manifest:
-                manifest["history"] = [
-                    e
-                    for e in manifest["history"]
-                    if (e["dir"] if isinstance(e, dict) else e) not in gone
-                ]
-            else:
-                manifest["history"] = [d for d in manifest["history"] if d not in gone]
-            tmp = table._manifest_path + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            os.replace(tmp, table._manifest_path)
+            manifest["history"] = [e for e in manifest["history"] if _entry(e)[0] not in gone]
+            table._write_manifest(manifest)
             removed.extend(sorted(gone))
             for d in orphans:
                 shutil.rmtree(os.path.join(root, d), ignore_errors=True)

@@ -102,14 +102,15 @@ def test_changed_only_filters_unchanged(spark, table):
 
 def test_delete_where_like_pattern(spark, table):
     docs = spark.createDataFrame(
-        [("d1", "x"), ("d1_part_1", "y"), ("d1_part_2", "z"), ("d2", "w")],
+        [("d1", "x"), ("d1_part_1", "y"), ("d1_part_2", "z"), ("d2", "w"), (None, "v")],
         "content_id string, content_hash string",
     )
     t = ParquetMergeTable(spark, table.root + "_docs")
     t.overwrite(docs)
     n = t.delete_where(F.col("content_id").like("d1_part_%"))
     assert n == 2
-    assert {r["content_id"] for r in t.read().collect()} == {"d1", "d2"}
+    # a row whose predicate is NULL is not deleted (SQL/Delta DELETE WHERE)
+    assert {r["content_id"] for r in t.read().collect()} == {"d1", "d2", None}
 
 
 def test_vacuum_keeps_current_and_recent(spark, table):
@@ -119,6 +120,14 @@ def test_vacuum_keeps_current_and_recent(spark, table):
     dropped = table.vacuum(keep_last=2)
     assert len(dropped) == 1
     assert table.read().count() == 3  # current snapshot still readable
+    # keep_last=0: every superseded snapshot goes, the current one stays
+    import os
+
+    current = table.current_version()
+    superseded = [v for v in table._read_manifest()["history"] if v != current]
+    assert superseded and table.vacuum(keep_last=0) == superseded
+    assert {d for d in os.listdir(table.root) if d.startswith("v_")} == {current}
+    assert table.read().count() == 3
 
 
 def test_time_travel_read(spark, table):
@@ -513,6 +522,16 @@ def test_partitioned_evolve_column_survives_read(spark, tmp_path):
     # the table schema back
     t.merge(_ptable_rows(spark, [("c2", "q2", "c", "g2")]), keys=keys)
     assert "score" in t.read().columns
+    # the evolved column is the table's: a merge into a partition written
+    # before the evolve may carry it under the default on_extra_columns
+    scored = spark.createDataFrame(
+        [("c2", "q1", "b", "g1x", 0.5)],
+        "client_id string, external_id string, title string, "
+        "content_hash string, score double",
+    )
+    assert t.merge(scored, keys=keys)["updated"] == 1
+    row = t.read(["c2"]).filter(F.col("external_id") == "q1").first()
+    assert row["score"] == 0.5
 
 
 def test_partitioned_vacuum_keep_last_zero_and_per_partition(spark, tmp_path):
@@ -796,11 +815,20 @@ def test_fsck_collects_crashed_compaction_dirs(spark, tmp_path):
     os.makedirs(crashed)
     spark.range(3).write.mode("overwrite").parquet(crashed)
 
+    # and a crashed merge: it wrote all its partitions into a staging
+    # dir but died before renaming them into place
+    stage = os.path.join(t.root, "p_stage_99999_1_0")
+    spark.range(3).withColumn("_dir", F.lit("p_0_99999_1_0")).write.partitionBy(
+        "_dir"
+    ).parquet(stage)
+
     rep = fsck(t)
     assert "c_9_99999_1" in rep["orphans"]
+    assert "p_stage_99999_1_0" in rep["orphans"]
     assert all(d not in rep["orphans"] for d in live_c)
     fsck(t, remove_orphans=True)
     assert not os.path.exists(crashed)
+    assert not os.path.exists(stage)
     assert fsck(t)["ok"]
     assert t.read().count() == 2
 
@@ -1027,6 +1055,55 @@ def test_merge_job_budget(spark, table):
     )
     assert stats == {"inserted": 1, "updated": 1, "unchanged": 1, "soft_deleted": 1}
     assert 0 < jobs <= 7, jobs
+
+
+def test_partitioned_merge_job_budget(spark, tmp_path):
+    """One partitioned merge = one validation aggregate + one
+    classify-and-write job for ALL affected partitions, its counters
+    observed and its target read at the recorded table schema: at most 7
+    jobs whether it touches 1 or 3 partitions (a cached frame, a counting
+    job and one write per partition took 11 and 13)."""
+    from etl_stack_spark.operators.merge import PartitionedMergeTable
+
+    t = PartitionedMergeTable(spark, str(tmp_path / "ptj"), "client_id")
+    keys = ["client_id", "external_id"]
+    t.merge(
+        _ptable_rows(spark, [
+            (c, f"{c}p{i}", "t", f"h{i}") for c in ("c1", "c2", "c3") for i in range(2)
+        ]),
+        keys=keys,
+    )
+
+    def core(stats):
+        # footer stats may carry files the source's key range misses, so
+        # only the rewritten + carried total is fixed
+        out = {k: stats[k] for k in (
+            "inserted", "updated", "unchanged", "soft_deleted", "partitions_rewritten",
+        )}
+        out["rows"] = stats["rows_rewritten"] + stats["rows_carried"]
+        return out
+
+    one = _ptable_rows(spark, [("c1", "c1p0", "t2", "h0x"), ("c1", "c1p9", "t", "h9")])
+    stats, jobs = jobs_in(spark, "ptj_one", lambda: t.merge(one, keys=keys))
+    assert core(stats) == {
+        "inserted": 1, "updated": 1, "unchanged": 1, "soft_deleted": 0,
+        "partitions_rewritten": 1, "rows": 3,
+    }
+    assert 0 < jobs <= 7, jobs
+
+    three = _ptable_rows(spark, [
+        ("c1", "c1p1", "t3", "h1x"), ("c2", "c2p9", "t", "h9"), ("c3", "c3p0", "t", "h0"),
+    ])
+    stats, jobs = jobs_in(spark, "ptj_three", lambda: t.merge(three, keys=keys))
+    assert core(stats) == {
+        "inserted": 1, "updated": 1, "unchanged": 6, "soft_deleted": 0,
+        "partitions_rewritten": 3, "rows": 8,
+    }
+    assert 0 < jobs <= 7, jobs
+    rows = {(r["client_id"], r["external_id"]): r["title"] for r in t.read().collect()}
+    assert len(rows) == 8
+    assert rows[("c1", "c1p0")] == "t2" and rows[("c1", "c1p1")] == "t3"
+    assert rows[("c2", "c2p9")] == "t" and rows[("c3", "c3p1")] == "t"
 
 
 def test_merge_keeps_source_observation(spark, table):
