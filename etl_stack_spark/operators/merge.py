@@ -932,9 +932,18 @@ class PartitionedMergeTable(_MergeTable):
                     merged.repartitionByRange(cluster_files, *cluster_by) if cluster_by else merged
                 )
 
+            # no file to read (new or fully pruned partitions): a table
+            # with a recorded schema still aligns the source to it, so the
+            # schema-drift policy holds; only the table's first merge has
+            # nothing to align to
+            if target_files:
+                target = self._read_files(base, target_files)
+            elif base.get("schema"):
+                target = self.spark.createDataFrame([], StructType.fromJson(base["schema"]))
+            else:
+                target = None
             out, counters = _merge_pass(
-                self._read_files(base, target_files) if target_files else None,
-                source, keys, hash_col, audit_ts_col, on_extra_columns, shape=shape,
+                target, source, keys, hash_col, audit_ts_col, on_extra_columns, shape=shape,
             )
             if cluster_by:
                 out = out.sortWithinPartitions("_dir", *cluster_by)

@@ -22,6 +22,7 @@ import threading
 from pyspark.sql import DataFrame
 
 _STORES: dict[tuple, object] = {}
+_BUILDERS: list = []  # every decorated builder, in registration order
 
 # Hits are lock-free; a miss is double-checked under one lock. The lock
 # does not prevent cache leaks — Spark's CacheManager merges identical
@@ -52,7 +53,16 @@ def session_store(builder):
                 hit = _STORES[key] = builder(spark, sf_dir)
             return hit
 
+    _BUILDERS.append(get)
     return get
+
+
+def builders() -> list:
+    """The package's store builders (decorated), in registration order:
+    a module registers its builders top to bottom after importing the
+    modules it reads from, so a store's inputs come before the store.
+    Builders decorated outside the package (e.g. in tests) are left out."""
+    return [b for b in _BUILDERS if b.__module__.startswith(__package__ + ".")]
 
 
 def _frames(value) -> list[DataFrame]:

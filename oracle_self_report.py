@@ -73,17 +73,13 @@ def main() -> None:
 
     from etl_stack_spark.queries import all_oracles, all_queries
     from etl_stack_spark.session import get_spark
+    from tests.conftest import duck_with_views
     from tests.oracle import _harmonize, canon_frame
 
     spark = get_spark("oracle-self-report")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(sf_dir, t)}.parquet')"
-        )
+    # the same views test_oracle_parity queries
+    con = duck_with_views(duckdb.connect(), sf_dir)
 
     queries, oracles = all_queries(), all_oracles()
     sf_key = os.path.basename(os.path.abspath(sf_dir).rstrip("/"))

@@ -534,6 +534,41 @@ def test_partitioned_evolve_column_survives_read(spark, tmp_path):
     assert row["score"] == 0.5
 
 
+@pytest.mark.parametrize("mode", ["error", "ignore", "evolve"])
+def test_partitioned_merge_reading_no_target_keeps_drift_policy(spark, tmp_path, mode):
+    """A merge that reads no target file still applies the schema-drift
+    policy against the recorded table schema: into a brand-new partition,
+    and into an existing partition whose files are all stats-pruned."""
+    from etl_stack_spark.operators.merge import PartitionedMergeTable
+
+    keys = ["client_id", "external_id"]
+    cases = {"new": ("c9", "n1"), "pruned": ("c1", "z9")}
+    for case, (client, ext) in cases.items():
+        t = PartitionedMergeTable(spark, str(tmp_path / case), "client_id")
+        t.merge(_ptable_rows(spark, [("c1", "p1", "a", "h1"), ("c1", "p2", "b", "h2")]), keys=keys)
+        src = spark.createDataFrame(
+            [(client, ext, "x", "g1", "junk")],
+            "client_id string, external_id string, title string, "
+            "content_hash string, debug string",
+        )
+        if mode == "error":
+            with pytest.raises(ValueError, match="debug"):
+                t.merge(src, keys=keys)
+            assert "debug" not in t.read().columns and t.read().count() == 2, case
+            continue
+        stats = t.merge(src, keys=keys, on_extra_columns=mode)
+        assert stats["inserted"] == 1, (case, stats)
+        if case == "pruned":
+            assert stats["files_pruned"] >= 1 and stats["rows_carried"] == 2, stats
+        out = t.read()
+        rows = {r["external_id"]: r for r in out.collect()}
+        assert set(rows) == {"p1", "p2", ext}, case
+        if mode == "ignore":
+            assert "debug" not in out.columns, case
+        else:
+            assert rows[ext]["debug"] == "junk" and rows["p1"]["debug"] is None, case
+
+
 def test_partitioned_vacuum_keep_last_zero_and_per_partition(spark, tmp_path):
     """ADVICE r4: keep_last=0 must drop ALL superseded versions (the old
     history[:-0] slice made it a no-op), and retention is per partition —

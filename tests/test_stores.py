@@ -1,7 +1,8 @@
 """The session-store registry (etl_stack_spark/queries/stores.py): one
 handle per key under concurrent cold calls, no entry left by a failed
-build, per-module clearing, path normalization of the key — and the rule
-that no other query module keys a cache on the Spark session."""
+build, per-module clearing, path normalization of the key, bench.py's
+warmup walking exactly the package's builders — and the rule that no
+other query module keys a cache on the Spark session."""
 
 from __future__ import annotations
 
@@ -14,11 +15,29 @@ import pytest
 
 from etl_stack_spark.queries import geo, stores, text_dedup
 from etl_stack_spark.queries import similarity as sim_q
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 def _persisted_rdds(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_bench_warm_walks_every_package_store(spark):
+    """bench.warm_stores builds and times every store the package
+    registers, under its builder's name, and no builder registered
+    outside the package (here, one local to this test)."""
+    import bench
+
+    @stores.session_store
+    def local_only(spark, sf_dir):
+        return spark.range(1)
+
+    out = bench.warm_stores(spark, SF_ORACLE)
+    package = [b.__name__ for b in stores.builders()]
+    assert sorted(out) == sorted(package)
+    assert len(package) == len(set(package)) == 17
+    assert {"lm_scored", "_lead_distance_view", "sig_base", "_ivfpq_trained"} <= set(out)
+    assert "local_only" not in out
 
 
 def test_concurrent_cold_calls_get_one_handle(spark):
@@ -135,3 +154,4 @@ def test_no_other_query_module_keys_on_the_session():
         if p.name != "stores.py" and "applicationId" in p.read_text()
     ]
     assert not offenders, f"hand-rolled session cache in {offenders}; use stores.session_store"
+
