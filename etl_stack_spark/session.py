@@ -56,6 +56,15 @@ def get_spark(app_name: str = "etl-stack-spark", cpus: int | None = None) -> Spa
       and lopsided group-bys at scale.
     - Arrow enabled: every pandas UDF crosses JVM<->Python in columnar
       batches, not pickled rows.
+    - No per-op recompiling or call-site stamping (counts at the confs
+      below): the codegen cache holds 4096 classes, not 100, and
+      PySpark's ``dataFrameDebugging`` is off. The trade-off: an error
+      raised by a failing expression no longer carries PySpark's
+      "DataFrame query context", the Python file:line where the
+      expression was built. Both confs are static, so a session
+      ``get_spark`` did not build keeps PySpark's defaults and
+      ``ensure_session_confs`` cannot change them; a ``newSession()`` of
+      this session shares them.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -94,6 +103,16 @@ def get_spark(app_name: str = "etl-stack-spark", cpus: int | None = None) -> Spa
         # the events table stores TIMESTAMP(NANOS) which Spark has no native
         # type for; read as long and convert in load_table
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Both static. The default 100-entry codegen cache thrashes: a
+        # 25-query perfbench query_mix round needs ~275 generated classes
+        # and recompiled 237-272 every steady-state round (0-8 at 4096);
+        # one noop pass over all 217 registered queries compiles ~2,700
+        # at sf0.001. Call-site capture adds ~4 py4j round trips and a
+        # stack walk to every Column call: composing the ingest cleaning
+        # plan took 2,061 round trips with it, 681 without (a whole
+        # perfbench ingest op, on its own thread: 3,689 and 1,189).
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # createDataFrame/parallelize slice local data into defaultParallelism
     # partitions (= cores), so EVERY tiny literal frame scans as `cores`
