@@ -12,8 +12,9 @@ Shapes chosen for scale:
 - n-gram Jaccard: shingle-inverted-index self-join (pairs sharing ≥1
   shingle) then |∩|/|∪| — exact but heavier than LSH; use on candidate
   subsets or small corpora.
-- embedding: cosine over normalized vectors; brute force here, LSH-bucketed
-  variant in operators/similarity.py for scale.
+- embedding: exact cosine pairs, scored by the refine helpers of
+  operators/similarity.py (``_vectors``/``_cosine``); all-pairs mode for
+  recall checks, LSH-bucketed candidates for scale.
 """
 
 from __future__ import annotations
@@ -21,6 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_stack_spark.operators.similarity import (
+    N_HYPERPLANES,
+    _cosine,
+    _vectors,
+    blocked_cell_pairs,
+)
 from etl_stack_spark.operators.text import (
     BAND_SIZE,
     N_MINHASH,
@@ -314,23 +321,13 @@ def embedding_near_duplicates(
             f"> max_rows={max_rows}. Use embedding_near_duplicates_lsh, or raise "
             "max_rows explicitly for a deliberate small-corpus exact run."
         )
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    norm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(F.transform(c, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-    )
-    # norm hoisted out of the pair join: computed once per vector, not
-    # per pair — same scalar, so cosine stays bit-identical.
-    with_v = df.select(F.col(id_col), v.alias("v")).withColumn("n", norm(F.col("v")))
-    a = with_v.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("n").alias("na"))
-    b = with_v.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("n").alias("nb"))
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    cos = dot / (F.col("na") * F.col("nb"))
+    with_v = _vectors(df, [id_col], vec_col)
+    a = _vectors(with_v, [F.col(id_col).alias("id_a")], v="va", n="na")
+    b = _vectors(with_v, [F.col(id_col).alias("id_b")], v="vb", n="nb")
     return (
         a.crossJoin(b)
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(cos, 6))
+        .withColumn("cosine", _cosine("va", "na", "vb", "nb"))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
@@ -341,7 +338,6 @@ def embedding_near_duplicates_lsh(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     threshold: float = 0.95,
-    bucketed: bool = False,
 ) -> DataFrame:
     """(id_a < id_b, cosine ≥ threshold) near-dup pairs via sign-projection
     LSH — the 100 TB shape: no O(n²) stage.
@@ -355,22 +351,12 @@ def embedding_near_duplicates_lsh(
     bounded: 9 probe rows per vector, equi-join on bucket id, AQE splits
     skewed buckets. Deterministic hyperplanes ⇒ SQL-expressible oracle.
 
-    ``bucketed``: ``df`` is already an ``lsh_bucket_frame`` staging frame
-    (id_col, v, n, bucket) — skip the projection; pass a persisted frame
-    when several LSH consumers share one corpus (it is also re-read three
+    ``df`` may be an ``lsh_bucket_frame`` staging frame: its stored v, n
+    and bucket are read, not recomputed. Pass a persisted one when
+    several LSH consumers share one corpus (it is also re-read three
     times inside this operator: probes + both vector re-attach sides).
     """
-    from etl_stack_spark.operators.similarity import N_HYPERPLANES, _dot, _norm, lsh_bucket
-
-    if bucketed:
-        base = df
-    else:
-        v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        base = (
-            df.select(F.col(id_col), v.alias("v"))
-            .withColumn("bucket", lsh_bucket(F.col("v")))
-            .withColumn("n", _norm(F.col("v")))
-        )
+    base = _vectors(df, [id_col], vec_col, n_planes=N_HYPERPLANES)
     probes = F.array(
         F.col("bucket"),
         *[F.col("bucket").bitwiseXOR(F.lit(1 << hk)) for hk in range(N_HYPERPLANES)],
@@ -408,16 +394,11 @@ def embedding_near_duplicates_lsh(
     # the price of a full pair-dedup aggregation). A round-robin of the
     # two-long pair stream is far cheaper than that dedup and AQE-exempt.
     cand = cand.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    # norms ride along with the re-attached vectors (hoisted out of the
-    # pair scoring — bit-identical cosine, one traversal per candidate).
-    va = base.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("n").alias("na"))
-    vb = base.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("n").alias("nb"))
+    va = _vectors(base, [F.col(id_col).alias("id_a")], v="va", n="na")
+    vb = _vectors(base, [F.col(id_col).alias("id_b")], v="vb", n="nb")
     return (
         cand.join(va, "id_a").join(vb, "id_b")
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6),
-        )
+        .withColumn("cosine", _cosine("va", "na", "vb", "nb"))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
@@ -440,27 +421,13 @@ def semantic_dup_pairs(
     learned from the candidate corpus — cosine and the threshold test
     are pairwise, so with fixed clusters removing rows never creates or
     destroys another pair."""
-    from etl_stack_spark.operators.similarity import (
-        _as_double,
-        _dot,
-        _norm,
-        blocked_cell_pairs,
-    )
-
-    v = emb.select(
-        F.col(id_col), F.col(cluster_col).alias("_cl"), _as_double(F.col(vec_col)).alias("_v")
-    ).withColumn("_n", _norm(F.col("_v")))
+    v = _vectors(emb, [id_col, F.col(cluster_col).alias("_cl")], vec_col, "_v", "_n")
     a = v.select(F.col(id_col).alias("_ida"), "_cl", F.col("_v").alias("_va"), F.col("_n").alias("_na"))
     b = v.select(F.col(id_col).alias("_idb"), "_cl", F.col("_v").alias("_vb"), F.col("_n").alias("_nb"))
     return (
         blocked_cell_pairs(a, b, "_cl", "_ida", "_idb", max_cell_rows)
         .filter(F.col("_ida") < F.col("_idb"))
-        .filter(
-            F.round(
-                _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")), 6
-            )
-            >= threshold
-        )
+        .filter(_cosine("_va", "_na", "_vb", "_nb") >= threshold)
         .select("_ida", "_idb")
     )
 
@@ -494,9 +461,9 @@ def semantic_dedup(
     """
     # Norms are computed ONCE per vector, before the pair join — the
     # per-pair work is then a single array traversal (the dot product)
-    # instead of three. Bit-identical to cosine(a, b): _norm is a
-    # deterministic scalar of the vector, so dividing by the carried
-    # value equals dividing by a recomputed one. ``pairs`` injects a
+    # instead of three. Bit-identical to recomputing the norms per pair:
+    # _norm is a deterministic scalar of the vector, so dividing by the
+    # carried value equals dividing by a recomputed one. ``pairs`` injects a
     # precomputed semantic_dup_pairs table over a SUPERSET corpus at the
     # same (cluster_col semantics, threshold) — restricted here by two
     # semi-joins; see semantic_dup_pairs for the intrinsic-cluster

@@ -82,6 +82,34 @@ class DeltaLog:
                 out.append(int(f[:20]))
         return sorted(out)
 
+    def _actions(self, version: int) -> list[dict]:
+        """The actions of one JSON commit, in file order."""
+        with open(os.path.join(self.log_dir, _version_fname(version))) as f:
+            return [json.loads(line) for line in f if line.strip()]
+
+    def data_changes(self, version: int) -> tuple[list[str], list[str]]:
+        """(added, removed) relative paths of one commit's data-changing
+        actions — what a streaming reader of that version consumes.
+        OPTIMIZE commits carry ``dataChange: false`` and yield neither."""
+        adds: list[str] = []
+        removes: list[str] = []
+        for action in self._actions(version):
+            for kind, out in (("add", adds), ("remove", removes)):
+                a = action.get(kind)
+                if a and a.get("dataChange", True):
+                    out.append(a["path"])
+        return adds, removes
+
+    def schema_string(self) -> str:
+        """The newest ``metaData.schemaString``, scanning commits newest-
+        first (cheap: metaData appears in commit 0 and on schema
+        changes)."""
+        for v in reversed(self.versions()):
+            for action in self._actions(v):
+                if "metaData" in action:
+                    return action["metaData"]["schemaString"]
+        raise FileNotFoundError(f"no metaData action found under {self.log_dir}")
+
     def _last_checkpoint(self) -> dict | None:
         # Delta protocol names the pointer `_last_checkpoint` (lowercase);
         # tables written before r10 used `_LAST_CHECKPOINT` — read both so
@@ -150,30 +178,26 @@ class DeltaLog:
             if v >= start and (as_of is None or v <= as_of)
         ]
         for v in versions:
-            with open(os.path.join(self.log_dir, _version_fname(v))) as f:
-                for line in f:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "metaData" in action:
-                        schema_string = action["metaData"]["schemaString"]
-                        metadata_id = action["metaData"]["id"]
-                        partition_columns = list(
-                            action["metaData"].get("partitionColumns") or []
-                        )
-                    elif "add" in action:
-                        a = action["add"]
-                        live[a["path"]] = {
-                            "size": a["size"],
-                            "modificationTime": a["modificationTime"],
-                            "stats": a.get("stats"),
-                            "partitionValues": a.get("partitionValues") or {},
-                        }
-                        tombstones.pop(a["path"], None)
-                    elif "remove" in action:
-                        r = action["remove"]
-                        live.pop(r["path"], None)
-                        tombstones[r["path"]] = r.get("deletionTimestamp") or 0
+            for action in self._actions(v):
+                if "metaData" in action:
+                    schema_string = action["metaData"]["schemaString"]
+                    metadata_id = action["metaData"]["id"]
+                    partition_columns = list(
+                        action["metaData"].get("partitionColumns") or []
+                    )
+                elif "add" in action:
+                    a = action["add"]
+                    live[a["path"]] = {
+                        "size": a["size"],
+                        "modificationTime": a["modificationTime"],
+                        "stats": a.get("stats"),
+                        "partitionValues": a.get("partitionValues") or {},
+                    }
+                    tombstones.pop(a["path"], None)
+                elif "remove" in action:
+                    r = action["remove"]
+                    live.pop(r["path"], None)
+                    tombstones[r["path"]] = r.get("deletionTimestamp") or 0
         all_versions = [
             v for v in self.versions() if as_of is None or v <= as_of
         ]

@@ -1,14 +1,30 @@
 """Similarity search over embedding columns (array<float>).
 
-Two tiers, as a 100 TB engine needs:
-- ``brute_force_topk``: exact cosine top-k — query set × corpus, a
-  broadcast of the (small) query side, per-partition scoring, window
-  top-k. Right answer at any corpus size IF the query set is small.
-- ``lsh_bucketed_topk``: sign-random-projection LSH — 16 deterministic
-  hyperplanes hash every vector to a bucket; candidates = same bucket;
-  exact cosine re-rank inside. Sub-linear candidate sets at the cost of
-  recall (multi-probe = widen with neighboring buckets at Hamming
-  distance 1 if recall matters).
+Every search here is filter-and-refine: an operator is a CANDIDATE
+GENERATOR that decides which (query, vector) pairs are worth scoring,
+and all of them hand those pairs to the same exact refine —
+
+- ``_vectors``: the (id, v, n) projection — v the embedding cast to
+  double[], n its norm, computed once per vector, never per pair. An
+  ``lsh_bucket_frame`` staging frame already holds both, so it is read,
+  not recomputed;
+- ``_cosine``: the one rounded score, ``round(dot / (n_a * n_b), 6)``;
+- ``_top_k``: ``row_number`` per query over (cosine desc, id), filtered
+  to k (Catalyst's WindowGroupLimit prunes map-side before the shuffle).
+
+The generators:
+
+- ``brute_force_topk``: every vector (broadcast query side × corpus) —
+  exact at any corpus size IF the query set is small.
+- ``lsh_bucketed_topk``: sign-random-projection LSH — 8 deterministic
+  hyperplanes hash every vector to a bucket; candidates share the
+  query's bucket (``multi_probe``: also its Hamming-1 neighbours).
+- ``ivf_topk``: the query's ``n_probe`` nearest k-means cells.
+- ``hard_negatives``: every vector whose label differs from the query's.
+- ``knn_graph_within``: every pair inside one partition value, for all
+  points at once.
+- ``ivfpq_topk(refine=...)``: an IVF-PQ ADC shortlist (``pq_adc_topk``
+  is the same scan without cells or refine).
 
 Hyperplane constants derive from a fixed integer formula so the DuckDB
 oracle regenerates them bit-for-bit.
@@ -16,8 +32,10 @@ oracle regenerates them bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from etl_stack_spark.operators.rank import tiered_top_k
 
 N_HYPERPLANES = 8
 EMB_DIM = 64
@@ -32,6 +50,11 @@ def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
+def _lits(xs):
+    """A literal double array column."""
+    return F.array(*[F.lit(float(x)) for x in xs])
+
+
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
@@ -40,8 +63,62 @@ def _norm(a):
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
 
 
-def cosine(a, b):
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def _sq_dist(a, b):
+    """Squared L2 distance between two array columns, one codegen'd fold."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _vectors(
+    df: DataFrame,
+    cols: list,
+    vec_col: str = "embedding",
+    v: str = "v",
+    n: str = "n",
+    n_planes: int | None = None,
+) -> DataFrame:
+    """The refine's input projection: ``(*cols, v, n[, bucket])`` — ``v``
+    the embedding cast to double[], ``n`` its norm, carried so each
+    candidate pair costs one array traversal (the dot product) instead
+    of three. ``n_planes`` adds the LSH ``bucket``.
+
+    A frame that already has ``v`` and ``n`` columns is an
+    ``lsh_bucket_frame`` staging frame: its columns are read as they are
+    (renamed to ``v``/``n``, bucket carried), never recomputed. It holds
+    the same ``_as_double``/``_norm``/``lsh_bucket`` expressions, so the
+    values — and every score built on them — are bit-identical."""
+    if "v" in df.columns and "n" in df.columns:
+        bucket = ["bucket"] if n_planes is not None else []
+        return df.select(*cols, F.col("v").alias(v), F.col("n").alias(n), *bucket)
+    out = df.select(*cols, _as_double(F.col(vec_col)).alias(v)).withColumn(
+        n, _norm(F.col(v))
+    )
+    if n_planes is None:
+        return out
+    return out.withColumn("bucket", lsh_bucket(F.col(v), n_planes=n_planes))
+
+
+def _cosine(va: str, na: str, vb: str, nb: str):
+    """The exact score every candidate is refined with:
+    ``round(dot(va, vb) / (na * nb), 6)`` over ``_vectors`` columns. The
+    dot product is a sequential left-to-right fold over doubles, as is
+    DuckDB's ``list_dot_product``, so oracle scores match bitwise."""
+    return F.round(_dot(F.col(va), F.col(vb)) / (F.col(na) * F.col(nb)), 6)
+
+
+def _top_k(scored: DataFrame, part_col: str, id_col: str, k: int) -> DataFrame:
+    """``(part_col, id_col, cosine, rank)``: the k best-scoring rows per
+    ``part_col`` value, ties broken by ``id_col``."""
+    return tiered_top_k(
+        scored,
+        partition_by=[part_col],
+        order_by=[F.col("cosine").desc(), F.col(id_col)],
+        k=k,
+        rank_col="rank",
+    ).select(part_col, id_col, "cosine", "rank")
 
 
 def blocked_cell_pairs(
@@ -100,46 +177,18 @@ def brute_force_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
-    bucketed: bool = False,
 ) -> DataFrame:
     """Exact top-k neighbors per query: (query_id, vec_id, cosine, rank).
-    Self-matches (same id) excluded.
-
-    ``bucketed``: corpus and queries are ``lsh_bucket_frame`` staging
-    frames (id/query_id, v, n[, bucket — unused here]); the cast/norm
-    projection is skipped. Same values either way — the frame holds the
-    identical ``_as_double``/``_norm`` columns this operator computes."""
-    if bucketed:
-        c = corpus.select(
-            F.col(id_col), F.col("v").alias("cv"), F.col("n").alias("cn")
-        )
-        q = queries.select(
-            F.col(query_id_col), F.col("v").alias("qv"), F.col("n").alias("qn")
-        )
-    else:
-        c = corpus.select(
-            F.col(id_col), _as_double(F.col(vec_col)).alias("cv")
-        ).withColumn("cn", _norm(F.col("cv")))
-        q = queries.select(
-            F.col(query_id_col), _as_double(F.col(vec_col)).alias("qv")
-        ).withColumn("qn", _norm(F.col("qv")))
-    # Norms hoisted out of the pair scoring: one traversal per pair
-    # (the dot product) instead of three; qn*cn keeps cosine()'s exact
-    # association order, so scores are bit-identical.
+    Self-matches (same id) excluded. Either side may be raw embeddings
+    or an ``lsh_bucket_frame`` staging frame (see ``_vectors``)."""
+    c = _vectors(corpus, [id_col], vec_col, "cv", "cn")
+    q = _vectors(queries, [query_id_col], vec_col, "qv", "qn")
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col(id_col) != F.col(query_id_col))
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6),
-        )
+        .withColumn("cosine", _cosine("qv", "qn", "cv", "cn"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
-    )
+    return _top_k(scored, query_id_col, id_col, k)
 
 
 def lsh_bucket(vec_col, dim: int = EMB_DIM, n_planes: int = N_HYPERPLANES):
@@ -149,16 +198,7 @@ def lsh_bucket(vec_col, dim: int = EMB_DIM, n_planes: int = N_HYPERPLANES):
     in tests/test_recall_curves.py)."""
     bucket = F.lit(0)
     for hk in range(n_planes):
-        h = hyperplane(hk, dim)
-        proj = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.array(*[F.lit(x) for x in h]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        proj = _dot(vec_col, _lits(hyperplane(hk, dim)))
         bucket = bucket + F.when(proj > 0, F.lit(1 << hk)).otherwise(F.lit(0))
     return bucket
 
@@ -170,28 +210,21 @@ def lsh_bucket_frame(
     n_planes: int = N_HYPERPLANES,
     keep_cols: tuple = (),
 ) -> DataFrame:
-    """Canonical LSH staging frame: (id_col, v double[], n, bucket).
+    """Canonical LSH staging frame: (id_col, *keep_cols, v double[], n,
+    bucket).
 
     This is the bucketed-corpus staging table an LSH pipeline
     materializes once and every consumer (bucket top-k, multi-probe,
-    near-dup pair mining) reads — build it, persist it, and pass it to
-    ``lsh_bucketed_topk(..., bucketed=True)`` /
-    ``embedding_near_duplicates_lsh(..., bucketed=True)`` so the
-    9-hyperplane projection runs once per corpus instead of once per
-    consumer. Values are bit-identical to what each consumer computed
-    inline (same ``_as_double``/``_norm``/``lsh_bucket`` expressions).
+    near-dup pair mining, and the exact scans that read only v/n) reads:
+    build it, persist it, and pass it to any operator here in place of
+    the raw embeddings, so the 8-hyperplane projection runs once per
+    corpus instead of once per consumer. Consumers recognise it by its
+    v/n columns (``_vectors``); the values are bit-identical to what
+    each consumer computes inline.
 
     ``keep_cols``: extra source columns carried through unchanged (e.g.
     a class label for hard-negative mining consumers)."""
-    return (
-        df.select(
-            F.col(id_col),
-            *[F.col(c) for c in keep_cols],
-            _as_double(F.col(vec_col)).alias("v"),
-        )
-        .withColumn("n", _norm(F.col("v")))
-        .withColumn("bucket", lsh_bucket(F.col("v"), n_planes=n_planes))
-    )
+    return _vectors(df, [id_col, *keep_cols], vec_col, n_planes=n_planes)
 
 
 def lsh_bucketed_topk(
@@ -203,7 +236,6 @@ def lsh_bucketed_topk(
     query_id_col: str = "query_id",
     multi_probe: bool = False,
     n_planes: int = N_HYPERPLANES,
-    bucketed: bool = False,
 ) -> DataFrame:
     """Approximate top-k: candidates share the query's LSH bucket, then
     exact cosine re-rank. The bucket join replaces the cross join — the
@@ -213,68 +245,26 @@ def lsh_bucketed_topk(
     Hamming distance 1 (one flipped hyperplane sign) — ~(1+H)× candidates
     for a large recall gain on vectors near a hyperplane boundary.
 
-    ``bucketed``: corpus and queries are ``lsh_bucket_frame`` outputs
-    (columns id/query_id, v, n, bucket — built with the same n_planes)
-    and the projection is skipped — pass a persisted staging frame here
-    when several consumers share one corpus."""
-    if bucketed:
-        c = corpus.select(
-            F.col(id_col),
-            F.col("v").alias("cv"),
-            F.col("n").alias("cn"),
-            "bucket",
-        )
-        q = queries.select(
-            F.col(query_id_col),
-            F.col("v").alias("qv"),
-            F.col("n").alias("qn"),
-            "bucket",
-        )
-    else:
-        c = corpus.select(
-            F.col(id_col), _as_double(F.col(vec_col)).alias("cv")
-        ).withColumn("cn", _norm(F.col("cv")))
-        q = queries.select(
-            F.col(query_id_col), _as_double(F.col(vec_col)).alias("qv")
-        ).withColumn("qn", _norm(F.col("qv")))
-        c = c.withColumn("bucket", lsh_bucket(F.col("cv"), n_planes=n_planes))
-        q = q.withColumn("bucket", lsh_bucket(F.col("qv"), n_planes=n_planes))
+    A staging frame from ``lsh_bucket_frame`` (built with the same
+    n_planes) supplies its stored buckets; pass a persisted one when
+    several consumers share one corpus."""
+    c = _vectors(corpus, [id_col], vec_col, "cv", "cn", n_planes)
+    q = _vectors(queries, [query_id_col], vec_col, "qv", "qn", n_planes)
     if multi_probe:
         probes = F.array(
             F.col("bucket"),
             *[F.col("bucket").bitwiseXOR(F.lit(1 << hk)) for hk in range(n_planes)],
         )
         q = q.withColumn("bucket", F.explode(probes))
-    # Hoisted norms (see brute_force_topk): bit-identical cosine, one
-    # array traversal per candidate instead of three.
     scored = (
         c.join(q, "bucket")
         .filter(F.col(id_col) != F.col(query_id_col))
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6),
-        )
+        .withColumn("cosine", _cosine("qv", "qn", "cv", "cn"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
-    )
+    return _top_k(scored, query_id_col, id_col, k)
 
 
 # --- IVF with LEARNED centroids (k-means) -----------------------------------
-
-
-def _sq_dist(v, centroid: list[float]):
-    """Squared L2 distance between an array column and a literal centroid,
-    as one codegen'd expression."""
-    lit = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(v, lit, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def _cell_scores(v, centroids: list[list[float]]):
@@ -283,7 +273,7 @@ def _cell_scores(v, centroids: list[list[float]]):
     deterministic index tie-break."""
     return F.array(
         *[
-            F.struct(_sq_dist(v, c).alias("d"), F.lit(i).alias("i"))
+            F.struct(_sq_dist(v, _lits(c)).alias("d"), F.lit(i).alias("i"))
             for i, c in enumerate(centroids)
         ]
     )
@@ -337,14 +327,9 @@ def ivf_train(
             [(ci, centroids[ci]) for ci in range(n_centroids)],
             "cell int, cv array<double>",
         )
-        d2 = F.aggregate(
-            F.zip_with("v", "cv", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
         assigned = (
             samp.crossJoin(F.broadcast(cents))
-            .withColumn("_d2", d2)
+            .withColumn("_d2", _sq_dist(F.col("v"), F.col("cv")))
             .groupBy(id_col)
             .agg(
                 F.min(F.struct(F.col("_d2"), F.col("cell"))).alias("_best"),
@@ -390,31 +375,17 @@ def ivf_topk(
     query probes its ``n_probe`` nearest cells; exact cosine re-rank
     inside — the same bucket-equi-join shape as the LSH variant, with
     data-adaptive cells instead of fixed hyperplanes."""
-    c = corpus.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", _norm(F.col("cv")))
-    q = queries.select(
-        F.col(query_id_col), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
+    c = _vectors(corpus, [id_col], vec_col, "cv", "cn")
+    q = _vectors(queries, [query_id_col], vec_col, "qv", "qn")
     c = c.withColumn("cell", nearest_cell(F.col("cv"), centroids))
     probes = F.slice(F.array_sort(_cell_scores(F.col("qv"), centroids)), 1, n_probe)
     q = q.withColumn("cell", F.explode(F.transform(probes, lambda s: s["i"])))
-    # Hoisted norms (see brute_force_topk): bit-identical cosine, one
-    # array traversal per candidate instead of three.
     scored = (
         c.join(q, "cell")
         .filter(F.col(id_col) != F.col(query_id_col))
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6),
-        )
+        .withColumn("cosine", _cosine("qv", "qn", "cv", "cn"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
-    )
+    return _top_k(scored, query_id_col, id_col, k)
 
 
 def hard_negatives(
@@ -425,7 +396,6 @@ def hard_negatives(
     id_col: str = "vec_id",
     label_col: str = "label",
     query_id_col: str = "query_id",
-    bucketed: bool = False,
 ) -> DataFrame:
     """Hard-negative mining for contrastive/retrieval training: for each
     query vector, the k most-similar corpus vectors whose LABEL differs
@@ -436,49 +406,18 @@ def hard_negatives(
     Same plan shape as brute_force_topk — broadcast query side,
     per-partition scoring, WindowGroupLimit top-k — plus the label
     inequality pushed below the rank window so mismatched labels never
-    reach the shuffle. Returns (query_id, vec_id, cosine, rank).
-
-    ``bucketed``: corpus and queries are ``lsh_bucket_frame`` frames
-    built with ``keep_cols=(label_col,)`` — cast/norm projection skipped
-    (values are the identical v/n columns).
+    reach the shuffle. Returns (query_id, vec_id, cosine, rank). A
+    staging frame must carry the label (``lsh_bucket_frame(...,
+    keep_cols=(label_col,))``).
     """
-    if bucketed:
-        c = corpus.select(
-            F.col(id_col),
-            F.col(label_col).alias("_clabel"),
-            F.col("v").alias("cv"),
-            F.col("n").alias("cn"),
-        )
-        q = queries.select(
-            F.col(query_id_col),
-            F.col(label_col).alias("_qlabel"),
-            F.col("v").alias("qv"),
-            F.col("n").alias("qn"),
-        )
-    else:
-        c = corpus.select(
-            F.col(id_col),
-            F.col(label_col).alias("_clabel"),
-            _as_double(F.col(vec_col)).alias("cv"),
-        ).withColumn("cn", _norm(F.col("cv")))
-        q = queries.select(
-            F.col(query_id_col),
-            F.col(label_col).alias("_qlabel"),
-            _as_double(F.col(vec_col)).alias("qv"),
-        ).withColumn("qn", _norm(F.col("qv")))
-    scored = (
-        c.join(F.broadcast(q), F.col("_clabel") != F.col("_qlabel"))
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6),
-        )
+    c = _vectors(corpus, [id_col, F.col(label_col).alias("_clabel")], vec_col, "cv", "cn")
+    q = _vectors(
+        queries, [query_id_col, F.col(label_col).alias("_qlabel")], vec_col, "qv", "qn"
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", F.col("rank").cast("int"))
+    scored = c.join(F.broadcast(q), F.col("_clabel") != F.col("_qlabel")).withColumn(
+        "cosine", _cosine("qv", "qn", "cv", "cn")
     )
+    return _top_k(scored, query_id_col, id_col, k)
 
 
 def rrf_fuse(
@@ -556,39 +495,16 @@ def knn_graph_within(
     set it to tile oversized cells' pair grids into bounded blocks
     (see blocked_cell_pairs; identical output, per-task work capped at
     ~max_cell_rows²)."""
-    from pyspark.sql import Window
-
-    a = df.select(
-        F.col(part_col).alias("_p"),
-        F.col(id_col).alias("_i"),
-        _as_double(F.col(vec_col)).alias("_va"),
-    ).withColumn("_na", _norm(F.col("_va")))
-    b = df.select(
-        F.col(part_col).alias("_p"),
-        F.col(id_col).alias("_j"),
-        _as_double(F.col(vec_col)).alias("_vb"),
-    ).withColumn("_nb", _norm(F.col("_vb")))
+    p = F.col(part_col).alias("_p")
+    a = _vectors(df, [p, F.col(id_col).alias("_i")], vec_col, "_va", "_na")
+    b = _vectors(df, [p, F.col(id_col).alias("_j")], vec_col, "_vb", "_nb")
     scored = (
         blocked_cell_pairs(a, b, "_p", "_i", "_j", max_cell_rows)
         .filter(F.col("_i") != F.col("_j"))
-        .select(
-            "_i",
-            "_j",
-            F.round(
-                _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")), 6
-            ).alias("cosine"),
-        )
+        .select("_i", "_j", _cosine("_va", "_na", "_vb", "_nb").alias("cosine"))
     )
-    w = Window.partitionBy("_i").orderBy(F.desc("cosine"), "_j")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("_i").alias(id_col),
-            F.col("_j").alias("neighbor_id"),
-            "cosine",
-            F.col("rank").cast("int"),
-        )
+    return _top_k(scored, "_i", "_j", k).select(
+        F.col("_i").alias(id_col), F.col("_j").alias("neighbor_id"), "cosine", "rank"
     )
 
 
@@ -614,11 +530,7 @@ def l2_normalize(v):
     """Unit-normalize an array column (zero vectors pass through).
     Normalizing first makes PQ's L2 ranking equivalent to cosine."""
     v = _as_double(v)
-    n = F.sqrt(
-        F.aggregate(
-            F.transform(v, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
+    n = _norm(v)
     safe = F.when(n > 0, n).otherwise(F.lit(1.0))
     return F.transform(v, lambda x: x / safe)
 
@@ -681,14 +593,9 @@ def pq_train(
             [(s, ci, books[s][ci]) for s in range(m) for ci in range(k)],
             "sub int, cell int, cv array<double>",
         )
-        d2 = F.aggregate(
-            F.zip_with("sv", "cv", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
         assigned = (
             subs.join(F.broadcast(cents), "sub")
-            .withColumn("_d2", d2)
+            .withColumn("_d2", _sq_dist(F.col("sv"), F.col("cv")))
             .groupBy(id_col, "sub")  # per sample ROW: duplicates keep weight
             .agg(
                 F.min(F.struct(F.col("_d2"), F.col("cell"))).alias("_best"),
@@ -766,20 +673,46 @@ def _lut_flat_expr(res_col, codebooks: list[list[list[float]]], w: int):
     form and the index silently shadows the subspace."""
 
     def sub_lut(s: int):
-        cb = F.array(
-            *[F.array(*[F.lit(float(x)) for x in cv]) for cv in codebooks[s]]
-        )
+        cb = F.array(*[_lits(cv) for cv in codebooks[s]])
         qs = F.slice(res_col, s * w + 1, w)
-        return F.transform(
-            cb,
-            lambda cv: F.aggregate(
-                F.zip_with(qs, cv, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
+        return F.transform(cb, lambda cv: _sq_dist(qs, cv))
 
     return F.flatten(F.array(*[sub_lut(s) for s in range(len(codebooks))]))
+
+
+def _adc_topk(
+    pairs: DataFrame,
+    codebooks: list[list[list[float]]],
+    query_id_col: str,
+    id_col: str,
+    k: int,
+) -> DataFrame:
+    """The ADC scan of ``pq_adc_topk`` and ``ivfpq_topk``: a (codes,
+    lutf) row's distance is m ``element_at`` lookups into the flat LUT
+    (subspace s's entries start after the earlier codebooks' entries),
+    summed in one map-side projection and pinned by round(·, 9); then
+    the k smallest per query, ties by id. Returns (query_id, id, adc_d2,
+    rnk)."""
+    offs = [0]
+    for book in codebooks:
+        offs.append(offs[-1] + len(book))
+    adc = sum(
+        (
+            F.element_at(
+                F.col("lutf"),
+                F.lit(offs[s] + 1) + F.element_at(F.col("codes"), s + 1),
+            )
+            for s in range(len(codebooks))
+        ),
+        start=F.lit(0.0),
+    )
+    scored = pairs.select(query_id_col, F.col(id_col), F.round(adc, 9).alias("adc_d2"))
+    return tiered_top_k(
+        scored,
+        partition_by=[query_id_col],
+        order_by=[F.col("adc_d2").asc(), F.col(id_col).asc()],
+        k=k,
+    )
 
 
 def pq_adc_topk(
@@ -796,41 +729,16 @@ def pq_adc_topk(
     → partial-d² LUT (m·k rows per query, broadcast), sum m lookups per
     encoded vector, WindowGroupLimit top-k ascending. Returns
     (query_id, vec_id, adc_d2, rnk)."""
-    from etl_stack_spark.operators.rank import tiered_top_k
-
-    m = len(codebooks)
-    w = dim // m
+    w = dim // len(codebooks)
     qv = _as_double(F.col(vec_col))
     # LUT built MAP-SIDE in one projection on the query frame (r11,
     # guide §2.4 — _lut_flat_expr): the old explode→join(sub)→
-    # collect_list pivot (2 jobs + 1 shuffle per search) is gone. The
-    # ADC sum stays m element_at lookups in a single map-side projection
-    # on the codes scan, and round(·, 9) pins the value as before.
+    # collect_list pivot (2 jobs + 1 shuffle per search) is gone.
     lut_flat = queries.select(
         F.col(query_id_col), _lut_flat_expr(qv, codebooks, w).alias("lutf")
     )
-    offs = [0]
-    for s in range(m):
-        offs.append(offs[-1] + len(codebooks[s]))
-    adc = sum(
-        (
-            F.element_at(
-                F.col("lutf"),
-                F.lit(offs[s] + 1) + F.element_at(F.col("codes"), s + 1),
-            )
-            for s in range(m)
-        ),
-        start=F.lit(0.0),
-    )
-    scored = codes.crossJoin(F.broadcast(lut_flat)).select(
-        query_id_col, F.col(id_col), F.round(adc, 9).alias("adc_d2")
-    )
-    return tiered_top_k(
-        scored,
-        partition_by=[query_id_col],
-        order_by=[F.col("adc_d2").asc(), F.col(id_col).asc()],
-        k=k,
-    )
+    pairs = codes.crossJoin(F.broadcast(lut_flat))
+    return _adc_topk(pairs, codebooks, query_id_col, id_col, k)
 
 
 # ---------------------------------------------------------------------------
@@ -846,9 +754,7 @@ def _centroid_at(cell_col, centroids: list[list[float]]):
     """The centroid array selected by a cell INDEX column — one
     element_at over an array-of-arrays literal (n_cells x dim doubles,
     codegen'd once; KBs even at n_cells=4096)."""
-    table = F.array(
-        *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
-    )
+    table = F.array(*[_lits(c) for c in centroids])
     return F.element_at(table, cell_col + F.lit(1))
 
 
@@ -968,10 +874,7 @@ def ivfpq_topk(
     all-pairs), the LUT join is broadcast, the top-k is the concrete-k
     WindowGroupLimit. At 10^9 vectors the only big exchange is the
     candidate join, bounded by n_probe/n_cells of the corpus."""
-    from etl_stack_spark.operators.rank import tiered_top_k
-
-    m = len(codebooks)
-    w = dim // m
+    w = dim // len(codebooks)
     qv = _as_double(F.col(vec_col))
     probes = F.slice(F.array_sort(_cell_scores(F.col("qv"), centroids)), 1, n_probe)
     q = queries.select(F.col(query_id_col), qv.alias("qv")).withColumn(
@@ -994,51 +897,19 @@ def ivfpq_topk(
         "cell",
         _lut_flat_expr("qr", codebooks, w).alias("lutf"),
     )
-    offs = [0]
-    for s in range(m):
-        offs.append(offs[-1] + len(codebooks[s]))
-    adc = sum(
-        (
-            F.element_at(
-                F.col("lutf"),
-                F.lit(offs[s] + 1) + F.element_at(F.col("codes"), s + 1),
-            )
-            for s in range(m)
-        ),
-        start=F.lit(0.0),
-    )
-    scored = index.join(F.broadcast(lut_flat), "cell").select(
-        query_id_col, F.col(id_col), F.round(adc, 9).alias("adc_d2")
-    )
-    shortlist = tiered_top_k(
-        scored,
-        partition_by=[query_id_col],
-        order_by=[F.col("adc_d2").asc(), F.col(id_col).asc()],
-        k=k if refine is None else k * refine_factor,
+    pairs = index.join(F.broadcast(lut_flat), "cell")
+    shortlist = _adc_topk(
+        pairs, codebooks, query_id_col, id_col, k if refine is None else k * refine_factor
     )
     if refine is None:
         return shortlist
-    # exact cosine re-rank of the shortlist against the TRUE vectors
-    # (hoisted norms — see brute_force_topk — for bit-identical cosine)
-    r = refine.select(
-        F.col(id_col), _as_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", _norm(F.col("cv")))
-    qn = queries.select(
-        F.col(query_id_col), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
+    # the refine: exact cosine over the shortlist's TRUE vectors
+    r = _vectors(refine, [id_col], vec_col, "cv", "cn")
+    qn = _vectors(queries, [query_id_col], vec_col, "qv", "qn")
     rescored = (
         shortlist.select(query_id_col, id_col)
         .join(r, id_col)
         .join(F.broadcast(qn), query_id_col)
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6),
-        )
+        .select(query_id_col, id_col, _cosine("qv", "qn", "cv", "cn").alias("cosine"))
     )
-    return tiered_top_k(
-        rescored.select(query_id_col, id_col, "cosine"),
-        partition_by=[query_id_col],
-        order_by=[F.col("cosine").desc(), F.col(id_col).asc()],
-        k=k,
-        rank_col="rank",
-    )
+    return _top_k(rescored, query_id_col, id_col, k)

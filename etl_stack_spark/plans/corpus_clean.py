@@ -244,7 +244,6 @@ def clean_corpus_v3(
     pairs: DataFrame | None = None,
     xdoc_ids: DataFrame | None = None,
     sem_pairs: DataFrame | None = None,
-    sem_max_cell_rows: int | None = None,
 ) -> DataFrame:
     """The full modern wash: v2's stages plus the two corpus-level
     signals v2 can't see —
@@ -339,17 +338,10 @@ def clean_corpus_v3(
     surv_emb = embeddings.join(
         kept.select(F.col(id_col).alias(emb_id_col)), emb_id_col, "left_semi"
     ).localCheckpoint(eager=False)  # consumed by sem survivors AND losers
-    # sem_max_cell_rows: the within-cluster pair grid is output-identical
-    # with or without the tiling, so the 100 TB deployment (heavy-tailed
-    # learned cells, non-broadcastable corpus) sets it; the sf-scale
-    # registry entry leaves it None (SCALE.md: the lever matters exactly
-    # where broadcasting stops being possible — AQE skew-join can't see
-    # a quadratic join OUTPUT)
     sem_survivors = semantic_dedup(
         surv_emb,
         threshold=sem_threshold,
         id_col=emb_id_col,
-        max_cell_rows=sem_max_cell_rows,
         pairs=sem_pairs,  # superset store restricts to surv_emb's ids
     ).select(emb_id_col)
     sem_losers = surv_emb.select(emb_id_col).join(sem_survivors, emb_id_col, "left_anti")

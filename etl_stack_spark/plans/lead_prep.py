@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from etl_stack_spark.operators.geo_join import radius_join_by_category
 from etl_stack_spark.operators.rank import lead_prep_tiered_rank
+from etl_stack_spark.streaming.queue import run_stream
 
 
 def lead_prep_packages(
@@ -93,7 +94,7 @@ def lead_prep_packages(
 PROP_FEED_SCHEMA = "prop_id long, lat double, lon double"
 
 
-def run_lead_prep_stream(
+def run_lead_prep_package_stream(
     spark: SparkSession,
     feed_dir: str,
     pois: DataFrame,
@@ -119,17 +120,11 @@ def run_lead_prep_stream(
     """
 
     def one_batch(batch: DataFrame, epoch_id: int) -> None:
+        # merge always writes a snapshot: an empty epoch would commit a version
         if batch.isEmpty():
             return
         packages = lead_prep_packages(batch, pois, categories)
         src = packages.withColumn("content_hash", F.sha2(F.col("poi_data"), 256))
         leads_table.merge(src, keys=["prop_id"])
 
-    return (
-        spark.readStream.schema(PROP_FEED_SCHEMA)
-        .parquet(feed_dir)
-        .writeStream.foreachBatch(one_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_stream(spark, feed_dir, PROP_FEED_SCHEMA, one_batch, checkpoint_dir)

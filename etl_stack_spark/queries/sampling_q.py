@@ -220,36 +220,25 @@ SELECT query_id, vec_id, cosine, CAST(rank AS INT) AS rank FROM ranked WHERE ran
 
 @register("ss3_ivf_topk", _SS3_ORACLE)
 def ss3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_stack_spark.operators.similarity import _dot
+    from etl_stack_spark.operators.similarity import _cosine, _top_k, _vectors
     from etl_stack_spark.queries.similarity import _lsh_bucketed
 
-    # corpus/query sides read the shared LSH staging store (v/n/label);
-    # qn*cn is the same product of the same per-vector norms cosine()
-    # computed inline, so the rounded score is bit-identical
+    # both sides read the shared LSH staging store's v/n/label: the
+    # values _vectors would compute from the raw embeddings, stored once
     b = _lsh_bucketed(spark, sf_dir)
-    corpus = b.select(
-        "vec_id", "label", F.col("v").alias("cv"), F.col("n").alias("cn")
-    )
-    q = b.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("q_label"),
-        F.col("v").alias("qv"),
-        F.col("n").alias("qn"),
+    corpus = _vectors(b, ["vec_id", "label"], v="cv", n="cn")
+    q = _vectors(
+        b.filter(F.col("vec_id") < 10),
+        [F.col("vec_id").alias("query_id"), F.col("label").alias("q_label")],
+        v="qv",
+        n="qn",
     )
     scored = (
         corpus.join(F.broadcast(q), corpus.label == q.q_label)
         .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6),
-        )
+        .withColumn("cosine", _cosine("qv", "qn", "cv", "cn"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= 10)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return _top_k(scored, "query_id", "vec_id", 10)
 
 
 # ---------------------------------------------------------------------------

@@ -132,7 +132,7 @@ def ss1_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = b.filter(F.col("vec_id") < 10).withColumnRenamed(
         "vec_id", "query_id"
     )
-    out = brute_force_topk(b, queries, k=10, bucketed=True)
+    out = brute_force_topk(b, queries, k=10)
     return out.withColumn("rank", F.col("rank").cast("int"))
 
 
@@ -173,7 +173,7 @@ def ss2_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = b.filter(F.col("vec_id") < 10).withColumnRenamed(
         "vec_id", "query_id"
     )
-    out = lsh_bucketed_topk(b, queries, k=10, bucketed=True)
+    out = lsh_bucketed_topk(b, queries, k=10)
     return out.withColumn("rank", F.col("rank").cast("int"))
 
 
@@ -208,7 +208,7 @@ def ss4_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = b.filter(F.col("vec_id") < 10).withColumnRenamed(
         "vec_id", "query_id"
     )
-    out = lsh_bucketed_topk(b, queries, k=10, multi_probe=True, bucketed=True)
+    out = lsh_bucketed_topk(b, queries, k=10, multi_probe=True)
     return out.withColumn("rank", F.col("rank").cast("int"))
 
 
@@ -244,7 +244,7 @@ def dd5_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gate would return an (uninformative) empty set at every SF — 0.42
     # keeps the oracle row exercising real pairs
     b = _lsh_bucketed(spark, sf_dir)
-    return embedding_near_duplicates_lsh(b, threshold=0.42, bucketed=True)
+    return embedding_near_duplicates_lsh(b, threshold=0.42)
 
 
 # ---------------------------------------------------------------------------
@@ -411,7 +411,7 @@ def rrf1_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = _lsh_bucketed(spark, sf_dir)
     qv = b.filter(F.col("vec_id") == 0).withColumnRenamed("vec_id", "query_id")
-    vec = brute_force_topk(b, qv, k=50, bucketed=True).select(
+    vec = brute_force_topk(b, qv, k=50).select(
         F.col("vec_id").alias("doc_id"), "rank"
     )
     fused = rrf_fuse(
@@ -459,7 +459,7 @@ def hn1_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = b.filter(F.col("vec_id") < 10).withColumnRenamed(
         "vec_id", "query_id"
     )
-    return hard_negatives(b, queries, k=5, bucketed=True)
+    return hard_negatives(b, queries, k=5)
 
 
 # ---------------------------------------------------------------------------

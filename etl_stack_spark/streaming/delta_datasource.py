@@ -40,46 +40,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-
-def _log_dir(root: str) -> str:
-    return os.path.join(root, "_delta_log")
-
-
-def _versions(root: str) -> list[int]:
-    d = _log_dir(root)
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        int(f[:20]) for f in os.listdir(d) if f.endswith(".json") and len(f) == 25
-    )
-
-
-def _schema_string(root: str) -> str:
-    """metaData.schemaString by scanning commits newest-first (cheap:
-    metaData appears in commit 0 and on schema changes)."""
-    d = _log_dir(root)
-    for v in reversed(_versions(root)):
-        with open(os.path.join(d, f"{v:020d}.json")) as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "metaData" in action:
-                    return action["metaData"]["schemaString"]
-    raise FileNotFoundError(f"no metaData action found under {d}")
-
-
-def _added_files(root: str, version: int) -> list[str]:
-    out = []
-    with open(os.path.join(_log_dir(root), f"{version:020d}.json")) as f:
-        for line in f:
-            if not line.strip():
-                continue
-            action = json.loads(line)
-            add = action.get("add")
-            if add and add.get("dataChange", True):
-                out.append(add["path"])
-    return out
+from etl_stack_spark.operators.delta_log import DeltaLog
 
 
 class AddedFilePartition(InputPartition):
@@ -93,6 +54,7 @@ class DeltaTailStreamReader(DataSourceStreamReader):
         self, root: str, schema: StructType, starting_version: str | None = None
     ):
         self.root = root
+        self.log = DeltaLog(root)
         self.target_schema = schema
         self.starting_version = starting_version
 
@@ -109,13 +71,13 @@ class DeltaTailStreamReader(DataSourceStreamReader):
         return {"version": 0}
 
     def latestOffset(self) -> dict:
-        versions = _versions(self.root)
+        versions = self.log.versions()
         return {"version": (versions[-1] + 1) if versions else 0}
 
     def partitions(self, start: dict, end: dict):
         parts = []
         for v in range(start["version"], end["version"]):
-            for rel in _added_files(self.root, v):
+            for rel in self.log.data_changes(v)[0]:
                 parts.append(AddedFilePartition(self.root, rel))
         # Spark requires >=1 partition per batch: an all-OPTIMIZE span
         # still planned a batch, so ship one empty marker partition
@@ -158,7 +120,7 @@ class DeltaTailDataSource(DataSource):
         root = self.options.get("path")
         if not root:
             raise ValueError("delta_tail requires .option('path', <table root>)")
-        return StructType.fromJson(json.loads(_schema_string(root)))
+        return StructType.fromJson(json.loads(DeltaLog(root).schema_string()))
 
     def streamReader(self, schema: StructType) -> DeltaTailStreamReader:
         return DeltaTailStreamReader(

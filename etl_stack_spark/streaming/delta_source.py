@@ -57,7 +57,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (re-export convenience)
 
-from etl_stack_spark.operators.delta_log import DeltaLog, _version_fname
+from etl_stack_spark.operators.delta_log import DeltaLog
 from etl_stack_spark.operators.merge import diff_frames
 
 
@@ -113,24 +113,6 @@ class DeltaStreamSource:
         return versions[-1] if versions else None
 
     # -- batch construction ---------------------------------------------------
-    def _commit_file_diff(self, version: int) -> tuple[list[str], list[str]]:
-        """(added_paths, removed_paths) of ONE commit's JSON — read
-        straight from the commit file, the cheapest possible form."""
-        adds: list[str] = []
-        removes: list[str] = []
-        with open(os.path.join(self.log.log_dir, _version_fname(version))) as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                add = action.get("add")
-                if add and add.get("dataChange", True):
-                    adds.append(add["path"])
-                rm = action.get("remove")
-                if rm and rm.get("dataChange", True):
-                    removes.append(rm["path"])
-        return adds, removes
-
     def _empty_like(self, version: int) -> DataFrame:
         from pyspark.sql.types import StructType
 
@@ -155,7 +137,7 @@ class DeltaStreamSource:
         both as-of images (no change row, and it appears on neither
         side), while any touched key's pre-image is in a tombstoned
         file and its post-image (if it survives) in an added one."""
-        adds, removes = self._commit_file_diff(version)
+        adds, removes = self.log.data_changes(version)
         if self.mode == "adds":
             return self._read_paths(adds, version)
         return diff_frames(

@@ -27,6 +27,7 @@ from etl_stack_spark.operators.incremental import (
     refresh_retractable_agg,
 )
 from etl_stack_spark.operators.merge import ParquetMergeTable
+from etl_stack_spark.streaming.queue import run_stream
 
 
 def agg_maintenance_batch_fn(
@@ -101,16 +102,12 @@ def run_agg_maintenance_stream(
 ):
     """availableNow drain of a parquet change feed (must carry
     ``_sign``) into the state table; returns the streaming query."""
-    stream = (
-        spark.readStream.schema(feed_schema + ", _sign int").parquet(feed_path)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            agg_maintenance_batch_fn(state, keys, measures, count_col)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return run_stream(
+        spark,
+        feed_path,
+        feed_schema + ", _sign int",
+        agg_maintenance_batch_fn(state, keys, measures, count_col),
+        checkpoint,
     )
 
 

@@ -199,14 +199,14 @@ def run_stream(
     schema,
     batch_fn: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
-    available_now: bool = True,
     observe: tuple[str, list] | None = None,
 ):
-    """ST1 production shape: file-source stream → foreachBatch(batch_fn).
+    """ST1 production shape: file-source stream → foreachBatch(batch_fn),
+    returning the started query.
 
-    With ``available_now`` the stream processes the backlog and stops —
-    the driver-friendly trigger; on a cluster use a continuous trigger and
-    the same ``batch_fn`` handles each micro-batch incrementally.
+    The availableNow trigger processes the backlog and stops — the
+    driver-friendly trigger; on a cluster a continuous trigger runs the
+    same ``batch_fn`` on each micro-batch incrementally.
 
     ``observe``: optional ``(name, [agg exprs])`` attached to the
     STREAMING frame with ``df.observe`` — the metrics ride the micro-
@@ -218,14 +218,12 @@ def run_stream(
     stream = spark.readStream.schema(schema).parquet(input_dir)
     if observe is not None:
         stream = stream.observe(observe[0], *observe[1])
-    writer = (
+    return (
         stream.writeStream.foreachBatch(batch_fn)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    return query
 
 
 class ObservedMetricsListener:

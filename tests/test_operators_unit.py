@@ -754,9 +754,10 @@ def test_ingest_observation_rides_the_same_action(spark):
 
 
 def test_lsh_bucket_frame_matches_inline_paths(spark):
-    """The shared LSH staging frame (lsh_bucket_frame + bucketed=True)
-    must be a pure refactor: top-k (single and multi-probe) and near-dup
-    pairs are row-identical to the operators' inline projections."""
+    """The shared LSH staging frame (lsh_bucket_frame, passed where raw
+    embeddings go) must be a pure refactor: top-k (single and multi-probe)
+    and near-dup pairs are row-identical to the operators' inline
+    projections."""
     from etl_stack_spark.operators.dedup import embedding_near_duplicates_lsh
     from etl_stack_spark.operators.similarity import lsh_bucket_frame, lsh_bucketed_topk
     from etl_stack_spark.session import load_table
@@ -770,19 +771,19 @@ def test_lsh_bucket_frame_matches_inline_paths(spark):
 
     for multi in (False, True):
         inline = lsh_bucketed_topk(emb, queries, k=10, multi_probe=multi)
-        stored = lsh_bucketed_topk(frame, q_frame, k=10, multi_probe=multi, bucketed=True)
+        stored = lsh_bucketed_topk(frame, q_frame, k=10, multi_probe=multi)
         key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
         assert sorted(inline.collect(), key=key) == sorted(stored.collect(), key=key)
 
     inline_dd = embedding_near_duplicates_lsh(emb, threshold=0.42)
-    stored_dd = embedding_near_duplicates_lsh(frame, threshold=0.42, bucketed=True)
+    stored_dd = embedding_near_duplicates_lsh(frame, threshold=0.42)
     key = lambda r: (r["id_a"], r["id_b"])  # noqa: E731
     assert sorted(inline_dd.collect(), key=key) == sorted(stored_dd.collect(), key=key)
 
     from etl_stack_spark.operators.similarity import brute_force_topk
 
     inline_bf = brute_force_topk(emb, queries, k=10)
-    stored_bf = brute_force_topk(frame, q_frame, k=10, bucketed=True)
+    stored_bf = brute_force_topk(frame, q_frame, k=10)
     key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
     assert sorted(inline_bf.collect(), key=key) == sorted(stored_bf.collect(), key=key)
 
@@ -795,5 +796,5 @@ def test_lsh_bucket_frame_matches_inline_paths(spark):
             F.col("vec_id").alias("query_id"), "label", "embedding"
         ), k=5,
     )
-    stored_hn = hard_negatives(lframe, lq, k=5, bucketed=True)
+    stored_hn = hard_negatives(lframe, lq, k=5)
     assert sorted(inline_hn.collect(), key=key) == sorted(stored_hn.collect(), key=key)

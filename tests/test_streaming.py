@@ -232,7 +232,7 @@ def test_streaming_lead_prep_e2e_two_batches_idempotent(spark, tmp_path):
     """Round-1 review item #10: the showcase flow in streaming form —
     two micro-batches of property changes through radius match → package
     → hash-gated merge; replaying the same feed is a no-op."""
-    from etl_stack_spark.plans.lead_prep import run_lead_prep_stream
+    from etl_stack_spark.plans.lead_prep import run_lead_prep_package_stream
 
     feed = tmp_path / "prop_feed"
     feed.mkdir()
@@ -255,7 +255,7 @@ def test_streaming_lead_prep_e2e_two_batches_idempotent(spark, tmp_path):
     spark.createDataFrame(
         [(101, 9.80, -84.00), (102, 9.795, -84.015)], "prop_id long, lat double, lon double"
     ).write.mode("append").parquet(str(feed))
-    q = run_lead_prep_stream(spark, str(feed), pois, cats, leads, ckpt)
+    q = run_lead_prep_package_stream(spark, str(feed), pois, cats, leads, ckpt)
     assert q.awaitTermination(600), "stream did not drain in time"
     first = {r["prop_id"]: r["poi_data"] for r in leads.read().collect()}
     assert set(first) == {101, 102}
@@ -265,7 +265,7 @@ def test_streaming_lead_prep_e2e_two_batches_idempotent(spark, tmp_path):
     spark.createDataFrame(
         [(103, 9.79, -84.02)], "prop_id long, lat double, lon double"
     ).write.mode("append").parquet(str(feed))
-    q = run_lead_prep_stream(spark, str(feed), pois, cats, leads, ckpt)
+    q = run_lead_prep_package_stream(spark, str(feed), pois, cats, leads, ckpt)
     assert q.awaitTermination(600), "stream did not drain in time"
     assert leads.read().count() == 3
 
@@ -275,7 +275,7 @@ def test_streaming_lead_prep_e2e_two_batches_idempotent(spark, tmp_path):
 
     shutil.rmtree(ckpt)
     before = {r["prop_id"]: r["content_hash"] for r in leads.read().collect()}
-    q = run_lead_prep_stream(spark, str(feed), pois, cats, leads, ckpt)
+    q = run_lead_prep_package_stream(spark, str(feed), pois, cats, leads, ckpt)
     assert q.awaitTermination(600), "stream did not drain in time"
     after = {r["prop_id"]: r["content_hash"] for r in leads.read().collect()}
     assert after == before
