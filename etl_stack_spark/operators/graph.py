@@ -126,11 +126,11 @@ def pagerank_oracle_sql(
     iterations, ``//`` floor division on nonnegative BIGINTs ≡ Spark's
     ``div``). ``edges_cte`` must select ``src, dst``."""
     parts = [
-        f"WITH edges AS ({edges_cte}),",
-        "nodes AS (SELECT CAST(src AS BIGINT) AS node FROM edges"
+        f"WITH edges AS MATERIALIZED ({edges_cte}),",
+        "nodes AS MATERIALIZED (SELECT CAST(src AS BIGINT) AS node FROM edges"
         " UNION SELECT CAST(dst AS BIGINT) FROM edges),",
-        "cnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),",
-        "deg AS (SELECT CAST(src AS BIGINT) AS src, CAST(COUNT(*) AS BIGINT) AS outdeg"
+        "cnt AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),",
+        "deg AS MATERIALIZED (SELECT CAST(src AS BIGINT) AS src, CAST(COUNT(*) AS BIGINT) AS outdeg"
         " FROM edges GROUP BY src),",
         f"s0 AS (SELECT node, {scale} // (SELECT n FROM cnt) AS score FROM nodes),",
     ]

@@ -166,7 +166,7 @@ ranked AS (
          END AS rank
   FROM hashed
 ),
-sketch AS (
+sketch AS MATERIALIZED (
   SELECT grp, register, MAX(rank) AS max_rank FROM ranked GROUP BY grp, register
 ),
 dense AS (
@@ -356,7 +356,7 @@ def cm_oracle_sql(key_sql: str, from_sql: str, query_key_sql: str, query_from_sq
     ]
     return f"""
 WITH raw AS ({build}),
-cm AS (SELECT row, col, CAST(COUNT(*) AS BIGINT) AS cnt FROM raw GROUP BY row, col)
+cm AS MATERIALIZED (SELECT row, col, CAST(COUNT(*) AS BIGINT) AS cnt FROM raw GROUP BY row, col)
 SELECT *, least({", ".join(lookups)}) AS cm_est
 {query_from_sql}
 """

@@ -147,7 +147,7 @@ FROM spine s LEFT JOIN actual a ON s.user_id = a.user_id AND s.hour = a.hour
 
 
 _FN1_ORACLE = """
-WITH first_signup AS (
+WITH first_signup AS MATERIALIZED (
   SELECT user_id, MIN(ts) AS signup_ts FROM events
   WHERE event_type = 'signup' GROUP BY user_id
 ),
@@ -343,7 +343,7 @@ def ru3_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cumulative count covers ceil(q·N) — integer-exact in both engines.
 # ---------------------------------------------------------------------------
 _QS1_ORACLE = """
-WITH cents AS (SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS c FROM orders),
+WITH cents AS MATERIALIZED (SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS c FROM orders),
 hist AS (SELECT c, CAST(COUNT(*) AS BIGINT) AS cnt FROM cents GROUP BY c),
 cum AS (SELECT c, SUM(cnt) OVER (ORDER BY c) AS cum_cnt FROM hist),
 tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM cents),
@@ -786,7 +786,7 @@ WITH b AS (
          CASE WHEN value < 5 THEN 0 WHEN value < 12 THEN 1 ELSE 2 END AS bucket
   FROM events
 ),
-cells AS (SELECT event_type, bucket, CAST(COUNT(*) AS BIGINT) AS o FROM b GROUP BY 1, 2),
+cells AS MATERIALIZED (SELECT event_type, bucket, CAST(COUNT(*) AS BIGINT) AS o FROM b GROUP BY 1, 2),
 rows_ AS (SELECT event_type, CAST(SUM(o) AS BIGINT) AS r FROM cells GROUP BY 1),
 cols_ AS (SELECT bucket, CAST(SUM(o) AS BIGINT) AS c FROM cells GROUP BY 1),
 tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM cells)
@@ -853,7 +853,7 @@ WITH amounts AS (
 digits AS (
   SELECT CAST(substr(CAST(cents AS VARCHAR), 1, 1) AS INT) AS digit FROM amounts
 ),
-obs AS (SELECT digit, CAST(COUNT(*) AS BIGINT) AS n FROM digits GROUP BY digit),
+obs AS MATERIALIZED (SELECT digit, CAST(COUNT(*) AS BIGINT) AS n FROM digits GROUP BY digit),
 tot AS (SELECT CAST(SUM(n) AS BIGINT) AS total FROM obs)
 SELECT digit, n,
   CAST(floor((CASE digit {_BD1_EXP_SQL} END) * 1000000 + 0.5) AS BIGINT) AS expected_ppm,
@@ -1035,7 +1035,7 @@ WITH seq_ AS (
          event_type
   FROM events
 ),
-cells AS (
+cells AS MATERIALIZED (
   SELECT prev_type, event_type, CAST(COUNT(*) AS BIGINT) AS n
   FROM seq_ GROUP BY 1, 2
 ),

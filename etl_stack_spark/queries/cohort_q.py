@@ -16,10 +16,10 @@ from etl_stack_spark.queries import register
 from etl_stack_spark.session import load_table
 
 _CH1_ORACLE = """
-WITH q AS (
+WITH q AS MATERIALIZED (
   SELECT user_id, ts FROM events WHERE event_type = 'purchase' AND value > 80
 ),
-firsts AS (
+firsts AS MATERIALIZED (
   SELECT user_id, CAST(date_trunc('week', MIN(ts)) AS DATE) AS cohort_week
   FROM q GROUP BY user_id
 ),

@@ -12,12 +12,15 @@ from pyspark.sql import functions as F
 from etl_stack_spark.plans.corpus_clean import clean_corpus, clean_corpus_v2
 from etl_stack_spark.queries import register, stores
 from etl_stack_spark.queries.text_dedup import (
-    _minhash_oracle,
+    _FP_EXPR,
+    _H60,
+    _QUALITY_EXPR,
+    _SEM_LOSERS,
     _SHINGLES,
     _TOKS,
-    _marker_count,
+    _lang_pieces,
+    _minhash_ctes,
 )
-from etl_stack_spark.operators.text import LANG_MARKERS
 from etl_stack_spark.session import load_table
 
 # The llm1/llm2/llm3 washes share their front half: the 6-regex scoring
@@ -82,88 +85,29 @@ def xdoc_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lang_pieces() -> tuple[str, str]:
-    """(count_cols, lang_case) SQL fragments shared by llm1/llm2."""
-    langs = [lang for lang, _ in LANG_MARKERS]
-    count_cols = ", ".join(f"{_marker_count(ws)} AS c_{lang}" for lang, ws in LANG_MARKERS)
-    cases = []
-    for i, lang in enumerate(langs):
-        geq = " AND ".join(f"c_{lang} >= c_{other}" for other in langs[i + 1:])
-        cond = (geq + " AND " if geq else "") + f"c_{lang} > 0"
-        cases.append(f"WHEN {cond} THEN '{lang}'")
-    return count_cols, "CASE " + " ".join(cases) + " ELSE 'unknown' END"
+# The washes' oracles: one CTE per stage, each stage spelled once below
+# and spliced into llm1, llm2 and llm3.
+_NON_SRC0 = "WHERE source <> 'src0'"
 
 
-def _corpus_oracle() -> str:
-    # quality + lang stage (reuse the tx1/tx2 logic inline)
-    all_markers = [w for _, ws in LANG_MARKERS for w in ws]
+def _kept_ctes(where: str = "") -> str:
+    """``scored`` (quality, marker counts, fingerprint over ``documents
+    {where}``) and ``kept``: quality ≥ 0.4 and a kept language."""
     count_cols, lang_case = _lang_pieces()
-
-    minhash_pairs = _minhash_oracle().replace("FROM documents", "FROM exact")
-    return f"""
-WITH scored AS (
-  SELECT doc_id, text,
-    round(4e-1 * (CASE WHEN length(text) >= 50 AND length(text) <= 5000 THEN 1e0 ELSE 0e0 END)
-        + 4e-1 * least(1e0, {_marker_count(all_markers)} * 5e0 / greatest(len({_TOKS}), 1))
-        + 2e-1 * (CASE WHEN len(regexp_extract_all(text, '[^\\w\\s]')) / greatest(length(text), 1) <= 2e-1
-                  THEN 1e0 ELSE 0e0 END), 6) AS quality,
-    {count_cols},
-    sha256(trim(regexp_replace(regexp_replace(lower(text), '[^\\w\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS fp
-  FROM documents
+    return f"""scored AS (
+  SELECT doc_id, text, {_QUALITY_EXPR} AS quality, {count_cols}, {_FP_EXPR} AS fp
+  FROM documents {where}
 ),
 kept AS (
   SELECT doc_id, text, quality, {lang_case} AS pred_lang, fp FROM scored
   WHERE quality >= 0.4 AND ({lang_case}) IN ('en', 'es', 'de', 'fr')
-),
-exact AS (
-  SELECT doc_id, text, quality, pred_lang FROM (
-    SELECT *, MIN(doc_id) OVER (PARTITION BY fp) AS canon FROM kept
-  ) WHERE doc_id = canon
-),
-pairs AS ({minhash_pairs}),
-losers AS (SELECT DISTINCT doc_b AS doc_id FROM pairs)
-SELECT e.doc_id, e.quality, e.pred_lang
-FROM exact e LEFT JOIN losers l ON e.doc_id = l.doc_id
-WHERE l.doc_id IS NULL
-"""
+)"""
 
 
-@register("llm1_corpus_clean", _corpus_oracle())
-def llm1_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_stack_spark.queries.text_dedup import pair_base
-
-    docs = load_table(spark, sf_dir, "documents")
-    return clean_corpus(
-        docs,
-        scored=corpus_base(spark, sf_dir)["scored"],
-        pairs=pair_base(spark, sf_dir),
-    )
-
-
-def _corpus_v2_oracle() -> str:
-    """llm2: llm1's chain with the curation stages spliced in — corpus is
-    every non-src0 document, benchmark is the src0 slice, repetition
-    thresholds 0.05/0.10 and contamination threshold 0.08 (the rep1/dc1
-    constants)."""
-    all_markers = [w for _, ws in LANG_MARKERS for w in ws]
-    count_cols, lang_case = _lang_pieces()
-    minhash_pairs = _minhash_oracle().replace("FROM documents", "FROM exact")
-    return f"""
-WITH scored AS (
-  SELECT doc_id, text,
-    round(4e-1 * (CASE WHEN length(text) >= 50 AND length(text) <= 5000 THEN 1e0 ELSE 0e0 END)
-        + 4e-1 * least(1e0, {_marker_count(all_markers)} * 5e0 / greatest(len({_TOKS}), 1))
-        + 2e-1 * (CASE WHEN len(regexp_extract_all(text, '[^\\w\\s]')) / greatest(length(text), 1) <= 2e-1
-                  THEN 1e0 ELSE 0e0 END), 6) AS quality,
-    {count_cols},
-    sha256(trim(regexp_replace(regexp_replace(lower(text), '[^\\w\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS fp
-  FROM documents WHERE source <> 'src0'
-),
-kept AS (
-  SELECT doc_id, text, quality, {lang_case} AS pred_lang, fp FROM scored
-  WHERE quality >= 0.4 AND ({lang_case}) IN ('en', 'es', 'de', 'fr')
-),
-rt AS (SELECT doc_id, {_TOKS} AS toks FROM documents WHERE source <> 'src0'),
+# llm2's curation gates over the non-src0 slice: ``rep_ok`` (repetition,
+# the rep1 thresholds 0.05/0.10) and ``dec_ok`` (decontamination against
+# the src0 benchmark slice, the dc1 threshold 0.08)
+_CURATION_GATES = f"""rt AS MATERIALIZED (SELECT doc_id, {_TOKS} AS toks FROM documents {_NON_SRC0}),
 rg AS (
   SELECT doc_id,
     unnest(list_transform(range(1, greatest(len(toks) - 1, 0) + 1),
@@ -185,7 +129,7 @@ bench AS (
   SELECT DISTINCT unnest({_SHINGLES}) AS shingle FROM documents
   WHERE source = 'src0' AND doc_id < 500
 ),
-dcand AS (SELECT doc_id, {_SHINGLES} AS sh FROM documents WHERE source <> 'src0'),
+dcand AS MATERIALIZED (SELECT doc_id, {_SHINGLES} AS sh FROM documents {_NON_SRC0}),
 dsz AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_shingles FROM dcand),
 dcs AS (SELECT doc_id, unnest(sh) AS shingle FROM dcand),
 dhits AS (
@@ -195,25 +139,57 @@ dhits AS (
 dec_ok AS (
   SELECT s.doc_id FROM dsz s LEFT JOIN dhits USING (doc_id)
   WHERE coalesce(n_hits, 0) / greatest(n_shingles, 1) < 0.08
-),
-kept2 AS (
-  SELECT k.* FROM kept k
-  JOIN rep_ok USING (doc_id) JOIN dec_ok USING (doc_id)
-),
-exact AS (
+)"""
+
+
+def _dedup_ctes(*gates: str) -> str:
+    """``exact`` (the min doc_id per fingerprint among the ``kept`` docs
+    that pass every gate CTE), the MinHash chain over it, and ``losers``
+    (the doc_b of every confirmed pair)."""
+    joins = "".join(f" JOIN {g} USING (doc_id)" for g in gates)
+    return f"""exact AS MATERIALIZED (
   SELECT doc_id, text, quality, pred_lang FROM (
-    SELECT *, MIN(doc_id) OVER (PARTITION BY fp) AS canon FROM kept2
+    SELECT k.*, MIN(doc_id) OVER (PARTITION BY fp) AS canon FROM kept k{joins}
   ) WHERE doc_id = canon
 ),
-pairs AS ({minhash_pairs}),
-losers AS (SELECT DISTINCT doc_b AS doc_id FROM pairs)
-SELECT e.doc_id, e.quality, e.pred_lang
+{_minhash_ctes("exact")},
+losers AS (SELECT DISTINCT doc_b AS doc_id FROM mh)"""
+
+
+_SURVIVORS = """SELECT e.doc_id, e.quality, e.pred_lang
 FROM exact e LEFT JOIN losers l ON e.doc_id = l.doc_id
-WHERE l.doc_id IS NULL
+WHERE l.doc_id IS NULL"""
+
+_CORPUS_ORACLE = f"""
+WITH {_kept_ctes()},
+{_dedup_ctes()}
+{_SURVIVORS}
 """
 
 
-@register("llm2_corpus_clean_v2", _corpus_v2_oracle())
+@register("llm1_corpus_clean", _CORPUS_ORACLE)
+def llm1_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from etl_stack_spark.queries.text_dedup import pair_base
+
+    docs = load_table(spark, sf_dir, "documents")
+    return clean_corpus(
+        docs,
+        scored=corpus_base(spark, sf_dir)["scored"],
+        pairs=pair_base(spark, sf_dir),
+    )
+
+
+# llm2: llm1's chain with the curation gates spliced in; the corpus is
+# every non-src0 document, the benchmark the src0 slice
+_CORPUS_V2_ORACLE = f"""
+WITH {_kept_ctes(_NON_SRC0)},
+{_CURATION_GATES},
+{_dedup_ctes("rep_ok", "dec_ok")}
+{_SURVIVORS}
+"""
+
+
+@register("llm2_corpus_clean_v2", _CORPUS_V2_ORACLE)
 def llm2_corpus_clean_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base = corpus_base(spark, sf_dir)
@@ -230,71 +206,21 @@ def llm2_corpus_clean_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _corpus_v3_oracle() -> str:
-    """llm3: llm2's chain + cross-doc 5-gram gating (rep2 constants,
-    computed on the whole non-src0 corpus, applied before the dedup
-    stages) + a final SemDeDup pass (sd1 constants: within-``label``
-    cosine >= 0.3 drops the higher vec_id) over the survivors'
-    embeddings. Docs without an embedding row pass the semantic stage."""
-    all_markers = [w for _, ws in LANG_MARKERS for w in ws]
-    count_cols, lang_case = _lang_pieces()
-    minhash_pairs = _minhash_oracle().replace("FROM documents", "FROM exact")
-    return f"""
-WITH scored AS (
-  SELECT doc_id, text,
-    round(4e-1 * (CASE WHEN length(text) >= 50 AND length(text) <= 5000 THEN 1e0 ELSE 0e0 END)
-        + 4e-1 * least(1e0, {_marker_count(all_markers)} * 5e0 / greatest(len({_TOKS}), 1))
-        + 2e-1 * (CASE WHEN len(regexp_extract_all(text, '[^\\w\\s]')) / greatest(length(text), 1) <= 2e-1
-                  THEN 1e0 ELSE 0e0 END), 6) AS quality,
-    {count_cols},
-    sha256(trim(regexp_replace(regexp_replace(lower(text), '[^\\w\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS fp
-  FROM documents WHERE source <> 'src0'
-),
-kept AS (
-  SELECT doc_id, text, quality, {lang_case} AS pred_lang, fp FROM scored
-  WHERE quality >= 0.4 AND ({lang_case}) IN ('en', 'es', 'de', 'fr')
-),
-rt AS (SELECT doc_id, {_TOKS} AS toks FROM documents WHERE source <> 'src0'),
-rg AS (
-  SELECT doc_id,
-    unnest(list_transform(range(1, greatest(len(toks) - 1, 0) + 1),
-                          i -> toks[i] || ' ' || toks[i + 1])) AS gram
-  FROM rt
-),
-rc AS (SELECT doc_id, gram, CAST(COUNT(*) AS BIGINT) AS cnt FROM rg GROUP BY doc_id, gram),
-rp AS (
-  SELECT doc_id, SUM(cnt) AS n_grams, MAX(cnt) AS top_cnt,
-    SUM(CASE WHEN cnt >= 2 THEN cnt ELSE 0 END) AS dup_cnt
-  FROM rc GROUP BY doc_id
-),
-rep_ok AS (
-  SELECT rt.doc_id FROM rt LEFT JOIN rp USING (doc_id)
-  WHERE coalesce(top_cnt, 0) / greatest(coalesce(n_grams, 0), 1) <= 0.05
-    AND coalesce(dup_cnt, 0) / greatest(coalesce(n_grams, 0), 1) <= 0.10
-),
-bench AS (
-  SELECT DISTINCT unnest({_SHINGLES}) AS shingle FROM documents
-  WHERE source = 'src0' AND doc_id < 500
-),
-dcand AS (SELECT doc_id, {_SHINGLES} AS sh FROM documents WHERE source <> 'src0'),
-dsz AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_shingles FROM dcand),
-dcs AS (SELECT doc_id, unnest(sh) AS shingle FROM dcand),
-dhits AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_hits
-  FROM dcs JOIN bench USING (shingle) GROUP BY doc_id
-),
-dec_ok AS (
-  SELECT s.doc_id FROM dsz s LEFT JOIN dhits USING (doc_id)
-  WHERE coalesce(n_hits, 0) / greatest(n_shingles, 1) < 0.08
-),
+# llm3: llm2's chain + cross-doc 5-gram gating (rep2 constants, computed
+# on the whole non-src0 corpus, applied before the dedup stages) + a final
+# SemDeDup pass (sd1's rule) over the survivors' embeddings. Docs without
+# an embedding row pass the semantic stage.
+_CORPUS_V3_ORACLE = f"""
+WITH {_kept_ctes(_NON_SRC0)},
+{_CURATION_GATES},
 xo AS (
   SELECT doc_id,
     unnest(list_transform(range(1, greatest(len(toks) - 4, 0) + 1),
                           i -> array_to_string(toks[i:i+4], ' '))) AS gram
   FROM rt
 ),
-xh AS (SELECT doc_id, ('0x' || substr(sha256(gram), 1, 15))::BIGINT AS gh FROM xo),
-xpd AS (SELECT doc_id, gh, CAST(COUNT(*) AS BIGINT) AS c FROM xh GROUP BY doc_id, gh),
+xh AS (SELECT doc_id, {_H60.format(expr="gram")} AS gh FROM xo),
+xpd AS MATERIALIZED (SELECT doc_id, gh, CAST(COUNT(*) AS BIGINT) AS c FROM xh GROUP BY doc_id, gh),
 xgd AS (SELECT gh, COUNT(*) AS n_docs FROM xpd GROUP BY gh),
 xdup AS (
   SELECT doc_id, CAST(SUM(c) AS BIGINT) AS dup_occ
@@ -305,40 +231,20 @@ xd_ok AS (
   SELECT xw.doc_id FROM xw LEFT JOIN xdup USING (doc_id)
   WHERE coalesce(dup_occ, 0) / greatest(n_windows, 1) <= 0.30
 ),
-kept2 AS (
-  SELECT k.* FROM kept k
-  JOIN rep_ok USING (doc_id) JOIN dec_ok USING (doc_id) JOIN xd_ok USING (doc_id)
-),
-exact AS (
-  SELECT doc_id, text, quality, pred_lang FROM (
-    SELECT *, MIN(doc_id) OVER (PARTITION BY fp) AS canon FROM kept2
-  ) WHERE doc_id = canon
-),
-pairs AS ({minhash_pairs}),
-losers AS (SELECT DISTINCT doc_b AS doc_id FROM pairs),
-fin AS (
-  SELECT e.doc_id, e.quality, e.pred_lang
-  FROM exact e LEFT JOIN losers l ON e.doc_id = l.doc_id
-  WHERE l.doc_id IS NULL
-),
-sememb AS (
+{_dedup_ctes("rep_ok", "dec_ok", "xd_ok")},
+fin AS MATERIALIZED ({_SURVIVORS}),
+v AS MATERIALIZED (
   SELECT vec_id, label, embedding::DOUBLE[] AS vec FROM embeddings
   WHERE vec_id IN (SELECT doc_id FROM fin)
 ),
-semlosers AS (
-  SELECT DISTINCT b.vec_id
-  FROM sememb a JOIN sememb b ON a.label = b.label AND a.vec_id < b.vec_id
-  WHERE round(list_dot_product(a.vec, b.vec)
-        / (sqrt(list_dot_product(a.vec, a.vec)) * sqrt(list_dot_product(b.vec, b.vec))), 6)
-        >= 0.3
-)
+semlosers AS ({_SEM_LOSERS})
 SELECT f.doc_id, f.quality, f.pred_lang
 FROM fin f LEFT JOIN semlosers s ON f.doc_id = s.vec_id
 WHERE s.vec_id IS NULL
 """
 
 
-@register("llm3_corpus_clean_v3", _corpus_v3_oracle())
+@register("llm3_corpus_clean_v3", _CORPUS_V3_ORACLE)
 def llm3_corpus_clean_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_stack_spark.plans.corpus_clean import clean_corpus_v3
 
@@ -412,24 +318,17 @@ def pmi1_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # before any sum — the lm1 discipline).
 # ---------------------------------------------------------------------------
 def _ds1_oracle() -> str:
-    from etl_stack_spark.queries.text_dedup import _TOKS, _marker_count
-    from etl_stack_spark.operators.text import LANG_MARKERS
-
-    all_markers = [w for _, ws in LANG_MARKERS for w in ws]
     count_cols, lang_case = _lang_pieces()
     return f"""
 WITH scored AS (
   SELECT source, doc_id,
     CAST(len({_TOKS}) AS BIGINT) AS n_tokens,
-    CAST(floor(round(4e-1 * (CASE WHEN length(text) >= 50 AND length(text) <= 5000 THEN 1e0 ELSE 0e0 END)
-        + 4e-1 * least(1e0, {_marker_count(all_markers)} * 5e0 / greatest(len({_TOKS}), 1))
-        + 2e-1 * (CASE WHEN len(regexp_extract_all(text, '[^\\w\\s]')) / greatest(length(text), 1) <= 2e-1
-                  THEN 1e0 ELSE 0e0 END), 6) * 1000 + 0.5) AS BIGINT) AS q_milli,
+    CAST(floor({_QUALITY_EXPR} * 1000 + 0.5) AS BIGINT) AS q_milli,
     {count_cols},
-    sha256(trim(regexp_replace(regexp_replace(lower(text), '[^\\w\\s]', '', 'g'), '\\s+', ' ', 'g'))) AS fp
+    {_FP_EXPR} AS fp
   FROM documents
 ),
-lang AS (SELECT source, doc_id, n_tokens, q_milli, fp, {lang_case} AS pred_lang FROM scored),
+lang AS MATERIALIZED (SELECT source, doc_id, n_tokens, q_milli, fp, {lang_case} AS pred_lang FROM scored),
 fpc AS (SELECT fp, CAST(COUNT(*) AS BIGINT) AS fpn FROM lang GROUP BY fp)
 SELECT source,
   CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -484,8 +383,6 @@ def ds1_corpus_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:
 # boundaries are pure integer arithmetic, so both engines agree exactly.
 # ---------------------------------------------------------------------------
 def _rag1_oracle() -> str:
-    from etl_stack_spark.queries.text_dedup import _H60, _TOKS
-
     h = _H60.format(expr="array_to_string(chunk, ' ')")
     return f"""
 WITH t AS (

@@ -151,7 +151,7 @@ WITH bench AS (
   SELECT DISTINCT unnest({_SHINGLES}) AS shingle FROM documents
   WHERE source = 'src0' AND doc_id < 500
 ),
-cand AS (SELECT doc_id, {_SHINGLES} AS sh FROM documents WHERE source <> 'src0'),
+cand AS MATERIALIZED (SELECT doc_id, {_SHINGLES} AS sh FROM documents WHERE source <> 'src0'),
 sz AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_shingles FROM cand),
 cs AS (SELECT doc_id, unnest(sh) AS shingle FROM cand),
 hits AS (
@@ -266,7 +266,7 @@ def lm_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _LM1_ORACLE = """
-WITH ref_tri AS (
+WITH ref_tri AS MATERIALIZED (
   SELECT substr(text, CAST(i AS INT), 3) AS tri
   FROM documents, unnest(generate_series(1, greatest(length(text) - 2, 0))) t(i)
   WHERE source = 'src0'
@@ -302,7 +302,7 @@ def lm1_trigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _REP2_ORACLE = f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH t AS MATERIALIZED (SELECT doc_id, {_TOKS} AS toks FROM documents),
 occ AS (
   SELECT doc_id,
     unnest(list_transform(range(1, greatest(len(toks) - 4, 0) + 1),
@@ -310,7 +310,7 @@ occ AS (
   FROM t
 ),
 h AS (SELECT doc_id, ('0x' || substr(sha256(gram), 1, 15))::BIGINT AS gh FROM occ),
-pd AS (SELECT doc_id, gh, CAST(COUNT(*) AS BIGINT) AS c FROM h GROUP BY doc_id, gh),
+pd AS MATERIALIZED (SELECT doc_id, gh, CAST(COUNT(*) AS BIGINT) AS c FROM h GROUP BY doc_id, gh),
 gd AS (SELECT gh, COUNT(*) AS n_docs FROM pd GROUP BY gh),
 dup AS (
   SELECT doc_id, CAST(SUM(c) AS BIGINT) AS dup_occ
@@ -445,14 +445,14 @@ tg AS (
                          i -> toks[i] || ' ' || toks[i + 1]))), 1, 15))::BIGINT % 1024 AS b
   FROM tgt
 ),
-cg AS (
+cg AS MATERIALIZED (
   SELECT doc_id,
     ('0x' || substr(sha256(unnest(list_transform(range(1, greatest(len(toks) - 1, 0) + 1),
                     i -> toks[i] || ' ' || toks[i + 1]))), 1, 15))::BIGINT % 1024 AS b
   FROM cand
 ),
-ct AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS ct FROM tg GROUP BY b),
-cr AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS cr FROM cg GROUP BY b),
+ct AS MATERIALIZED (SELECT b, CAST(COUNT(*) AS BIGINT) AS ct FROM tg GROUP BY b),
+cr AS MATERIALIZED (SELECT b, CAST(COUNT(*) AS BIGINT) AS cr FROM cg GROUP BY b),
 tot AS (SELECT (SELECT SUM(cr) FROM cr) AS R, (SELECT SUM(ct) FROM ct) AS T),
 terms AS (
   SELECT cg.doc_id,
@@ -541,13 +541,13 @@ def bpe1_subword_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ESD1_K = 4
 
 _ESD1_ORACLE = f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH t AS MATERIALIZED (SELECT doc_id, {_TOKS} AS toks FROM documents),
 g AS (
   SELECT doc_id,
     unnest(range(1, greatest(len(toks) - ({_ESD1_K} - 1), 0) + 1)) AS pos, toks
   FROM t
 ),
-g2 AS (
+g2 AS MATERIALIZED (
   SELECT doc_id, pos,
     {_H60.format(expr=f"array_to_string(toks[pos:pos+{_ESD1_K}-1], ' ')")} AS gh
   FROM g
@@ -603,7 +603,7 @@ WITH w AS (
     CAST({_H60.format(expr="'w' || CAST(bucket AS VARCHAR)")} % 2001 - 1000 AS BIGINT) AS w_milli
   FROM (SELECT CAST(range AS BIGINT) AS bucket FROM range({_QL1_DIM}))
 ),
-t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+t AS MATERIALIZED (SELECT doc_id, {_TOKS} AS toks FROM documents),
 occ AS (
   SELECT doc_id, {_H60.format(expr="tok")} % {_QL1_DIM} AS bucket
   FROM (SELECT doc_id, unnest(toks) AS tok FROM t)
@@ -778,13 +778,13 @@ def lm2b_perplexity_prune_scalable(spark: SparkSession, sf_dir: str) -> DataFram
 _BP1_LINE_WIDTH = 10
 
 _BP1_ORACLE = f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+WITH t AS MATERIALIZED (SELECT doc_id, {_TOKS} AS toks FROM documents),
 ln AS (
   SELECT doc_id, CAST(i AS BIGINT) AS pos,
          array_to_string(toks[(i-1)*{_BP1_LINE_WIDTH}+1:(i-1)*{_BP1_LINE_WIDTH}+{_BP1_LINE_WIDTH}], ' ') AS line
   FROM t, unnest(range(1, CAST(ceil(len(toks)/{_BP1_LINE_WIDTH}.0) AS BIGINT) + 1)) AS u(i)
 ),
-h AS (SELECT doc_id, pos, line, {_H60.format(expr='line')} AS lh FROM ln),
+h AS MATERIALIZED (SELECT doc_id, pos, line, {_H60.format(expr='line')} AS lh FROM ln),
 freq AS (SELECT lh, COUNT(DISTINCT doc_id) AS n_docs FROM h GROUP BY 1),
 boiler AS (SELECT lh FROM freq WHERE n_docs >= 3),
 kept AS (SELECT doc_id, pos, line FROM h ANTI JOIN boiler USING (lh)),
@@ -834,7 +834,7 @@ def bp1_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _SEL1_ORACLE = f"""
-WITH t AS (SELECT doc_id, n_chars, CAST(len({_TOKS}) AS BIGINT) AS n_tok FROM documents),
+WITH t AS MATERIALIZED (SELECT doc_id, n_chars, CAST(len({_TOKS}) AS BIGINT) AS n_tok FROM documents),
 q AS (SELECT doc_id, n_tok, round(n_chars / greatest(n_tok, 1), 6) AS q FROM t),
 o AS (SELECT doc_id, n_tok, q,
         CAST(SUM(n_tok) OVER (ORDER BY q DESC, doc_id ASC

@@ -372,7 +372,7 @@ _A4B_POINTS_SQL = """
 """
 
 _A4B_ORACLE = f"""
-WITH RECURSIVE pts AS ({_A4B_POINTS_SQL}),
+WITH RECURSIVE pts AS MATERIALIZED ({_A4B_POINTS_SQL}),
 edges AS (
   SELECT a.poi_id AS a, b.poi_id AS b
   FROM pts a JOIN pts b ON

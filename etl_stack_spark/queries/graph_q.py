@@ -145,7 +145,7 @@ def bfs1_trade_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle descends the same forest with a recursive CTE.
 # ---------------------------------------------------------------------------
 _HF1_ORACLE = """
-WITH RECURSIVE par AS (
+WITH RECURSIVE par AS MATERIALIZED (
   SELECT p_partkey AS n,
          CASE WHEN p_partkey // 4 >= 1 THEN p_partkey // 4 END AS p
   FROM part

@@ -428,7 +428,7 @@ b AS (
          o_orderpriority AS priority
   FROM orders
 ),
-j AS (
+j AS MATERIALIZED (
   SELECT CAST(COUNT(*) AS BIGINT) AS n,
          CAST(SUM(CASE WHEN a.status IS DISTINCT FROM b.status THEN 1 ELSE 0 END) AS BIGINT) AS d_status,
          CAST(SUM(CASE WHEN a.cents IS DISTINCT FROM b.cents THEN 1 ELSE 0 END) AS BIGINT) AS d_cents,

@@ -271,18 +271,18 @@ _DB1_EPS = 1.5
 _DB1_MINPTS = 4
 
 _DB1_ORACLE = f"""
-WITH RECURSIVE pts AS (
+WITH RECURSIVE pts AS MATERIALIZED (
   SELECT c_custkey AS id,
          ((c_custkey * 37) % 1000) / 10.0 AS x,
          ((c_custkey * 91) % 1000) / 10.0 AS y
   FROM customer
 ),
-pairs AS (
+pairs AS MATERIALIZED (
   SELECT a.id AS i, b.id AS j FROM pts a JOIN pts b
   ON (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= {_DB1_EPS * _DB1_EPS!r}
 ),
 nb AS (SELECT i, COUNT(*) AS n FROM pairs GROUP BY i),
-core AS (SELECT i FROM nb WHERE n >= {_DB1_MINPTS}),
+core AS MATERIALIZED (SELECT i FROM nb WHERE n >= {_DB1_MINPTS}),
 core_edges AS (
   SELECT p.i, p.j FROM pairs p
   JOIN core c1 ON c1.i = p.i JOIN core c2 ON c2.i = p.j
@@ -293,8 +293,8 @@ reach(i, lbl) AS (
   UNION
   SELECT e.i, r.lbl FROM core_edges e JOIN reach r ON r.i = e.j
 ),
-clusters AS (SELECT i, CAST(MIN(lbl) AS BIGINT) AS cluster_id FROM reach GROUP BY i),
-border AS (
+clusters AS MATERIALIZED (SELECT i, CAST(MIN(lbl) AS BIGINT) AS cluster_id FROM reach GROUP BY i),
+border AS MATERIALIZED (
   SELECT p.i, CAST(MIN(c.cluster_id) AS BIGINT) AS cluster_id
   FROM pairs p JOIN clusters c ON c.i = p.j
   WHERE p.i NOT IN (SELECT i FROM core)

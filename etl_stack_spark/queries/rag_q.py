@@ -22,13 +22,13 @@ _RAG2_ORACLE = f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
 nz AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 1),
 starts AS (SELECT doc_id, toks, n, unnest(range(1, n + 1, 48)) AS start FROM nz),
-chunks AS (
+chunks AS MATERIALIZED (
   SELECT doc_id, CAST((start - 1) // 48 AS INT) AS chunk_idx,
          doc_id * 1000 + (start - 1) // 48 AS chunk_key,
          toks[start : least(start + 63, n)] AS chunk
   FROM starts
 ),
-qk AS (
+qk AS MATERIALIZED (
   SELECT doc_id AS query_id, chunk_key AS q_key FROM chunks
   WHERE doc_id < 5 AND chunk_idx = 0
 ),
@@ -36,14 +36,14 @@ ctok AS (SELECT chunk_key, unnest(chunk) AS tok FROM chunks),
 hashed AS (
   SELECT chunk_key, ('0x' || substr(sha256(tok), 1, 15))::BIGINT AS h FROM ctok
 ),
-feat AS (
+feat AS MATERIALIZED (
   SELECT chunk_key, bucket, w FROM (
     SELECT chunk_key, CAST(h % {_DIM} AS INT) AS bucket,
            CAST(SUM(CASE WHEN (h // {_DIM}) % 2 = 0 THEN 1 ELSE -1 END) AS BIGINT) AS w
     FROM hashed GROUP BY chunk_key, h % {_DIM}
   ) WHERE w <> 0
 ),
-norms AS (SELECT chunk_key, CAST(SUM(w * w) AS BIGINT) AS n2 FROM feat GROUP BY chunk_key),
+norms AS MATERIALIZED (SELECT chunk_key, CAST(SUM(w * w) AS BIGINT) AS n2 FROM feat GROUP BY chunk_key),
 qfeat AS (
   SELECT qk.query_id, qk.q_key, f.bucket, f.w AS qw
   FROM qk JOIN feat f ON f.chunk_key = qk.q_key
@@ -69,7 +69,7 @@ vec_leg AS (
     FROM cos
   ) WHERE rank <= 50
 ),
-cdtok AS (SELECT chunk_key, unnest(list_distinct(chunk)) AS tok FROM chunks),
+cdtok AS MATERIALIZED (SELECT chunk_key, unnest(list_distinct(chunk)) AS tok FROM chunks),
 qtok AS (
   SELECT qk.query_id, qk.q_key, c.tok FROM qk JOIN cdtok c ON c.chunk_key = qk.q_key
 ),

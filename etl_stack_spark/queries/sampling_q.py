@@ -108,9 +108,9 @@ _SP3_SHARE_SQL = (
 _SP3_TOKS = r"list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')"
 
 _SP3_ORACLE = f"""
-WITH tok AS (SELECT source, doc_id, CAST(len({_SP3_TOKS}) AS BIGINT) AS n_tok FROM documents),
+WITH tok AS MATERIALIZED (SELECT source, doc_id, CAST(len({_SP3_TOKS}) AS BIGINT) AS n_tok FROM documents),
 dt AS (SELECT source, CAST(SUM(n_tok) AS BIGINT) AS d_tokens FROM tok GROUP BY source),
-sh AS (SELECT source, d_tokens, {_SP3_SHARE_SQL} AS share FROM dt),
+sh AS MATERIALIZED (SELECT source, d_tokens, {_SP3_SHARE_SQL} AS share FROM dt),
 sc AS (SELECT MIN(d_tokens / share) AS scale FROM sh),
 rates AS (
   SELECT source, least(1e0, (SELECT scale FROM sc) * share / d_tokens) AS rate FROM sh
@@ -161,7 +161,7 @@ def sp3_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # this corpus ("small ring" vs "Supplier#…") — a structurally-0-row anchor
 # whose hash could not catch anything.
 _FZ1_ORACLE = """
-WITH names AS (
+WITH names AS MATERIALIZED (
   SELECT DISTINCT lower(p_name) AS nm,
          split_part(lower(p_name), ' ', 1) AS blk
   FROM part
@@ -251,9 +251,9 @@ def ss3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cross-engine Σ-of-doubles normalization needed; sqrt is IEEE-exact.
 # ---------------------------------------------------------------------------
 _MIX2_ORACLE = f"""
-WITH tok AS (SELECT source, doc_id, CAST(len({_SP3_TOKS}) AS BIGINT) AS n_tok FROM documents),
+WITH tok AS MATERIALIZED (SELECT source, doc_id, CAST(len({_SP3_TOKS}) AS BIGINT) AS n_tok FROM documents),
 dt AS (SELECT source, CAST(SUM(n_tok) AS BIGINT) AS d_tokens FROM tok GROUP BY source),
-sh AS (SELECT source, d_tokens, sqrt(CAST(d_tokens AS DOUBLE)) AS share FROM dt),
+sh AS MATERIALIZED (SELECT source, d_tokens, sqrt(CAST(d_tokens AS DOUBLE)) AS share FROM dt),
 sc AS (SELECT MIN(d_tokens / share) AS scale FROM sh),
 rates AS (
   SELECT source, least(1e0, (SELECT scale FROM sc) * share / d_tokens) AS rate FROM sh
@@ -303,19 +303,19 @@ def mix2_temperature_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _SEL2_ORACLE = f"""
-WITH tok AS (
+WITH tok AS MATERIALIZED (
   SELECT source, doc_id, n_chars, CAST(len({_SP3_TOKS}) AS BIGINT) AS n_tok
   FROM documents
 ),
 q AS (SELECT source, doc_id, n_tok,
              round(n_chars / greatest(n_tok, 1), 6) AS q FROM tok),
 dt AS (SELECT source, CAST(SUM(n_tok) AS BIGINT) AS d_tokens FROM tok GROUP BY source),
-sh AS (SELECT source, d_tokens,
+sh AS MATERIALIZED (SELECT source, d_tokens,
               CAST(round(sqrt(CAST(d_tokens AS DOUBLE)), 6) AS DECIMAL(38,6)) AS share
        FROM dt),
 tot AS (SELECT CAST(SUM(d_tokens) AS BIGINT) AS all_tokens,
                SUM(share) AS sum_share FROM sh),
-b AS (
+b AS MATERIALIZED (
   SELECT source, d_tokens,
     CAST(floor(0.5 * all_tokens *
                (CAST(share AS DOUBLE) / CAST(sum_share AS DOUBLE))) AS BIGINT) AS budget

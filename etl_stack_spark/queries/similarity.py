@@ -220,9 +220,9 @@ def ss4_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Round 1 shipped this as an all-pairs cross join — retired per review; the
 # exact variant survives behind a corpus-size gate for recall measurement.
 _DD5_ORACLE = f"""
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
+WITH v AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
 b AS (SELECT vec_id, vec, {_bucket_sql('vec')} AS bucket FROM v),
-p AS (SELECT vec_id, unnest({_probe_list_sql('bucket')}) AS probe FROM b),
+p AS MATERIALIZED (SELECT vec_id, unnest({_probe_list_sql('bucket')}) AS probe FROM b),
 cand AS (
   SELECT DISTINCT a.vec_id AS id_a, b2.vec_id AS id_b
   FROM p a JOIN p b2 ON a.probe = b2.probe AND a.vec_id < b2.vec_id
@@ -299,7 +299,7 @@ _KNN1_COS = (
     "list_dot_product(av, bv) / (sqrt(list_dot_product(av, av)) * sqrt(list_dot_product(bv, bv)))"
 )
 _KNN1_ORACLE = f"""
-WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+WITH e AS MATERIALIZED (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
 scored AS (
   SELECT a.vec_id, b.vec_id AS neighbor_id,
          round(list_dot_product(a.v, b.v)
@@ -347,16 +347,16 @@ def _rrf1_oracle() -> str:
 
     qt_vals = ", ".join(f"('{t}')" for t in _IR1_TERMS)
     return f"""
-WITH toks AS (
+WITH toks AS MATERIALIZED (
   SELECT doc_id, tok FROM (
     SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) AS tok
     FROM documents
   ) WHERE tok <> ''
 ),
-dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM toks GROUP BY doc_id),
+dl AS MATERIALIZED (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM toks GROUP BY doc_id),
 stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(dl) AS BIGINT) AS t_total FROM dl),
 qt(tok) AS (VALUES {qt_vals}),
-tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf
+tf AS MATERIALIZED (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf
        FROM toks JOIN qt USING (tok) GROUP BY doc_id, tok),
 dfreq AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY tok),
 lexm AS (
@@ -472,7 +472,7 @@ def hn1_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _PCA1_ORACLE = """
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+WITH v AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
 pairs AS (
   SELECT CAST(i * 65 + j AS BIGINT) AS k, CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
          CAST(floor(e[i] * e[j] * 1000000 + 0.5) AS BIGINT) AS p

@@ -56,15 +56,15 @@ from etl_stack_spark.operators.sketch import (  # noqa: E402
 )
 
 _BF1_ORACLE = f"""
-WITH bloom AS (
+WITH bloom AS MATERIALIZED (
   {bloom_oracle_cte("CAST(o_custkey AS VARCHAR)",
                     "FROM orders WHERE o_totalprice > 400000")}
 ),
-pass AS (
+pass AS MATERIALIZED (
   SELECT c_custkey FROM customer
   WHERE {bloom_probe_oracle_pred("CAST(c_custkey AS VARCHAR)", "bloom")}
 ),
-tru AS (
+tru AS MATERIALIZED (
   SELECT DISTINCT o_custkey AS c_custkey FROM orders WHERE o_totalprice > 400000
 )
 SELECT CAST((SELECT COUNT(*) FROM pass) AS BIGINT) AS n_bloom_pass,
@@ -217,8 +217,8 @@ _KMV1_KEY_SQL = (
 )
 
 _KMV1_ORACLE = f"""
-WITH ka AS ({kmv_sketch_oracle_sql(_KMV1_KEY_SQL, "FROM events WHERE event_type = 'click'")}),
-kb AS ({kmv_sketch_oracle_sql(_KMV1_KEY_SQL, "FROM events WHERE event_type = 'purchase'")}),
+WITH ka AS MATERIALIZED ({kmv_sketch_oracle_sql(_KMV1_KEY_SQL, "FROM events WHERE event_type = 'click'")}),
+kb AS MATERIALIZED ({kmv_sketch_oracle_sql(_KMV1_KEY_SQL, "FROM events WHERE event_type = 'purchase'")}),
 ku AS (SELECT h FROM (SELECT h FROM ka UNION SELECT h FROM kb) ORDER BY h LIMIT {KMV_K}),
 ea AS ({kmv_estimate_oracle_sql("ka")}),
 eb AS ({kmv_estimate_oracle_sql("kb")}),

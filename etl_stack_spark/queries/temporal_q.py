@@ -139,7 +139,7 @@ def adx1_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pv1's own aggregation); oracle is the portable UNION ALL form.
 # ---------------------------------------------------------------------------
 _UPV1_ORACLE = f"""
-WITH wide AS ({_PV1_ORACLE})
+WITH wide AS MATERIALIZED ({_PV1_ORACLE})
 SELECT user_id, 'click' AS event_type, click AS n FROM wide
 UNION ALL SELECT user_id, 'error', error FROM wide
 UNION ALL SELECT user_id, 'purchase', purchase FROM wide
@@ -163,7 +163,7 @@ def upv1_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _OL1_ORACLE = """
-WITH iv AS (
+WITH iv AS MATERIALIZED (
   SELECT event_type, ts AS s,
          ts + to_seconds(CAST(floor(value * 60) AS BIGINT)) AS e
   FROM events

@@ -130,6 +130,10 @@ def sem_pair_base(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- shared DuckDB fragments (match operators/text.py semantics) -----------
+# Each fragment is written once and spliced into every oracle that needs
+# it. DuckDB 1.0 inlines a CTE at every reference, so an oracle declares
+# AS MATERIALIZED each non-recursive CTE it reads two or more times
+# (tests/test_oracle_sql.py keeps that rule for every registered oracle).
 
 _TOKS = r"list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')"
 
@@ -140,29 +144,46 @@ _SHINGLES = (
 
 _H60 = "('0x' || substr(sha256({expr}), 1, 15))::BIGINT"
 
+# tx4's rolling-normalized document fingerprint (operators/text.py::fingerprint)
+_FP_EXPR = r"sha256(trim(regexp_replace(regexp_replace(lower(text), '[^\w\s]', '', 'g'), '\s+', ' ', 'g')))"
+
 
 def _marker_count(words: list[str]) -> str:
     pat = "\\b(" + "|".join(words) + ")\\b"
     return f"len(regexp_extract_all(lower(text), '{pat}'))"
 
 
-# ---------------------------------------------------------------------------
-# TX1 — language ID (argmax marker counts, tie → LANG_MARKERS order)
-# ---------------------------------------------------------------------------
-def _lang_oracle() -> str:
-    cols = ", ".join(
-        f"{_marker_count(ws)} AS c_{lang}" for lang, ws in LANG_MARKERS
-    )
+_ALL_MARKERS = [w for _, ws in LANG_MARKERS for w in ws]
+
+# tx2's quality score (operators/text.py::quality_score)
+_QUALITY_EXPR = f"""round(
+  4e-1 * (CASE WHEN length(text) >= 50 AND length(text) <= 5000 THEN 1e0 ELSE 0e0 END)
+  + 4e-1 * least(1e0, {_marker_count(_ALL_MARKERS)} * 5e0 / greatest(len({_TOKS}), 1))
+  + 2e-1 * (CASE WHEN len(regexp_extract_all(text, '[^\\w\\s]'))
+                      / greatest(length(text), 1) <= 2e-1 THEN 1e0 ELSE 0e0 END), 6)"""
+
+
+def _lang_pieces() -> tuple[str, str]:
+    """(count_cols, lang_case): tx1's per-language marker counts
+    ``c_<lang>`` and the argmax CASE over them (tie → LANG_MARKERS order)."""
     langs = [lang for lang, _ in LANG_MARKERS]
+    count_cols = ", ".join(f"{_marker_count(ws)} AS c_{lang}" for lang, ws in LANG_MARKERS)
     cases = []
     for i, lang in enumerate(langs):
         geq = " AND ".join(f"c_{lang} >= c_{other}" for other in langs[i + 1 :])
         cond = (geq + " AND " if geq else "") + f"c_{lang} > 0"
         cases.append(f"WHEN {cond} THEN '{lang}'")
-    case_sql = "CASE " + " ".join(cases) + " ELSE 'unknown' END"
+    return count_cols, "CASE " + " ".join(cases) + " ELSE 'unknown' END"
+
+
+# ---------------------------------------------------------------------------
+# TX1 — language ID (argmax marker counts, tie → LANG_MARKERS order)
+# ---------------------------------------------------------------------------
+def _lang_oracle() -> str:
+    count_cols, lang_case = _lang_pieces()
     return f"""
-WITH counts AS (SELECT doc_id, lang AS true_lang, {cols} FROM documents)
-SELECT doc_id, true_lang, {case_sql} AS pred_lang FROM counts
+WITH counts AS (SELECT doc_id, lang AS true_lang, {count_cols} FROM documents)
+SELECT doc_id, true_lang, {lang_case} AS pred_lang FROM counts
 """
 
 
@@ -177,24 +198,7 @@ def tx1_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # TX2 — quality score
 # ---------------------------------------------------------------------------
-_ALL_MARKERS = [w for _, ws in LANG_MARKERS for w in ws]
-
-_TX2_ORACLE = f"""
-WITH feats AS (
-  SELECT doc_id,
-    length(text) AS n_chars,
-    len({_TOKS}) AS n_tok,
-    {_marker_count(_ALL_MARKERS)} AS sw,
-    len(regexp_extract_all(text, '[^\\w\\s]')) AS n_punct
-  FROM documents
-)
-SELECT doc_id,
-  round(4e-1 * (CASE WHEN n_chars >= 50 AND n_chars <= 5000 THEN 1e0 ELSE 0e0 END)
-      + 4e-1 * least(1e0, sw * 5e0 / greatest(n_tok, 1))
-      + 2e-1 * (CASE WHEN n_punct / greatest(n_chars, 1) <= 2e-1 THEN 1e0 ELSE 0e0 END), 6)
-  AS quality
-FROM feats
-"""
+_TX2_ORACLE = f"SELECT doc_id, {_QUALITY_EXPR} AS quality FROM documents"
 
 
 @register("tx2_quality_score", _TX2_ORACLE)
@@ -227,12 +231,7 @@ def tx3_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # TX4 — document fingerprint (rolling-normalized sha256)
 # ---------------------------------------------------------------------------
-_TX4_ORACLE = r"""
-SELECT doc_id,
-  sha256(trim(regexp_replace(regexp_replace(lower(text), '[^\w\s]', '', 'g'),
-                             '\s+', ' ', 'g'))) AS fp
-FROM documents
-"""
+_TX4_ORACLE = f"SELECT doc_id, {_FP_EXPR} AS fp FROM documents"
 
 
 @register("tx4_fingerprint", _TX4_ORACLE)
@@ -244,13 +243,8 @@ def tx4_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # DD1 — exact dedup by fingerprint
 # ---------------------------------------------------------------------------
-_DD1_ORACLE = r"""
-WITH fp AS (
-  SELECT doc_id,
-    sha256(trim(regexp_replace(regexp_replace(lower(text), '[^\w\s]', '', 'g'),
-                               '\s+', ' ', 'g'))) AS fp
-  FROM documents
-)
+_DD1_ORACLE = f"""
+WITH fp AS (SELECT doc_id, {_FP_EXPR} AS fp FROM documents)
 SELECT doc_id, MIN(doc_id) OVER (PARTITION BY fp) AS canonical_id,
        (doc_id <> MIN(doc_id) OVER (PARTITION BY fp)) AS is_duplicate
 FROM fp
@@ -266,9 +260,11 @@ def dd1_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # DD2 — MinHash + LSH near-dup pairs
 # ---------------------------------------------------------------------------
-def _minhash_ctes() -> tuple[str, str]:
-    """(cte_body, final_pairs_select) — split so dd6's recursive-CTE
-    component oracle can reuse the pair pipeline as inner CTEs."""
+def _minhash_ctes(source: str = "documents") -> str:
+    """The MinHash CTE chain sh → h → sig → bands → pairs → mh over
+    ``source`` (any relation with doc_id and text). ``mh`` holds the
+    confirmed pairs (doc_a, doc_b, est_jaccard), dd2's output; it is
+    materialized because the cluster chain's ``edges`` reads it twice."""
     mh_cols = ", ".join(
         f"min((h * {a} + {b}) % {MINHASH_PRIME}) AS mh{i}"
         for i, (a, b) in enumerate(MINHASH_AB)
@@ -284,34 +280,44 @@ def _minhash_ctes() -> tuple[str, str]:
         f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)" for i in range(N_MINHASH)
     )
     h_expr = _H60.format(expr="shingle")
-    ctes = f"""sh AS (
-  SELECT doc_id, unnest({_SHINGLES}) AS shingle FROM documents
+    return f"""sh AS (
+  SELECT doc_id, unnest({_SHINGLES}) AS shingle FROM {source}
 ),
 h AS (SELECT doc_id, ({h_expr} % {MINHASH_PRIME}) AS h FROM sh),
-sig AS (SELECT doc_id, {mh_cols} FROM h GROUP BY doc_id),
-bands AS ({band_selects}),
+sig AS MATERIALIZED (SELECT doc_id, {mh_cols} FROM h GROUP BY doc_id),
+bands AS MATERIALIZED ({band_selects}),
 pairs AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a JOIN bands b USING (band, band_key)
   WHERE a.doc_id < b.doc_id
+),
+mh AS MATERIALIZED (
+  SELECT doc_a, doc_b, round(({agree}) / {float(N_MINHASH)}, 6) AS est_jaccard
+  FROM pairs
+  JOIN sig sa ON sa.doc_id = doc_a
+  JOIN sig sb ON sb.doc_id = doc_b
+  WHERE ({agree}) / {float(N_MINHASH)} >= 0.5
 )"""
-    final = f"""SELECT doc_a, doc_b, round(({agree}) / {float(N_MINHASH)}, 6) AS est_jaccard
-FROM pairs
-JOIN sig sa ON sa.doc_id = doc_a
-JOIN sig sb ON sb.doc_id = doc_b
-WHERE ({agree}) / {float(N_MINHASH)} >= 0.5"""
-    return ctes, final
 
 
-def _minhash_oracle() -> str:
-    ctes, final = _minhash_ctes()
-    return f"""
-WITH {ctes}
-{final}
-"""
+# connected components over the MinHash pair graph (recursive closure),
+# min-id label: ``clusters`` (doc_id, cluster_id) is dd6's assignment,
+# read by dd6, dd8 and split1 under WITH RECURSIVE
+_CLUSTER_CTES = f"""{_minhash_ctes()},
+edges AS (
+  SELECT doc_a AS a, doc_b AS b FROM mh
+  UNION
+  SELECT doc_b AS a, doc_a AS b FROM mh
+),
+reach AS (
+  SELECT doc_id AS p, doc_id AS q FROM documents
+  UNION
+  SELECT r.p, e.b FROM reach r JOIN edges e ON r.q = e.a
+),
+clusters AS (SELECT p AS doc_id, MIN(q) AS cluster_id FROM reach GROUP BY p)"""
 
 
-@register("dd2_minhash_lsh", _minhash_oracle())
+@register("dd2_minhash_lsh", f"WITH {_minhash_ctes()}\nSELECT * FROM mh")
 def dd2_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dd2's output IS the session pair store (built here on first call,
     # read by dd6/dd8/split1 and the llm washes' near-dup stages)
@@ -322,27 +328,13 @@ def dd2_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DD6 — cluster-based dedup: connected components over the MinHash pair
 # graph (recursive-CTE oracle), survivor = min id per component
 # ---------------------------------------------------------------------------
-def _dd6_oracle() -> str:
-    ctes, final = _minhash_ctes()
-    return f"""
-WITH RECURSIVE {ctes},
-mh AS ({final}),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM mh
-  UNION
-  SELECT doc_b AS a, doc_a AS b FROM mh
-),
-reach AS (
-  SELECT doc_id AS p, doc_id AS q FROM documents
-  UNION
-  SELECT r.p, e.b FROM reach r JOIN edges e ON r.q = e.a
-)
-SELECT p AS doc_id, MIN(q) AS cluster_id, (p <> MIN(q)) AS is_duplicate
-FROM reach GROUP BY p
+_DD6_ORACLE = f"""
+WITH RECURSIVE {_CLUSTER_CTES}
+SELECT doc_id, cluster_id, doc_id <> cluster_id AS is_duplicate FROM clusters
 """
 
 
-@register("dd6_cluster_dedup", _dd6_oracle())
+@register("dd6_cluster_dedup", _DD6_ORACLE)
 def dd6_cluster_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dd6's output IS the session cluster store (CC over the pair store;
     # dd8's survivorship window and split1's fold read the same table)
@@ -353,10 +345,10 @@ def dd6_cluster_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DD3 — exact n-gram Jaccard pairs
 # ---------------------------------------------------------------------------
 _DD3_ORACLE = f"""
-WITH sh AS (
+WITH sh AS MATERIALIZED (
   SELECT doc_id, unnest({_SHINGLES}) AS shingle FROM documents
 ),
-sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles FROM sh GROUP BY doc_id),
+sizes AS MATERIALIZED (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles FROM sh GROUP BY doc_id),
 common AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(COUNT(*) AS BIGINT) AS n_common
   FROM sh a JOIN sh b USING (shingle)
@@ -409,16 +401,16 @@ def dd4_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IR1_TERMS = ("join", "hash", "scan", "window", "customer")
 
 _IR1_ORACLE = f"""
-WITH toks AS (
+WITH toks AS MATERIALIZED (
   SELECT doc_id, tok FROM (
     SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) AS tok
     FROM documents
   ) WHERE tok <> ''
 ),
-dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM toks GROUP BY doc_id),
+dl AS MATERIALIZED (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM toks GROUP BY doc_id),
 stats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(dl) AS BIGINT) AS t_total FROM dl),
 qt(tok) AS (VALUES {", ".join(f"('{t}')" for t in _IR1_TERMS)}),
-tf AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf
+tf AS MATERIALIZED (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS tf
        FROM toks JOIN qt USING (tok) GROUP BY doc_id, tok),
 dfreq AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY tok),
 scored AS (
@@ -520,15 +512,17 @@ def dd7_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (max 0.475, q99 0.295 at sf0.01) so the test exercises real drops
 # (~19% of rows) instead of passing vacuously.
 # ---------------------------------------------------------------------------
-_SD1_ORACLE = """
-WITH v AS (SELECT vec_id, label, embedding::DOUBLE[] AS vec FROM embeddings),
-losers AS (
-  SELECT DISTINCT b.vec_id
+# the losers of a relation ``v`` (vec_id, label, vec): sd1's rule, also
+# llm3's final stage
+_SEM_LOSERS = """SELECT DISTINCT b.vec_id
   FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
   WHERE round(list_dot_product(a.vec, b.vec)
         / (sqrt(list_dot_product(a.vec, a.vec)) * sqrt(list_dot_product(b.vec, b.vec))), 6)
-        >= 0.3
-)
+        >= 0.3"""
+
+_SD1_ORACLE = f"""
+WITH v AS MATERIALIZED (SELECT vec_id, label, embedding::DOUBLE[] AS vec FROM embeddings),
+losers AS ({_SEM_LOSERS})
 SELECT vec_id, label FROM v ANTI JOIN losers USING (vec_id)
 """
 
@@ -567,18 +561,18 @@ def sd1_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 def _lang2_oracle() -> str:
     return f"""
-WITH base AS (SELECT doc_id, lang, {_TOKS} AS toks FROM documents),
-tr_tok AS (SELECT lang, unnest(toks) AS tok FROM base WHERE doc_id % 2 = 0),
+WITH base AS MATERIALIZED (SELECT doc_id, lang, {_TOKS} AS toks FROM documents),
+tr_tok AS MATERIALIZED (SELECT lang, unnest(toks) AS tok FROM base WHERE doc_id % 2 = 0),
 cls_tok AS (SELECT lang, tok, count(*) AS cnt FROM tr_tok GROUP BY lang, tok),
-cls_tot AS (SELECT lang, count(*) AS tot FROM tr_tok GROUP BY lang),
-voc AS (SELECT count(DISTINCT tok) AS v FROM tr_tok),
+cls_tot AS MATERIALIZED (SELECT lang, count(*) AS tot FROM tr_tok GROUP BY lang),
+voc AS MATERIALIZED (SELECT count(DISTINCT tok) AS v FROM tr_tok),
 pri AS (
   SELECT lang, CAST(floor(ln(count(*) /
            (SELECT count(*)::DOUBLE FROM base WHERE doc_id % 2 = 0)) * 1000 + 0.5)
          AS BIGINT) AS q_prior
   FROM base WHERE doc_id % 2 = 0 GROUP BY lang
 ),
-defaults AS (
+defaults AS MATERIALIZED (
   SELECT c.lang,
          CAST(floor(ln(1.0 / (c.tot + v.v)) * 1000 + 0.5) AS BIGINT) AS q_def
   FROM cls_tot c, voc v
@@ -589,7 +583,7 @@ delta AS (
            - d.q_def AS q_delta
   FROM cls_tok ct JOIN cls_tot c USING (lang) JOIN defaults d USING (lang), voc v
 ),
-te AS (
+te AS MATERIALIZED (
   SELECT doc_id, lang AS true_lang, toks, len(toks) AS n
   FROM base WHERE doc_id % 2 = 1
 ),
@@ -626,31 +620,12 @@ def lang2_nb_train_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # — the FineWeb/Dolma production rule. The oracle recomputes clusters
 # via the recursive CTE and quality via tx2's formula, independently.
 # ---------------------------------------------------------------------------
-_QUALITY_EXPR = f"""round(
-  4e-1 * (CASE WHEN length(text) >= 50 AND length(text) <= 5000 THEN 1e0 ELSE 0e0 END)
-  + 4e-1 * least(1e0, {_marker_count(_ALL_MARKERS)} * 5e0 / greatest(len({_TOKS}), 1))
-  + 2e-1 * (CASE WHEN len(regexp_extract_all(text, '[^\\w\\s]'))
-                      / greatest(length(text), 1) <= 2e-1 THEN 1e0 ELSE 0e0 END), 6)"""
-
-
-def _dd8_oracle() -> str:
-    ctes, final = _minhash_ctes()
-    return f"""
-WITH RECURSIVE {ctes},
-mh AS ({final}),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM mh
-  UNION
-  SELECT doc_b AS a, doc_a AS b FROM mh
+_DD8_ORACLE = f"""
+WITH RECURSIVE {_CLUSTER_CTES},
+j AS MATERIALIZED (
+  SELECT doc_id, cluster_id, {_QUALITY_EXPR} AS quality
+  FROM clusters JOIN documents USING (doc_id)
 ),
-reach AS (
-  SELECT doc_id AS p, doc_id AS q FROM documents
-  UNION
-  SELECT r.p, e.b FROM reach r JOIN edges e ON r.q = e.a
-),
-clus AS (SELECT p AS doc_id, MIN(q) AS cluster_id FROM reach GROUP BY p),
-qual AS (SELECT doc_id, {_QUALITY_EXPR} AS quality FROM documents),
-j AS (SELECT c.doc_id, c.cluster_id, q.quality FROM clus c JOIN qual q USING (doc_id)),
 surv AS (
   SELECT cluster_id, doc_id AS survivor_id FROM (
     SELECT cluster_id, doc_id,
@@ -664,7 +639,7 @@ FROM j JOIN surv s USING (cluster_id)
 """
 
 
-@register("dd8_quality_survivor", _dd8_oracle())
+@register("dd8_quality_survivor", _DD8_ORACLE)
 def dd8_quality_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_stack_spark.operators.dedup import quality_survivor_dedup
     # runtime import: corpus_q imports this module at load time
@@ -693,31 +668,20 @@ def dd8_quality_survivor(spark: SparkSession, sf_dir: str) -> DataFrame:
 # oracle; at 100 TB this is one extra map-side expression on the
 # cluster output.
 # ---------------------------------------------------------------------------
-def _split1_oracle() -> str:
-    ctes, final = _minhash_ctes()
-    fold = _H60.format(expr="CAST(cluster_id AS VARCHAR)")
-    return f"""
-WITH RECURSIVE {ctes},
-mh AS ({final}),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM mh
-  UNION
-  SELECT doc_b AS a, doc_a AS b FROM mh
-),
-reach AS (
-  SELECT doc_id AS p, doc_id AS q FROM documents
-  UNION
-  SELECT r.p, e.b FROM reach r JOIN edges e ON r.q = e.a
-),
-cl AS (SELECT p AS doc_id, MIN(q) AS cluster_id FROM reach GROUP BY p),
-f AS (SELECT doc_id, cluster_id, CAST({fold} % 10 AS INT) AS fold FROM cl)
+_SPLIT1_ORACLE = f"""
+WITH RECURSIVE {_CLUSTER_CTES},
+f AS (
+  SELECT doc_id, cluster_id,
+         CAST({_H60.format(expr="CAST(cluster_id AS VARCHAR)")} % 10 AS INT) AS fold
+  FROM clusters
+)
 SELECT doc_id, cluster_id, fold,
   CASE WHEN fold <= 7 THEN 'train' WHEN fold = 8 THEN 'valid' ELSE 'test' END AS split
 FROM f
 """
 
 
-@register("split1_leakage_safe", _split1_oracle())
+@register("split1_leakage_safe", _SPLIT1_ORACLE)
 def split1_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_stack_spark.operators.text import portable_hash60
 

@@ -732,7 +732,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sf0.1; the mean-relative form keeps ~19% at both).
 # ---------------------------------------------------------------------------
 _Q11_ORACLE = """
-WITH v AS (
+WITH v AS MATERIALIZED (
   SELECT l_partkey,
          CAST(SUM(CAST(l_extendedprice AS DECIMAL(14,2))
                   * CAST(1 - l_discount AS DECIMAL(4,2))) AS DECIMAL(20,4)) AS val
@@ -786,7 +786,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
 # in DECIMAL so the equality against MAX is exact cross-engine).
 # ---------------------------------------------------------------------------
 _Q15_ORACLE = """
-WITH rev AS (
+WITH rev AS MATERIALIZED (
   SELECT l_suppkey,
          SUM(CAST(l_extendedprice AS DECIMAL(14,2))
              * CAST(1 - l_discount AS DECIMAL(4,2))) AS tr
@@ -830,7 +830,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # threshold; integer-decimal comparison, exact both engines).
 # ---------------------------------------------------------------------------
 _Q20_ORACLE = """
-WITH sp AS (
+WITH sp AS MATERIALIZED (
   SELECT l_partkey, l_suppkey, SUM(CAST(l_quantity AS DECIMAL(12,2))) AS q
   FROM lineitem
   JOIN part ON p_partkey = l_partkey
@@ -886,7 +886,7 @@ def q20_dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # join-based equivalent of Q21's EXISTS / NOT EXISTS pair.
 # ---------------------------------------------------------------------------
 _Q21_ORACLE = """
-WITH ls AS (
+WITH ls AS MATERIALIZED (
   SELECT o_orderkey, l_suppkey,
          MAX(CASE WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY THEN 1 ELSE 0 END) AS late
   FROM lineitem

@@ -23,7 +23,7 @@ from etl_stack_spark.session import load_table
 # Result: closed-out old versions, new current versions, untouched carry.
 # ---------------------------------------------------------------------------
 _SCD1_ORACLE = """
-WITH dim AS (
+WITH dim AS MATERIALIZED (
   SELECT c_custkey AS cust_id, c_mktsegment AS segment, c_acctbal AS acctbal,
          DATE '2024-01-01' AS valid_from, CAST(NULL AS DATE) AS valid_to,
          TRUE AS is_current
@@ -37,7 +37,7 @@ upd AS (
   UNION ALL
   SELECT c_custkey + 10000000, 'NEWKEY', 0.0 FROM customer WHERE c_custkey % 97 = 0
 ),
-chg AS (
+chg AS MATERIALIZED (
   SELECT u.* FROM upd u
   LEFT JOIN dim d ON u.cust_id = d.cust_id AND d.is_current
   WHERE d.cust_id IS NULL
@@ -228,7 +228,7 @@ def dq1_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # limit on it is the t3 shape, negligible at any corpus size.
 # ---------------------------------------------------------------------------
 _SKW1_ORACLE = """
-WITH c AS (
+WITH c AS MATERIALIZED (
   SELECT l_suppkey AS key, CAST(COUNT(*) AS BIGINT) AS cnt
   FROM lineitem GROUP BY 1
 ),

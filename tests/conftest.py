@@ -32,11 +32,7 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for sf in {SF_SMOKE, SF_ORACLE}:
-        schema = "sf" + os.path.basename(sf).replace("sf", "").replace(".", "_")
-        con.execute(f"CREATE SCHEMA IF NOT EXISTS {schema}")
-    yield con
+    yield duckdb.connect()
 
 
 def duck_with_views(con: duckdb.DuckDBPyConnection, sf_dir: str) -> duckdb.DuckDBPyConnection:

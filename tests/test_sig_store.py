@@ -136,25 +136,25 @@ def test_semantic_pairs_restrict_exactly(spark):
     """semantic_dup_pairs' restriction contract: with an INTRINSIC
     cluster column, sem-dedup over a subset equals sem-dedup with the
     superset pair store restricted — and the store-less and store-backed
-    survivor sets agree on the full corpus too."""
-    from etl_stack_spark.operators.dedup import semantic_dedup, semantic_dup_pairs
+    survivor sets agree on the full corpus too. The store is the session
+    store itself (sem_pair_base), read and left in place: a frame with
+    its plan, unpersisted here, would uncache it for sd1 and llm3."""
+    from pyspark import StorageLevel
+
+    from etl_stack_spark.operators.dedup import semantic_dedup
+    from etl_stack_spark.queries.text_dedup import sem_pair_base
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    store = semantic_dup_pairs(emb, threshold=0.3).persist()
-    try:
-        full_direct = _rows(semantic_dedup(emb, threshold=0.3), "vec_id")
-        full_stored = _rows(
-            semantic_dedup(emb, threshold=0.3, pairs=store), "vec_id"
-        )
-        assert full_stored == full_direct and len(full_direct) > 0
-        half = emb.filter(F.col("vec_id") % 2 == 0)
-        sub_direct = _rows(semantic_dedup(half, threshold=0.3), "vec_id")
-        sub_stored = _rows(
-            semantic_dedup(half, threshold=0.3, pairs=store), "vec_id"
-        )
-        assert sub_stored == sub_direct
-    finally:
-        store.unpersist()
+    store = sem_pair_base(spark, SF_SMOKE)
+    full_direct = _rows(semantic_dedup(emb, threshold=0.3), "vec_id")
+    full_stored = _rows(semantic_dedup(emb, threshold=0.3, pairs=store), "vec_id")
+    assert full_stored == full_direct and len(full_direct) > 0
+    half = emb.filter(F.col("vec_id") % 2 == 0)
+    sub_direct = _rows(semantic_dedup(half, threshold=0.3), "vec_id")
+    sub_stored = _rows(semantic_dedup(half, threshold=0.3, pairs=store), "vec_id")
+    assert sub_stored == sub_direct
+    # storageLevel is Spark's CacheManager lookup for the store's plan
+    assert store.storageLevel != StorageLevel.NONE
 
 
 def test_wash_identical_with_pair_store(spark, docs, pair_store):
