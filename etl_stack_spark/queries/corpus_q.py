@@ -11,12 +11,19 @@ from pyspark.sql import functions as F
 
 from etl_stack_spark.plans.corpus_clean import clean_corpus, clean_corpus_v2
 from etl_stack_spark.queries import register, stores
+from etl_stack_spark.queries.curation_q import (
+    _DC1_CTES,
+    _DC1_OVERLAP,
+    _REP1_CTES,
+    _REP1_KEEP,
+    _REP2_CTES,
+    _REP2_DUP_FRAC,
+)
 from etl_stack_spark.queries.text_dedup import (
     _FP_EXPR,
     _H60,
     _QUALITY_EXPR,
     _SEM_LOSERS,
-    _SHINGLES,
     _TOKS,
     _lang_pieces,
     _minhash_ctes,
@@ -104,42 +111,14 @@ kept AS (
 )"""
 
 
-# llm2's curation gates over the non-src0 slice: ``rep_ok`` (repetition,
-# the rep1 thresholds 0.05/0.10) and ``dec_ok`` (decontamination against
-# the src0 benchmark slice, the dc1 threshold 0.08)
-_CURATION_GATES = f"""rt AS MATERIALIZED (SELECT doc_id, {_TOKS} AS toks FROM documents {_NON_SRC0}),
-rg AS (
-  SELECT doc_id,
-    unnest(list_transform(range(1, greatest(len(toks) - 1, 0) + 1),
-                          i -> toks[i] || ' ' || toks[i + 1])) AS gram
-  FROM rt
-),
-rc AS (SELECT doc_id, gram, CAST(COUNT(*) AS BIGINT) AS cnt FROM rg GROUP BY doc_id, gram),
-rp AS (
-  SELECT doc_id, SUM(cnt) AS n_grams, MAX(cnt) AS top_cnt,
-    SUM(CASE WHEN cnt >= 2 THEN cnt ELSE 0 END) AS dup_cnt
-  FROM rc GROUP BY doc_id
-),
-rep_ok AS (
-  SELECT rt.doc_id FROM rt LEFT JOIN rp USING (doc_id)
-  WHERE coalesce(top_cnt, 0) / greatest(coalesce(n_grams, 0), 1) <= 0.05
-    AND coalesce(dup_cnt, 0) / greatest(coalesce(n_grams, 0), 1) <= 0.10
-),
-bench AS (
-  SELECT DISTINCT unnest({_SHINGLES}) AS shingle FROM documents
-  WHERE source = 'src0' AND doc_id < 500
-),
-dcand AS MATERIALIZED (SELECT doc_id, {_SHINGLES} AS sh FROM documents {_NON_SRC0}),
-dsz AS (SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_shingles FROM dcand),
-dcs AS (SELECT doc_id, unnest(sh) AS shingle FROM dcand),
-dhits AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_hits
-  FROM dcs JOIN bench USING (shingle) GROUP BY doc_id
-),
-dec_ok AS (
-  SELECT s.doc_id FROM dsz s LEFT JOIN dhits USING (doc_id)
-  WHERE coalesce(n_hits, 0) / greatest(n_shingles, 1) < 0.08
-)"""
+# llm2's curation gates over the non-src0 slice: ``rep_ok`` (rep1's
+# repetition rule) and ``dec_ok`` (dc1's decontamination against the src0
+# benchmark slice, threshold 0.08)
+_CURATION_GATES = f"""t AS MATERIALIZED (SELECT doc_id, {_TOKS} AS toks FROM documents {_NON_SRC0}),
+{_REP1_CTES},
+rep_ok AS (SELECT t.doc_id FROM t LEFT JOIN p USING (doc_id) WHERE {_REP1_KEEP}),
+{_DC1_CTES},
+dec_ok AS (SELECT doc_id FROM sz LEFT JOIN hits USING (doc_id) WHERE {_DC1_OVERLAP} < 0.08)"""
 
 
 def _dedup_ctes(*gates: str) -> str:
@@ -213,24 +192,8 @@ def llm2_corpus_clean_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CORPUS_V3_ORACLE = f"""
 WITH {_kept_ctes(_NON_SRC0)},
 {_CURATION_GATES},
-xo AS (
-  SELECT doc_id,
-    unnest(list_transform(range(1, greatest(len(toks) - 4, 0) + 1),
-                          i -> array_to_string(toks[i:i+4], ' '))) AS gram
-  FROM rt
-),
-xh AS (SELECT doc_id, {_H60.format(expr="gram")} AS gh FROM xo),
-xpd AS MATERIALIZED (SELECT doc_id, gh, CAST(COUNT(*) AS BIGINT) AS c FROM xh GROUP BY doc_id, gh),
-xgd AS (SELECT gh, COUNT(*) AS n_docs FROM xpd GROUP BY gh),
-xdup AS (
-  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS dup_occ
-  FROM xpd JOIN xgd USING (gh) WHERE n_docs >= 2 GROUP BY doc_id
-),
-xw AS (SELECT doc_id, CAST(greatest(len(toks) - 4, 0) AS BIGINT) AS n_windows FROM rt),
-xd_ok AS (
-  SELECT xw.doc_id FROM xw LEFT JOIN xdup USING (doc_id)
-  WHERE coalesce(dup_occ, 0) / greatest(n_windows, 1) <= 0.30
-),
+{_REP2_CTES},
+xd_ok AS (SELECT w.doc_id FROM w LEFT JOIN dup USING (doc_id) WHERE {_REP2_DUP_FRAC} <= 0.30),
 {_dedup_ctes("rep_ok", "dec_ok", "xd_ok")},
 fin AS MATERIALIZED ({_SURVIVORS}),
 v AS MATERIALIZED (

@@ -105,9 +105,10 @@ def pii1_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # REP1 — Gopher-style bigram repetition metrics + keep flag
 # ---------------------------------------------------------------------------
 
-_REP1_ORACLE = f"""
-WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-g AS (
+# The bigram chain over ``t`` (doc_id, toks): ``p`` holds each document's
+# bigram total, top bigram count and repeated-bigram count. llm2 and llm3
+# gate on it too (queries/corpus_q.py).
+_REP1_CTES = """g AS (
   SELECT doc_id,
     unnest(list_transform(range(1, greatest(len(toks) - 1, 0) + 1),
                           i -> toks[i] || ' ' || toks[i + 1])) AS gram
@@ -118,16 +119,21 @@ p AS (
   SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_grams, MAX(cnt) AS top_gram_count,
     CAST(SUM(CASE WHEN cnt >= 2 THEN cnt ELSE 0 END) AS BIGINT) AS dup_gram_count
   FROM c GROUP BY doc_id
-)
+)"""
+
+_REP1_KEEP = """coalesce(top_gram_count, 0) / greatest(coalesce(n_grams, 0), 1) <= 0.05
+   AND coalesce(dup_gram_count, 0) / greatest(coalesce(n_grams, 0), 1) <= 0.10"""
+
+_REP1_ORACLE = f"""
+WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+{_REP1_CTES}
 SELECT d.doc_id,
   coalesce(n_grams, 0) AS n_grams,
   coalesce(top_gram_count, 0) AS top_gram_count,
   coalesce(dup_gram_count, 0) AS dup_gram_count,
   round(coalesce(top_gram_count, 0) / greatest(coalesce(n_grams, 0), 1), 6) AS top_gram_frac,
   round(coalesce(dup_gram_count, 0) / greatest(coalesce(n_grams, 0), 1), 6) AS dup_gram_frac,
-  (coalesce(top_gram_count, 0) / greatest(coalesce(n_grams, 0), 1) <= 0.05
-   AND coalesce(dup_gram_count, 0) / greatest(coalesce(n_grams, 0), 1) <= 0.10)
-  AS keep_repetition
+  ({_REP1_KEEP}) AS keep_repetition
 FROM documents d LEFT JOIN p USING (doc_id)
 """
 
@@ -146,8 +152,10 @@ def rep1_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # "all of src0" at sf0.01, but constant-size as the corpus scales (a real
 # eval benchmark does not grow with the corpus; an SF-proportional slice
 # saturates the synthetic shingle space and flags everything at sf0.1).
-_DC1_ORACLE = f"""
-WITH bench AS (
+# The shingle-overlap chain: ``bench`` is the benchmark's shingle set;
+# for each candidate (source <> 'src0'), ``sz`` holds its shingle count
+# and ``hits`` its shingles found in ``bench``. llm2 and llm3 gate on it.
+_DC1_CTES = f"""bench AS (
   SELECT DISTINCT unnest({_SHINGLES}) AS shingle FROM documents
   WHERE source = 'src0' AND doc_id < 500
 ),
@@ -157,10 +165,15 @@ cs AS (SELECT doc_id, unnest(sh) AS shingle FROM cand),
 hits AS (
   SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_hits
   FROM cs JOIN bench USING (shingle) GROUP BY doc_id
-)
+)"""
+
+_DC1_OVERLAP = "coalesce(n_hits, 0) / greatest(n_shingles, 1)"
+
+_DC1_ORACLE = f"""
+WITH {_DC1_CTES}
 SELECT s.doc_id, n_shingles, coalesce(n_hits, 0) AS n_hits,
-  round(coalesce(n_hits, 0) / greatest(n_shingles, 1), 6) AS overlap_frac,
-  (coalesce(n_hits, 0) / greatest(n_shingles, 1) >= 0.08) AS contaminated
+  round({_DC1_OVERLAP}, 6) AS overlap_frac,
+  ({_DC1_OVERLAP} >= 0.08) AS contaminated
 FROM sz s LEFT JOIN hits USING (doc_id)
 """
 
@@ -301,25 +314,32 @@ def lm1_trigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # only the injected near-dups), so both keep values occur.
 # ---------------------------------------------------------------------------
 
-_REP2_ORACLE = f"""
-WITH t AS MATERIALIZED (SELECT doc_id, {_TOKS} AS toks FROM documents),
-occ AS (
+# The 5-gram chain over ``t`` (doc_id, toks): ``w`` holds each document's
+# window count and ``dup`` its windows that some other document also has.
+# llm3 gates on it.
+_REP2_CTES = f"""occ AS (
   SELECT doc_id,
     unnest(list_transform(range(1, greatest(len(toks) - 4, 0) + 1),
                           i -> array_to_string(toks[i:i+4], ' '))) AS gram
   FROM t
 ),
-h AS (SELECT doc_id, ('0x' || substr(sha256(gram), 1, 15))::BIGINT AS gh FROM occ),
-pd AS MATERIALIZED (SELECT doc_id, gh, CAST(COUNT(*) AS BIGINT) AS c FROM h GROUP BY doc_id, gh),
+oh AS (SELECT doc_id, {_H60.format(expr="gram")} AS gh FROM occ),
+pd AS MATERIALIZED (SELECT doc_id, gh, CAST(COUNT(*) AS BIGINT) AS c FROM oh GROUP BY doc_id, gh),
 gd AS (SELECT gh, COUNT(*) AS n_docs FROM pd GROUP BY gh),
 dup AS (
   SELECT doc_id, CAST(SUM(c) AS BIGINT) AS dup_occ
   FROM pd JOIN gd USING (gh) WHERE n_docs >= 2 GROUP BY doc_id
 ),
-w AS (SELECT doc_id, CAST(greatest(len(toks) - 4, 0) AS BIGINT) AS n_windows FROM t)
+w AS (SELECT doc_id, CAST(greatest(len(toks) - 4, 0) AS BIGINT) AS n_windows FROM t)"""
+
+_REP2_DUP_FRAC = "coalesce(dup_occ, 0) / greatest(n_windows, 1)"
+
+_REP2_ORACLE = f"""
+WITH t AS MATERIALIZED (SELECT doc_id, {_TOKS} AS toks FROM documents),
+{_REP2_CTES}
 SELECT w.doc_id, n_windows, coalesce(dup_occ, 0) AS dup_occ,
-  round(coalesce(dup_occ, 0) / greatest(n_windows, 1), 6) AS cross_dup_frac,
-  (coalesce(dup_occ, 0) / greatest(n_windows, 1) <= 0.30) AS keep_cross_doc
+  round({_REP2_DUP_FRAC}, 6) AS cross_dup_frac,
+  ({_REP2_DUP_FRAC} <= 0.30) AS keep_cross_doc
 FROM w LEFT JOIN dup USING (doc_id)
 """
 

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from etl_stack_spark.operators.text import portable_hash60
 from etl_stack_spark.queries import register
+from etl_stack_spark.queries.text_dedup import _TOKS
 from etl_stack_spark.session import load_table
 
 # ---------------------------------------------------------------------------
@@ -105,10 +106,9 @@ _TOP_SOURCES = ("src0", "src1", "src2", "src3", "src4")
 _SP3_SHARE_SQL = (
     "CASE WHEN source IN ('" + "','".join(_TOP_SOURCES) + "') THEN 1e-1 ELSE 0.5/15 END"
 )
-_SP3_TOKS = r"list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')"
 
 _SP3_ORACLE = f"""
-WITH tok AS MATERIALIZED (SELECT source, doc_id, CAST(len({_SP3_TOKS}) AS BIGINT) AS n_tok FROM documents),
+WITH tok AS MATERIALIZED (SELECT source, doc_id, CAST(len({_TOKS}) AS BIGINT) AS n_tok FROM documents),
 dt AS (SELECT source, CAST(SUM(n_tok) AS BIGINT) AS d_tokens FROM tok GROUP BY source),
 sh AS MATERIALIZED (SELECT source, d_tokens, {_SP3_SHARE_SQL} AS share FROM dt),
 sc AS (SELECT MIN(d_tokens / share) AS scale FROM sh),
@@ -251,7 +251,7 @@ def ss3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cross-engine Σ-of-doubles normalization needed; sqrt is IEEE-exact.
 # ---------------------------------------------------------------------------
 _MIX2_ORACLE = f"""
-WITH tok AS MATERIALIZED (SELECT source, doc_id, CAST(len({_SP3_TOKS}) AS BIGINT) AS n_tok FROM documents),
+WITH tok AS MATERIALIZED (SELECT source, doc_id, CAST(len({_TOKS}) AS BIGINT) AS n_tok FROM documents),
 dt AS (SELECT source, CAST(SUM(n_tok) AS BIGINT) AS d_tokens FROM tok GROUP BY source),
 sh AS MATERIALIZED (SELECT source, d_tokens, sqrt(CAST(d_tokens AS DOUBLE)) AS share FROM dt),
 sc AS (SELECT MIN(d_tokens / share) AS scale FROM sh),
@@ -304,7 +304,7 @@ def mix2_temperature_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SEL2_ORACLE = f"""
 WITH tok AS MATERIALIZED (
-  SELECT source, doc_id, n_chars, CAST(len({_SP3_TOKS}) AS BIGINT) AS n_tok
+  SELECT source, doc_id, n_chars, CAST(len({_TOKS}) AS BIGINT) AS n_tok
   FROM documents
 ),
 q AS (SELECT source, doc_id, n_tok,
