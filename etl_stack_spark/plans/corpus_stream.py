@@ -24,6 +24,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_stack_spark.operators.merge import ParquetMergeTable
+from etl_stack_spark.plans.corpus_clean import (
+    KEEP_LANGS,
+    MIN_QUALITY,
+    quality_lang_filter,
+    score_documents,
+)
 
 DOC_FEED_SCHEMA = "doc_id bigint, text string, source string, ingested_at timestamp"
 
@@ -32,8 +38,8 @@ _RESULT_COLS = ["fp", "doc_id", "source", "quality", "pred_lang", "text_redacted
 
 def corpus_clean_batch_fn(
     results: ParquetMergeTable,
-    min_quality: float = 0.4,
-    keep_langs: tuple[str, ...] = ("en", "es", "de", "fr"),
+    min_quality: float = MIN_QUALITY,
+    keep_langs: tuple[str, ...] = KEEP_LANGS,
     lsh_state: ParquetMergeTable | None = None,
     near_dup_threshold: float = 0.5,
     metrics: dict | None = None,
@@ -59,7 +65,6 @@ def corpus_clean_batch_fn(
     queries per cycle; here every number is a byproduct."""
     from etl_stack_spark.operators.curation import redact_pii
     from etl_stack_spark.operators.rank import top_1_per_group
-    from etl_stack_spark.operators.text import fingerprint, lang_id, quality_score
 
     def batch_fn(batch_df: DataFrame, _batch_id: int) -> None:
         # NO isEmpty() guard: it is a full extra execution of the source
@@ -73,16 +78,17 @@ def corpus_clean_batch_fn(
         spread = batch_df.sparkSession.sparkContext.defaultParallelism
         if batch_df.rdd.getNumPartitions() < spread:
             batch_df = batch_df.repartition(spread)
-        scored = batch_df.select(
-            # fingerprint the ORIGINAL text: redaction must not change
-            # a document's dedup identity
-            fingerprint(F.col("text")).alias("fp"),
+        # the batch wash's own scoring projection; its fingerprint is of
+        # the ORIGINAL text, so redaction cannot change a document's
+        # dedup identity, and the original rides along for near-dup
+        # shingling only
+        scored = score_documents(batch_df, extra_cols=("source",)).select(
+            "fp",
             "doc_id",
             "source",
-            quality_score(F.col("text")).alias("quality"),
-            lang_id(F.col("text")).alias("pred_lang"),
+            "quality",
+            "pred_lang",
             redact_pii(F.col("text")).alias("text_redacted"),
-            # original text rides along for near-dup shingling only
             F.col("text").alias("_text_orig"),
         )
         obs = None
@@ -117,10 +123,7 @@ def corpus_clean_batch_fn(
                     F.lit(0),
                 ).alias("gated_lang"),
             )
-        kept = scored.filter(
-            (F.col("quality") >= min_quality)
-            & F.col("pred_lang").isin(list(keep_langs))
-        )
+        kept = quality_lang_filter(scored, min_quality, keep_langs)
         # in-batch first-seen: min doc_id per fingerprint — deterministic
         # even when a replayed backlog collapses into one micro-batch
         first = top_1_per_group(kept, ["fp"], [F.col("doc_id").asc()])

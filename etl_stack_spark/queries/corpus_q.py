@@ -1,15 +1,17 @@
-"""LLM corpus-cleaning pipelines as oracle-checked queries: llm1 is the
-quality → language → exact-dedup → near-dup chain; llm2 adds the
-curation family (repetition filter + benchmark decontamination) between
-the scalar gates and the dedup shuffles. Both expressed in SQL on the
-DuckDB side (CTE per stage, same constants)."""
+"""LLM corpus-cleaning pipelines as oracle-checked queries, each one call
+of ``plans/corpus_clean.py::clean_corpus``: llm1 is the quality →
+language → exact-dedup → near-dup chain; llm2 adds the curation gates
+(repetition filter + benchmark decontamination) between the scalar
+gates and the dedup shuffles; llm3 adds the cross-document n-gram gate
+and a final SemDeDup stage. Each is expressed in SQL on the DuckDB side
+too (CTE per stage, same constants)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_stack_spark.plans.corpus_clean import clean_corpus, clean_corpus_v2
+from etl_stack_spark.plans.corpus_clean import clean_corpus
 from etl_stack_spark.queries import register, stores
 from etl_stack_spark.queries.curation_q import (
     _DC1_CTES,
@@ -27,6 +29,8 @@ from etl_stack_spark.queries.text_dedup import (
     _TOKS,
     _lang_pieces,
     _minhash_ctes,
+    pair_base,
+    sem_pair_base,
 )
 from etl_stack_spark.session import load_table
 
@@ -49,6 +53,8 @@ def corpus_base(spark: SparkSession, sf_dir: str) -> dict:
     from pyspark import StorageLevel
 
     from etl_stack_spark.plans.corpus_clean import (
+        KEEP_LANGS,
+        MIN_QUALITY,
         gate_ids_v2,
         quality_lang_filter,
         score_documents,
@@ -61,7 +67,7 @@ def corpus_base(spark: SparkSession, sf_dir: str) -> dict:
         StorageLevel.MEMORY_AND_DISK
     )
     kept_ns = quality_lang_filter(
-        scored.filter(F.col("source") != "src0"), 0.4, ("en", "es", "de", "fr")
+        scored.filter(F.col("source") != "src0"), MIN_QUALITY, KEEP_LANGS
     )
     bench = docs.filter((F.col("source") == "src0") & (F.col("doc_id") < 500))
     gate_ids = gate_ids_v2(kept_ns, bench).persist(StorageLevel.MEMORY_AND_DISK)
@@ -148,13 +154,8 @@ WITH {_kept_ctes()},
 
 @register("llm1_corpus_clean", _CORPUS_ORACLE)
 def llm1_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_stack_spark.queries.text_dedup import pair_base
-
-    docs = load_table(spark, sf_dir, "documents")
     return clean_corpus(
-        docs,
-        scored=corpus_base(spark, sf_dir)["scored"],
-        pairs=pair_base(spark, sf_dir),
+        corpus_base(spark, sf_dir)["scored"], pairs=pair_base(spark, sf_dir)
     )
 
 
@@ -170,17 +171,10 @@ WITH {_kept_ctes(_NON_SRC0)},
 
 @register("llm2_corpus_clean_v2", _CORPUS_V2_ORACLE)
 def llm2_corpus_clean_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
     base = corpus_base(spark, sf_dir)
-    # fixed-size benchmark slice (= all of src0 at sf0.01) — see _DC1's
-    # rationale in curation_q.py: eval benchmarks don't grow with the corpus
-    from etl_stack_spark.queries.text_dedup import pair_base
-
-    return clean_corpus_v2(
-        docs.filter(F.col("source") != "src0"),
-        docs.filter((F.col("source") == "src0") & (F.col("doc_id") < 500)),
-        scored=base["scored"].filter(F.col("source") != "src0"),
-        gate_ids=base["gate_ids"],
+    return clean_corpus(
+        base["scored"].filter(F.col("source") != "src0"),
+        [base["gate_ids"]],
         pairs=pair_base(spark, sf_dir),
     )
 
@@ -209,21 +203,11 @@ WHERE s.vec_id IS NULL
 
 @register("llm3_corpus_clean_v3", _CORPUS_V3_ORACLE)
 def llm3_corpus_clean_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_stack_spark.plans.corpus_clean import clean_corpus_v3
-
-    docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
     base = corpus_base(spark, sf_dir)
-    from etl_stack_spark.queries.text_dedup import pair_base, sem_pair_base
-
-    return clean_corpus_v3(
-        docs.filter(F.col("source") != "src0"),
-        docs.filter((F.col("source") == "src0") & (F.col("doc_id") < 500)),
-        emb,
-        scored=base["scored"].filter(F.col("source") != "src0"),
-        gate_ids=base["gate_ids"],
+    return clean_corpus(
+        base["scored"].filter(F.col("source") != "src0"),
+        [base["gate_ids"], xdoc_base(spark, sf_dir)],
         pairs=pair_base(spark, sf_dir),
-        xdoc_ids=xdoc_base(spark, sf_dir),
         sem_pairs=sem_pair_base(spark, sf_dir),
     )
 

@@ -48,6 +48,20 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def default_driver_mem_mib() -> int:
+    """The driver heap ``get_spark`` asks for unless
+    ``SPARK_GRAFT_DRIVER_MEM`` sets one: min(24 GiB, half of physical
+    RAM), in MiB. 24 GiB on a 128 GiB box: the shared lead-prep match
+    stream persists ~2 GB at sf0.1 and must not fight execution memory
+    for it (an 8g heap evicted it under concurrent stages; a2a3 samples
+    spiked 1.8s → 13s when the cache fell to disk mid-bench). Half of a
+    small box leaves the other half to the Python workers and to DuckDB
+    in the same process: a 24g heap on a 15 GiB box grew until the
+    kernel's OOM killer took the JVM."""
+    half = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2
+    return min(24 << 30, half) >> 20
+
+
 def get_spark(app_name: str = "etl-stack-spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
@@ -90,11 +104,10 @@ def get_spark(app_name: str = "etl-stack-spark", cpus: int | None = None) -> Spa
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # 24g on a 128 GiB box: the shared lead-prep match stream persists
-        # ~2 GB at sf0.1 and must not fight execution memory for it — an
-        # 8g heap evicted it under concurrent stages (a2a3 samples spiked
-        # 1.8s → 13s when the cache fell to disk mid-bench)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{default_driver_mem_mib()}m"),
+        )
         # verification flows collect full results (33M rows for the radius
         # join at sf0.1) — default 1g cap aborts the collect, not the query
         .config("spark.driver.maxResultSize", "4g")

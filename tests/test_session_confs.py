@@ -83,3 +83,23 @@ def test_ingest_plan_composition_round_trip_budget(spark, monkeypatch):
         with_quality_observation(clean_and_hash(staged))
     assert not is_debugging_enabled()
     assert 0 < calls <= 800, calls
+
+
+def test_default_driver_heap_is_half_the_box_up_to_24g(spark, monkeypatch):
+    """``get_spark`` asks for min(24 GiB, half of physical RAM) unless
+    ``SPARK_GRAFT_DRIVER_MEM`` sets the heap."""
+    import os
+
+    from etl_stack_spark import session
+
+    want = os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{session.default_driver_mem_mib()}m")
+    assert spark.sparkContext.getConf().get("spark.driver.memory") == want
+
+    page = 4096
+    for ram_gib, heap_mib in ((15, 7680), (16, 8192), (48, 24576), (128, 24576)):
+        monkeypatch.setattr(
+            session.os,
+            "sysconf",
+            lambda name, ram=ram_gib: page if name == "SC_PAGE_SIZE" else (ram << 30) // page,
+        )
+        assert session.default_driver_mem_mib() == heap_mib

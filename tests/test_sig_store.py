@@ -61,12 +61,19 @@ def test_cluster_dedup_identical_with_store(docs, store):
     assert stored == direct
 
 
-def test_wash_identical_with_store(spark, docs, store):
-    from etl_stack_spark.plans.corpus_clean import clean_corpus
+def test_wash_identical_with_store(docs, pair_store):
+    """The wash restricts a SUPERSET pair store to its exact-dedup
+    survivors: on the full corpus and on the half slice its output
+    equals the wash that computes its own pairs."""
+    from etl_stack_spark.plans.corpus_clean import clean_corpus, score_documents
 
-    direct = _rows(clean_corpus(docs), "doc_id")
-    stored = _rows(clean_corpus(docs, sigs=store), "doc_id")
-    assert stored == direct and len(direct) > 0
+    scored = score_documents(docs)
+    ids = [r[0] for r in docs.select("doc_id").orderBy("doc_id").collect()]
+    half = scored.filter(F.col("doc_id") <= ids[len(ids) // 2])
+    for corpus in (scored, half):
+        direct = _rows(clean_corpus(corpus), "doc_id")
+        stored = _rows(clean_corpus(corpus, pairs=pair_store), "doc_id")
+        assert stored == direct and len(direct) > 0
 
 
 @pytest.fixture(scope="module")
@@ -158,12 +165,32 @@ def test_semantic_pairs_restrict_exactly(spark):
 
 
 def test_wash_identical_with_pair_store(spark, docs, pair_store):
-    """llm1's near-dup stage restricts the store to its survivor set —
-    the full wash output must be byte-identical to the self-banding
-    form (the superset here includes docs the gates drop, the exact
-    shape the session store serves)."""
-    from etl_stack_spark.plans.corpus_clean import clean_corpus
+    """The wash's gate and SemDeDup stages over the stores: a gate id set
+    is a per-doc filter, so gating equals washing the gated slice; and
+    the semantic stage, which restricts the sem_pair_base store by the
+    survivors' ids alone, equals SemDeDup over the survivors' embeddings
+    (docs without an embedding row pass)."""
+    from etl_stack_spark.operators.dedup import semantic_dedup
+    from etl_stack_spark.plans.corpus_clean import clean_corpus, score_documents
+    from etl_stack_spark.queries.text_dedup import sem_pair_base
 
-    direct = _rows(clean_corpus(docs), "doc_id")
-    stored = _rows(clean_corpus(docs, pairs=pair_store), "doc_id")
-    assert stored == direct and len(direct) > 0
+    scored = score_documents(docs)
+    gate = docs.filter(F.col("doc_id") % 3 != 0).select("doc_id")
+    gated = _rows(clean_corpus(scored, [gate], pairs=pair_store), "doc_id")
+    sliced = _rows(clean_corpus(scored.join(gate, "doc_id", "left_semi")), "doc_id")
+    assert gated == sliced and len(gated) > 0
+
+    wash = clean_corpus(scored, pairs=pair_store)
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    surv_emb = emb.join(wash.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi")
+    sem_keep = semantic_dedup(surv_emb, threshold=0.3).select("vec_id")
+    sem_losers = surv_emb.select("vec_id").join(sem_keep, "vec_id", "left_anti")
+    want = _rows(
+        wash.join(sem_losers.withColumnRenamed("vec_id", "doc_id"), "doc_id", "left_anti"),
+        "doc_id",
+    )
+    got = _rows(
+        clean_corpus(scored, pairs=pair_store, sem_pairs=sem_pair_base(spark, SF_SMOKE)),
+        "doc_id",
+    )
+    assert got == want and sem_losers.count() > 0

@@ -1,14 +1,16 @@
-"""Spark jobs and stages per vector-similarity query, pinned from a
-committed JSON.
+"""Spark jobs and stages per vector-similarity query and per corpus
+wash (llm1-llm3, whose near-dup and SemDeDup stages read the same pair
+stores), pinned from a committed JSON.
 
 At a fixed scale factor a query's job and stage counts are exact, so a
-rewrite of the similarity operators that adds a pass shows here as a
-count, not as noise in a timing. The session stores are dropped first,
-so each query's first run through the ``noop`` sink builds and caches
-the stores it reads; its second run, under a job group, must match
-``golden/similarity_job_counts.json``. (Spark keeps one cache entry per
-plan, so another test that persists and unpersists a frame with a
-store's plan leaves the store uncached and its readers recomputing it.)
+rewrite of the similarity operators or of the wash that adds a pass
+shows here as a count, not as noise in a timing. The session stores
+are dropped first, so each query's first run through the ``noop`` sink
+builds and caches the stores it reads; its second run, under a job
+group, must match ``golden/similarity_job_counts.json``. (Spark keeps
+one cache entry per plan, so another test that persists and unpersists
+a frame with a store's plan leaves the store uncached and its readers
+recomputing it.)
 
 Regenerate the JSON after a deliberate plan change with:
 
@@ -42,6 +44,9 @@ QUERIES = (
     "pq1_adc_topk",
     "ivfpq1_topk",
     "sd1_semantic_dedup",
+    "llm1_corpus_clean",
+    "llm2_corpus_clean_v2",
+    "llm3_corpus_clean_v3",
 )
 
 

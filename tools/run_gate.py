@@ -26,6 +26,10 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from etl_stack_spark.session import default_driver_mem_mib  # noqa: E402
+
 GROUPS_FILE = os.path.join(REPO, "tools", "gate_groups.json")
 LOG_PREFIX = "/tmp/tf_g"
 
@@ -45,27 +49,39 @@ def main() -> int:
     groups = load_groups()
     explicit = [p for g in groups for p in g]
     extra = ["--durations=0"] if durations else []
-    procs = []
-    for i, g in enumerate(groups):
-        log = f"{LOG_PREFIX}{i + 1}.log"
-        cmd = [sys.executable, "-m", "pytest", "-q", *extra, *g]
-        procs.append((i, log, time.time(), subprocess.Popen(
-            cmd, stdout=open(log, "w"), stderr=subprocess.STDOUT, cwd=REPO
-        )))
+    cmds = [[sys.executable, "-m", "pytest", "-q", *extra, *g] for g in groups]
     # catch-all: everything NOT explicitly grouped
-    log = f"{LOG_PREFIX}{len(groups) + 1}.log"
-    cmd = [sys.executable, "-m", "pytest", "-q", *extra]
-    cmd += [f"--ignore={p}" for p in explicit]
-    cmd.append("tests/")
-    procs.append((len(groups), log, time.time(), subprocess.Popen(
-        cmd, stdout=open(log, "w"), stderr=subprocess.STDOUT, cwd=REPO
-    )))
+    cmds.append(
+        [sys.executable, "-m", "pytest", "-q", *extra]
+        + [f"--ignore={p}" for p in explicit]
+        + ["tests/"]
+    )
+    # every group's JVM gets its share of get_spark's default heap, so
+    # the groups together ask for no more than one session would
+    env = dict(os.environ)
+    env.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{default_driver_mem_mib() // len(cmds)}m")
+    procs = []
+    for i, cmd in enumerate(cmds):
+        log = f"{LOG_PREFIX}{i + 1}.log"
+        procs.append((i, log, time.time(), subprocess.Popen(
+            cmd, stdout=open(log, "w"), stderr=subprocess.STDOUT, cwd=REPO, env=env
+        )))
+
+    # stamp each group's wall when ITS process exits, not when the loop
+    # below reaches it: waiting in group order would give a group that
+    # ends early the wall of a slower one before it
+    ended: dict[int, float] = {}
+    while len(ended) < len(procs):
+        for i, _log, _t0, p in procs:
+            if i not in ended and p.poll() is not None:
+                ended[i] = time.time()
+        time.sleep(0.5)
 
     rc = 0
     walls: dict[str, float] = {}
     for i, log, t0, p in procs:
-        code = p.wait()
-        secs = round(time.time() - t0, 1)
+        code = p.returncode
+        secs = round(ended[i] - t0, 1)
         walls[f"group{i + 1}"] = secs
         with open(log) as f:
             tail = [ln for ln in f.read().splitlines() if ln.strip()][-1:]
